@@ -13,13 +13,15 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
-from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-if TYPE_CHECKING:  # pragma: no cover
-    from teleco_etl_pipeline_spark.formats import TableFormat
+from teleco_etl_pipeline_spark.operators.upsert import (
+    heal_interrupted_swap,
+    merge_upsert,
+    safe_overwrite,
+)
 
 # ---------------------------------------------------------------------------
 # Business columns (variant-A ingest shape, FIXTURES.md §1; bronze DDL
@@ -118,38 +120,39 @@ LAYERS = ("staging", "bronze", "silver", "gold", "meta", "quarantine")
 class Warehouse:
     """Path layout + table IO for one warehouse root directory.
 
-    All storage goes through a pluggable ``TableFormat`` (formats.py):
-    the default is plain Parquet; setting
-    ``SPARK_GRAFT_TABLE_FORMAT=delta`` (or passing ``fmt=``) switches
-    every layer table to an ACID format with native MERGE/DELETE —
-    pipeline code is unchanged either way.
+    Every layer table is a plain Parquet directory, read and written
+    only through these methods. There is no transaction log, so
+    in-place semantics are emulated: keyed merges run as relational
+    plans (operators/upsert.py) and every rewrite goes through
+    ``safe_overwrite``'s temp-and-swap. Reads and existence checks
+    first heal a swap that a crash interrupted, so a table that
+    survives only as its ``.old`` backup is never mistaken for a
+    missing one. Correct for a single writer; no isolation against
+    concurrent writers.
     """
 
     spark: SparkSession
     root: str
-    fmt: "TableFormat | None" = None
-
-    def __post_init__(self) -> None:
-        if self.fmt is None:
-            from teleco_etl_pipeline_spark.formats import get_format
-
-            self.fmt = get_format()
 
     def path(self, layer: str, table: str) -> str:
         return os.path.join(self.root, layer, table)
 
     def exists(self, layer: str, table: str) -> bool:
-        return os.path.exists(self.path(layer, table))
+        path = self.path(layer, table)
+        heal_interrupted_swap(path)
+        return os.path.exists(path)
 
     def read(self, layer: str, table: str) -> DataFrame:
-        return self.fmt.read(self.spark, self.path(layer, table))
+        path = self.path(layer, table)
+        heal_interrupted_swap(path)
+        return self.spark.read.parquet(path)
 
     def write(self, df: DataFrame, layer: str, table: str, mode: str = "overwrite") -> None:
-        self.fmt.write(df, self.path(layer, table), mode=mode)
+        df.write.mode(mode).parquet(self.path(layer, table))
 
     def overwrite_safe(self, df: DataFrame, layer: str, table: str) -> None:
         """Overwrite a table that ``df`` may lazily read from."""
-        self.fmt.overwrite_atomic(df, self.path(layer, table))
+        safe_overwrite(df, self.path(layer, table))
 
     def upsert_into(
         self,
@@ -159,12 +162,15 @@ class Warehouse:
         keys: list[str],
         update_cols: list[str] | None = None,
     ) -> None:
-        """Keyed MERGE into a layer table (M1 semantics). Plain
-        Parquet emulates it relationally + swap; Delta runs a native
-        transactional MERGE."""
-        self.fmt.upsert(
-            self.spark, self.path(layer, table), source, keys, update_cols
-        )
+        """Keyed MERGE into a layer table (M1 semantics): creates the
+        table from ``source`` when it does not exist yet."""
+        if self.exists(layer, table):
+            merged = merge_upsert(
+                self.read(layer, table), source, keys, update_cols=update_cols
+            )
+            self.overwrite_safe(merged, layer, table)
+        else:
+            self.write(source, layer, table)
 
     def write_zordered(
         self,
@@ -194,7 +200,7 @@ class Warehouse:
         )
 
         clustered = zorder_repartition(df, zcols, n_files, bits)
-        self.fmt.overwrite_atomic(clustered, self.path(layer, table))
+        safe_overwrite(clustered, self.path(layer, table))
 
     # -- bucketed tables: shuffle elimination for repeated key joins --
 

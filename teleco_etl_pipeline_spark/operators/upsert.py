@@ -13,11 +13,12 @@ caller then writes with ``safe_overwrite``:
 - ``delete_then_insert``: anti-join on fix keys ∪ fixes.
 - ``anti_dedup``: drop staging rows already present in the target (M6).
 
+``catalog.Warehouse`` applies them to the layer tables
+(``upsert_into``, ``overwrite_safe``).
+
 Scale notes: the merge join shuffles both sides on the key — at
 100 TB bucket both layer tables by the business key so the merge is
-shuffle-free; when the delta is small relative to the target,
-broadcast it (``broadcast_source=True``) and the merge becomes a
-map-only job. AQE handles skewed keys.
+shuffle-free. AQE handles skewed keys.
 """
 
 from __future__ import annotations
@@ -37,7 +38,6 @@ def merge_upsert(
     keys: Sequence[str],
     update_cols: Sequence[str] | None = None,
     record_type_col: str | None = None,
-    broadcast_source: bool = False,
 ) -> DataFrame:
     """Postgres ``ON CONFLICT DO UPDATE`` as a full-outer merge.
 
@@ -49,7 +49,6 @@ def merge_upsert(
     data_cols = [c for c in target.columns if c not in keys]
     if update_cols is None:
         update_cols = data_cols
-    src = F.broadcast(source) if broadcast_source else source
     # String-qualified refs ("t.c" / "s.c") survive self-joins where
     # both sides share lineage (Spark's ambiguous-self-join check
     # rejects attribute-based refs there).
@@ -58,7 +57,7 @@ def merge_upsert(
     # a NULL-keyed source row — keys[0] IS NOT NULL would misclassify
     # that pair as an insert and drop the target's kept columns.
     t = target.withColumn("__present", F.lit(1)).alias("__t")
-    s = src.withColumn("__present", F.lit(1)).alias("__s")
+    s = source.withColumn("__present", F.lit(1)).alias("__s")
     tc = lambda c: F.col(f"__t.{c}")  # noqa: E731
     sc = lambda c: F.col(f"__s.{c}")  # noqa: E731
     cond = None

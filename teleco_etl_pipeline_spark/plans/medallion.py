@@ -233,50 +233,42 @@ def _idempotent_dim(
     wh: Warehouse,
     table: str,
     key_col: str,
-    new_values: DataFrame,
-    natural_cols: list[str],
-) -> DataFrame:
+    values: DataFrame,
+    match_cols: list[str],
+) -> int:
     """DISTINCT + NOT EXISTS + dense surrogate keys continuing from
-    the current max (A8 + J7 + SERIAL semantics)."""
-    if wh.exists("gold", table):
-        existing = wh.read("gold", table)
+    the current max (A8 + J7 + SERIAL semantics). The anti-join on
+    ``match_cols`` is null-safe (J4), so a NULL-valued row forms its
+    own dim row once; new keys follow ``match_cols`` order. Returns
+    the dim's row count."""
+    fresh = values.distinct()
+    max_key = 0
+    existing = wh.read("gold", table) if wh.exists("gold", table) else None
+    if existing is not None:
         max_key = existing.agg(F.max(key_col)).collect()[0][0] or 0
-        fresh = new_values.join(existing, on=natural_cols, how="left_anti")
-    else:
-        existing = None
-        max_key = 0
-        fresh = new_values
-    keyed = add_surrogate_key(
-        fresh.distinct(), key_col, order_by=natural_cols, start_at=max_key + 1
-    ).select(key_col, *natural_cols)
-    dim = existing.unionByName(keyed) if existing is not None else keyed
+        cond = None
+        for c in match_cols:
+            clause = F.col(f"__n.{c}").eqNullSafe(F.col(f"__e.{c}"))
+            cond = clause if cond is None else (cond & clause)
+        fresh = fresh.alias("__n").join(existing.alias("__e"), cond, "left_anti")
+    dim = add_surrogate_key(
+        fresh, key_col, order_by=match_cols, start_at=max_key + 1
+    ).select(key_col, *values.columns)
+    if existing is not None:
+        dim = existing.unionByName(dim)
     wh.overwrite_safe(dim, "gold", table)
-    return wh.read("gold", table)
+    return wh.read("gold", table).count()
 
 
 def build_dims(wh: Warehouse) -> dict[str, int]:
     s = wh.read("silver", "churn_raw")
-    counts = {}
-
     contract = s.filter(F.col("contract").isNotNull()).select(
         _norm_contract().alias("contract_type")
     )
-    counts["dim_contract"] = _idempotent_dim(
-        wh, "dim_contract", "contract_key", contract, ["contract_type"]
-    ).count()
-
     payment = s.filter(F.col("payment_method").isNotNull()).select("payment_method")
-    counts["dim_payment_method"] = _idempotent_dim(
-        wh, "dim_payment_method", "payment_method_key", payment, ["payment_method"]
-    ).count()
-
     reason = s.select(
         F.coalesce(F.col("churn_reason"), F.lit("n/a")).alias("churn_reason")
     )
-    counts["dim_churn_reason"] = _idempotent_dim(
-        wh, "dim_churn_reason", "churn_reason_key", reason, ["churn_reason"]
-    ).count()
-
     customer = s.select(
         "customer_id",
         "gender",
@@ -288,69 +280,37 @@ def build_dims(wh: Warehouse) -> dict[str, int]:
         "city",
         "state",
     )
-    # NOT EXISTS is on customer_id alone (gold SQL :59-61)
-    if wh.exists("gold", "dim_customer"):
-        existing = wh.read("gold", "dim_customer")
-        max_key = existing.agg(F.max("customer_key")).collect()[0][0] or 0
-        fresh = customer.join(
-            existing.select("customer_id"), on=["customer_id"], how="left_anti"
-        )
-        keyed = add_surrogate_key(
-            fresh.distinct(), "customer_key", order_by=["customer_id"], start_at=max_key + 1
-        )
-        dim_customer = existing.unionByName(
-            keyed.select("customer_key", *customer.columns)
-        )
-    else:
-        dim_customer = add_surrogate_key(
-            customer.distinct(), "customer_key", order_by=["customer_id"]
-        ).select("customer_key", *customer.columns)
-    wh.overwrite_safe(dim_customer, "gold", "dim_customer")
-    counts["dim_customer"] = wh.read("gold", "dim_customer").count()
-
     services = s.select(*SERVICE_COLS)
-    counts["dim_services"] = _null_safe_dim(wh, services).count()
-    return counts
+    return {
+        "dim_contract": _idempotent_dim(
+            wh, "dim_contract", "contract_key", contract, ["contract_type"]
+        ),
+        "dim_payment_method": _idempotent_dim(
+            wh, "dim_payment_method", "payment_method_key", payment, ["payment_method"]
+        ),
+        "dim_churn_reason": _idempotent_dim(
+            wh, "dim_churn_reason", "churn_reason_key", reason, ["churn_reason"]
+        ),
+        # NOT EXISTS is on customer_id alone (gold SQL :59-61)
+        "dim_customer": _idempotent_dim(
+            wh, "dim_customer", "customer_key", customer, ["customer_id"]
+        ),
+        "dim_services": _idempotent_dim(
+            wh, "dim_services", "service_key", services, SERVICE_COLS
+        ),
+    }
 
 
-def _null_safe_dim(wh: Warehouse, services: DataFrame) -> DataFrame:
-    """dim_services: NOT EXISTS over 9 null-safe keys (J4 in the dim
-    build too — NULL service rows must form their own dim row)."""
-    distinct = services.distinct()
-    if wh.exists("gold", "dim_services"):
-        existing = wh.read("gold", "dim_services")
-        max_key = existing.agg(F.max("service_key")).collect()[0][0] or 0
-        cond = None
-        for c in SERVICE_COLS:
-            clause = distinct[c].eqNullSafe(existing[c])
-            cond = clause if cond is None else (cond & clause)
-        fresh = distinct.join(existing, on=cond, how="left_anti")
-        keyed = add_surrogate_key(
-            fresh, "service_key", order_by=SERVICE_COLS, start_at=max_key + 1
-        ).select("service_key", *SERVICE_COLS)
-        dim = existing.unionByName(keyed)
-    else:
-        dim = add_surrogate_key(
-            distinct, "service_key", order_by=SERVICE_COLS
-        ).select("service_key", *SERVICE_COLS)
-    wh.overwrite_safe(dim, "gold", "dim_services")
-    return wh.read("gold", "dim_services")
-
-
-def build_fact(
-    wh: Warehouse, run_date: str | None = None, zorder: bool = True
-) -> int:
+def build_fact(wh: Warehouse, run_date: str | None = None) -> int:
     """Fact build (gold SQL :94-145): star joins + scrub casts +
     NOT-EXISTS guard on customer_key.
 
     The gold fact is written Z-order-clustered on
-    (customer_key-bucket, cltv-bucket) by default
-    (``Warehouse.write_zordered``): downstream gold consumers filter
-    by customer ranges (quality gate, upserts) AND by value bands
-    (the ML label/feature scans), and Morton clustering bounds the
-    per-file min/max span of BOTH — single-column layout prunes one
-    or the other. ``zorder=False`` restores the plain atomic
-    overwrite."""
+    (customer_key-bucket, cltv-bucket) (``Warehouse.write_zordered``):
+    downstream gold consumers filter by customer ranges (quality gate,
+    upserts) AND by value bands (the ML label/feature scans), and
+    Morton clustering bounds the per-file min/max span of BOTH —
+    single-column layout prunes one or the other."""
     run_date = run_date or dt.date.today().isoformat()
     s = wh.read("silver", "churn_raw").alias("s")
     c = F.broadcast(wh.read("gold", "dim_customer")).alias("c")
@@ -413,21 +373,16 @@ def build_fact(
         merged = existing.unionByName(fact)
     else:
         merged = fact
-    if zorder:
-        wh.write_zordered(
-            merged,
-            "gold",
-            "fact_customer_churn",
-            [
-                F.pmod(F.col("customer_key"), F.lit(256)).cast("long"),
-                F.pmod(F.coalesce(F.col("cltv"), F.lit(0)), F.lit(256)).cast(
-                    "long"
-                ),
-            ],
-            n_files=16,
-        )
-    else:
-        wh.overwrite_safe(merged, "gold", "fact_customer_churn")
+    wh.write_zordered(
+        merged,
+        "gold",
+        "fact_customer_churn",
+        [
+            F.pmod(F.col("customer_key"), F.lit(256)).cast("long"),
+            F.pmod(F.coalesce(F.col("cltv"), F.lit(0)), F.lit(256)).cast("long"),
+        ],
+        n_files=16,
+    )
     return wh.read("gold", "fact_customer_churn").count()
 
 

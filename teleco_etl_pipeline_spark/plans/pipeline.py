@@ -43,37 +43,42 @@ def run_warehouse(
     report: dict = {"run_id": run_id, "files": []}
 
     # --- file registration + checksum skip (C5) ---
-    todo: list[str] = []
+    processing: list[dict] = []
     for path in fsrc.list_ingest_files(staging_dir):
         name = os.path.basename(path)
         checksum = fsrc.md5_file(path)
         if registry.should_skip(name, checksum):
             report["files"].append({"file": name, "status": "SKIPPED"})
             continue
-        registry.upsert(
-            [
-                {
-                    "file_name": name,
-                    "file_path": path,
-                    "file_size_bytes": os.path.getsize(path),
-                    "status": "PROCESSING",
-                    "run_id": run_id,
-                    "checksum_md5": checksum,
-                }
-            ]
+        processing.append(
+            {
+                "file_name": name,
+                "file_path": path,
+                "file_size_bytes": os.path.getsize(path),
+                "status": "PROCESSING",
+                "run_id": run_id,
+                "checksum_md5": checksum,
+            }
         )
-        todo.append(path)
 
-    if not todo:
+    if not processing:
         report["status"] = "SKIPPED_NO_NEW_DATA"  # C4 skip semantics
         return report
 
+    # Every registry write rewrites the whole table, so each state
+    # transition is one write covering all of the run's files.
+    names = [r["file_name"] for r in processing]
+
+    def transition(status: str, error: str | None = None) -> None:
+        registry.upsert(
+            [{"file_name": n, "status": status, "error_message": error} for n in names]
+        )
+
+    registry.upsert(processing)
     try:
         raw = (
             fsrc.read_csv_dir(spark, staging_dir)
-            .filter(
-                F.col("source_file").isin([os.path.basename(p) for p in todo])
-            )
+            .filter(F.col("source_file").isin(names))
             .drop("source_file")
         )
         report["staging"] = medallion.load_staging(wh, raw)
@@ -85,21 +90,18 @@ def run_warehouse(
         report["gold_fact_rows"] = medallion.build_fact(wh, run_date)
         report["gold_gate"] = medallion.gold_quality_gate(wh)
     except Exception as e:  # noqa: BLE001
-        for p in todo:
-            registry.set_status(os.path.basename(p), "FAILED", str(e)[:500])
+        transition("FAILED", str(e)[:500])
         raise
 
     # --- archive + final metadata (S13, M7) ---
-    suffix = dt.datetime.now().strftime("%Y%m%d_%H%M%S")
-    archive_dir = os.path.join(staging_dir, "archive")
-    for p in todo:
-        name = os.path.basename(p)
-        registry.set_status(name, "SUCCESS")
-        if archive:
-            fsrc.archive_file(p, archive_dir, suffix)
-            registry.set_status(name, "ARCHIVED")
-            report["files"].append({"file": name, "status": "ARCHIVED"})
-        else:
-            report["files"].append({"file": name, "status": "SUCCESS"})
+    transition("SUCCESS")
+    if archive:
+        suffix = dt.datetime.now().strftime("%Y%m%d_%H%M%S")
+        archive_dir = os.path.join(staging_dir, "archive")
+        for r in processing:
+            fsrc.archive_file(r["file_path"], archive_dir, suffix)
+        transition("ARCHIVED")
+    final = "ARCHIVED" if archive else "SUCCESS"
+    report["files"] += [{"file": n, "status": final} for n in names]
     report["status"] = "SUCCESS"
     return report

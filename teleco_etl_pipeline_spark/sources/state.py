@@ -1,8 +1,10 @@
 """Pipeline state stores: file-metadata registry and watermarks
 (SURVEY.md §2.8 M2/M7, §2.10 St1, §2.12 C5/C6).
 
-Both are tiny Parquet tables mutated through the same merge operator
-as the data tables — the state machine semantics of the reference
+Both are tiny Parquet tables mutated through ``Warehouse.upsert_into``,
+the keyed merge the data tables use. Each merge rewrites the whole
+table, so callers write one batch per state transition. The state
+machine semantics of the reference
 (PENDING→PROCESSING→SUCCESS/FAILED→ARCHIVED; watermark advances only
 after sink success) live in the callers (plans/pipeline.py,
 plans/extract.py).
@@ -10,14 +12,11 @@ plans/extract.py).
 
 from __future__ import annotations
 
-import os
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from teleco_etl_pipeline_spark.catalog import META_SCHEMA, WATERMARK_SCHEMA, Warehouse
-from teleco_etl_pipeline_spark.operators.upsert import merge_upsert
 
 STATUSES = ("PENDING", "PROCESSING", "SUCCESS", "FAILED", "ARCHIVED")
 
@@ -37,30 +36,21 @@ class FileRegistry:
         self.wh = wh
         self.spark = wh.spark
 
-    def _empty(self) -> DataFrame:
-        return self.spark.createDataFrame([], META_SCHEMA)
-
-    def load(self) -> DataFrame:
-        if self.wh.exists("meta", self.TABLE):
-            return self.wh.read("meta", self.TABLE)
-        return self._empty()
-
     def upsert(self, rows: list[dict]) -> None:
-        """M2: keyed upsert on file_name."""
+        """M2/M7: one keyed merge on file_name for a batch of files.
+        Only the fields a row carries are updated; the rest (e.g. the
+        checksum on a status change) keep their stored value."""
+        assert all(r.get("status") in STATUSES for r in rows)
         now = datetime.now(timezone.utc).replace(tzinfo=None)
-        for r in rows:
-            r.setdefault("created_at", now)
-            r["processed_at"] = now
+        rows = [{"created_at": now, **r, "processed_at": now} for r in rows]
         src = self.spark.createDataFrame(
-            [
-                tuple(r.get(f.name) for f in META_SCHEMA.fields)
-                for r in rows
-            ],
+            [tuple(r.get(f.name) for f in META_SCHEMA.fields) for r in rows],
             META_SCHEMA,
         )
-        merged = merge_upsert(
-            self.load(),
+        self.wh.upsert_into(
             src,
+            "meta",
+            self.TABLE,
             keys=["file_name"],
             update_cols=[
                 "file_path",
@@ -73,18 +63,12 @@ class FileRegistry:
                 "checksum_md5",
             ],
         )
-        self.wh.overwrite_safe(merged, "meta", self.TABLE)
-
-    def set_status(self, file_name: str, status: str, error: str | None = None) -> None:
-        """M7: conditional status update."""
-        assert status in STATUSES
-        self.upsert(
-            [{"file_name": file_name, "status": status, "error_message": error}]
-        )
 
     def status_of(self, file_name: str) -> tuple[str, str] | None:
+        if not self.wh.exists("meta", self.TABLE):
+            return None
         rows = (
-            self.load()
+            self.wh.read("meta", self.TABLE)
             .filter(F.col("file_name") == file_name)
             .select("status", "checksum_md5")
             .collect()
@@ -123,10 +107,4 @@ class WatermarkStore:
         """Called ONLY after the sink write succeeded."""
         now = datetime.now(timezone.utc).replace(tzinfo=None)
         src = self.spark.createDataFrame([(name, value, now)], WATERMARK_SCHEMA)
-        current = (
-            self.wh.read("meta", self.TABLE)
-            if self.wh.exists("meta", self.TABLE)
-            else self.spark.createDataFrame([], WATERMARK_SCHEMA)
-        )
-        merged = merge_upsert(current, src, keys=["name"])
-        self.wh.overwrite_safe(merged, "meta", self.TABLE)
+        self.wh.upsert_into(src, "meta", self.TABLE, keys=["name"])

@@ -52,11 +52,16 @@ def _row(
     reason: str = "",
     internet: str = "DSL",
     payment: str = "Electronic check",
+    services: tuple[str, ...] | None = None,
 ) -> str:
+    """One ingest row; ``services`` overrides the nine service columns
+    (an empty string reads as NULL)."""
+    if services is None:
+        services = ("Yes", "No", internet, "Yes", "No", "No", "No", "No", "No")
     return (
         f"{cid},{gender},No,Yes,No,United States,California,Los Angeles,"
-        f"90003,\"33.96,-118.27\",33.964131,-118.272783,Yes,No,"
-        f"{internet},Yes,No,No,No,No,No,Yes,"
+        f"90003,\"33.96,-118.27\",33.964131,-118.272783,"
+        f"{','.join(services)},Yes,"
         f"{payment},{contract},{tenure},{monthly},{total},"
         f"{churn},{churn_value},{score},{cltv},{reason}"
     )

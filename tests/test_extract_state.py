@@ -4,6 +4,7 @@ tests."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 from teleco_etl_pipeline_spark.catalog import Warehouse
 from teleco_etl_pipeline_spark.plans.extract import (
@@ -94,7 +95,27 @@ def test_file_registry_checksum_skip(spark, tmp_path):
     assert not reg.should_skip("f1.csv", "CHANGED")
     assert not reg.should_skip("new.csv", "abc")
 
-    reg.set_status("f1.csv", "ARCHIVED")
+    reg.upsert([{"file_name": "f1.csv", "status": "ARCHIVED"}])
     assert reg.status_of("f1.csv")[0] == "ARCHIVED"
     # checksum survived the status update (column-subset merge)
     assert reg.should_skip("f1.csv", "abc")
+
+
+def test_file_registry_survives_interrupted_swap(spark, tmp_path):
+    """A crash between safe_overwrite's two renames leaves the registry
+    only at its '.old' backup. The archived file must still be skipped,
+    and the next upsert must merge into the restored table instead of
+    starting a new one that forgets it."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    reg = FileRegistry(wh)
+    reg.upsert([{"file_name": "a.csv", "status": "ARCHIVED", "checksum_md5": "abc"}])
+    path = wh.path("meta", FileRegistry.TABLE)
+    os.rename(path, path + ".old")  # simulate the crash window
+
+    assert reg.should_skip("a.csv", "abc")
+    reg.upsert([{"file_name": "b.csv", "status": "PROCESSING", "checksum_md5": "def"}])
+    names = sorted(
+        r["file_name"] for r in wh.read("meta", FileRegistry.TABLE).collect()
+    )
+    assert names == ["a.csv", "b.csv"]
+    assert reg.should_skip("a.csv", "abc")

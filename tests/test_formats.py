@@ -1,48 +1,24 @@
-"""TableFormat strategy: parquet behavior, env switching, and the
-Delta gate (delta-spark is absent in this container, so Delta is
-exercised through its unavailability contract)."""
+"""Warehouse storage on plain Parquet: keyed upsert, create-on-first-
+write, predicate delete, swap healing, and the file-format features
+(JSONL, schema evolution, hidden metadata) the layers rely on."""
 
 from __future__ import annotations
 
-import pytest
+import os
+
 from pyspark.sql import functions as F
 
 from teleco_etl_pipeline_spark.catalog import Warehouse
-from teleco_etl_pipeline_spark.formats import (
-    DeltaFormat,
-    ParquetFormat,
-    get_format,
-)
-
-
-def test_get_format_default_and_env(monkeypatch):
-    assert isinstance(get_format(), ParquetFormat)
-    monkeypatch.setenv("SPARK_GRAFT_TABLE_FORMAT", "parquet")
-    assert get_format().name == "parquet"
-    with pytest.raises(ValueError, match="unknown table format"):
-        get_format("orc-acid")
-
-
-def test_delta_gate_is_explicit():
-    """Without delta-spark installed, DeltaFormat must fail at
-    construction with actionable guidance — never at first write."""
-    try:
-        import delta  # noqa: F401
-
-        pytest.skip("delta-spark installed; gate not exercisable")
-    except ImportError:
-        pass
-    with pytest.raises(RuntimeError, match="delta-spark"):
-        DeltaFormat()
+from teleco_etl_pipeline_spark.operators.upsert import delete_where
 
 
 def test_warehouse_routes_through_format(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path))
-    assert wh.fmt.name == "parquet"
     df = spark.range(5).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("v")
     )
     wh.write(df, "bronze", "t")
+    assert os.path.isdir(wh.path("bronze", "t"))
     assert wh.read("bronze", "t").count() == 5
 
 
@@ -77,22 +53,19 @@ def test_parquet_delete_where_in_place(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path))
     df = spark.range(10).select(F.col("id").alias("k"))
     wh.write(df, "bronze", "t")
-    wh.fmt.delete_where(spark, wh.path("bronze", "t"), F.col("k") >= 7)
+    wh.overwrite_safe(
+        delete_where(wh.read("bronze", "t"), F.col("k") >= 7), "bronze", "t"
+    )
     assert wh.read("bronze", "t").count() == 7
 
 
-def test_parquet_delete_where_keeps_null_predicate_rows(spark, tmp_path):
+def test_parquet_delete_where_keeps_null_predicate_rows(spark):
     """SQL DELETE semantics: rows where the predicate is NULL are
-    KEPT (matching Delta's native DELETE), not silently dropped by
-    the ~predicate filter."""
-    path = str(tmp_path / "t")
-    fmt = ParquetFormat()
+    KEPT, not silently dropped by the ~predicate filter."""
     df = spark.createDataFrame(
         [(1, 150.0), (2, 50.0), (3, None)], ["id", "score"]
     )
-    fmt.write(df, path)
-    fmt.delete_where(spark, path, F.col("score") > 100.0)
-    left = {r["id"] for r in fmt.read(spark, path).collect()}
+    left = {r["id"] for r in delete_where(df, F.col("score") > 100.0).collect()}
     assert left == {2, 3}  # NULL-score row survives
 
 
@@ -100,20 +73,19 @@ def test_parquet_upsert_heals_interrupted_swap(spark, tmp_path):
     """If a previous safe_overwrite crashed between its two renames
     (table only at path+'.old'), the next upsert must restore and
     MERGE — not treat the path as a first write and drop the table."""
-    import os
-
-    path = str(tmp_path / "t")
-    fmt = ParquetFormat()
-    fmt.write(spark.createDataFrame([(1, "a"), (2, "b")], ["id", "v"]), path)
+    wh = Warehouse(spark, str(tmp_path))
+    wh.write(spark.createDataFrame([(1, "a"), (2, "b")], ["id", "v"]), "bronze", "t")
+    path = wh.path("bronze", "t")
     os.rename(path, path + ".old")  # simulate the crash window
-    fmt.upsert(
-        spark,
-        path,
+    wh.upsert_into(
         spark.createDataFrame([(2, "B"), (3, "c")], ["id", "v"]),
+        "bronze",
+        "t",
         keys=["id"],
     )
-    out = {r["id"]: r["v"] for r in fmt.read(spark, path).collect()}
+    out = {r["id"]: r["v"] for r in wh.read("bronze", "t").collect()}
     assert out == {1: "a", 2: "B", 3: "c"}  # pre-crash row 1 survives
+    assert not os.path.exists(path + ".old")
 
 
 def test_jsonl_round_trip_and_corrupt_record_quarantine(spark, tmp_path):

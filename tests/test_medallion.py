@@ -9,10 +9,13 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from teleco_etl_pipeline_spark.catalog import Warehouse
+from teleco_etl_pipeline_spark.catalog import SERVICE_COLS, Warehouse
+from teleco_etl_pipeline_spark.operators.upsert import delete_where
 from teleco_etl_pipeline_spark.plans import medallion, quality
 from teleco_etl_pipeline_spark.plans.pipeline import run_warehouse
 from teleco_etl_pipeline_spark.plans.reprocess import reprocess_fixed_file
+from teleco_etl_pipeline_spark.sources.files import md5_file
+from teleco_etl_pipeline_spark.sources.state import FileRegistry
 from tests.conftest import CSV_HEADER, _row, write_ingest_csv
 
 
@@ -98,28 +101,26 @@ def test_bronze_upsert_column_subset(staged, tmp_path):
     assert row["country"] == "United States"
 
 
+def _stage(wh, rows):
+    """Write CSV rows straight into the staging table (no M6 dedup)."""
+    import io
+
+    import pandas as pd
+
+    from teleco_etl_pipeline_spark.functions.scalars import normalize_columns
+
+    pdf = pd.read_csv(io.StringIO("\n".join([CSV_HEADER] + rows)), dtype=str)
+    df = normalize_columns(wh.spark.createDataFrame(pdf.where(pdf.notna())))
+    wh.write(df, "staging", "staging_churn")
+
+
 def test_bronze_direct_upsert_updates_subset(spark, tmp_path):
     """Drive bronze_upsert directly (no M6 dedup) to verify the ON
     CONFLICT column subset."""
     wh = Warehouse(spark, str(tmp_path / "wh"))
-    import pandas as pd
-
-    def stage(rows):
-        header = [c.strip() for c in CSV_HEADER.split(",")]
-        import io
-
-        pdf = pd.read_csv(
-            io.StringIO("\n".join([CSV_HEADER] + rows)), dtype=str
-        )
-        from teleco_etl_pipeline_spark.functions.scalars import normalize_columns
-
-        df = normalize_columns(spark.createDataFrame(pdf.where(pdf.notna())))
-        wh.write(df, "staging", "staging_churn")
-        assert header  # silence lint
-
-    stage([_row("A-1", tenure="10"), _row("A-2")])
+    _stage(wh, [_row("A-1", tenure="10"), _row("A-2")])
     medallion.bronze_upsert(wh)
-    stage([_row("A-1", tenure="99").replace("United States", "Canada")])
+    _stage(wh, [_row("A-1", tenure="99").replace("United States", "Canada")])
     stats = medallion.bronze_upsert(wh)
     assert stats == {"inserted": 0, "updated": 1, "existing": 1}
 
@@ -129,6 +130,24 @@ def test_bronze_direct_upsert_updates_subset(spark, tmp_path):
     assert row["record_type"] == "updated"
     keep = wh.read("bronze", "churn_raw").filter(F.col("customer_id") == "A-2").collect()[0]
     assert keep["record_type"] == "upserted"
+
+
+def test_bronze_upsert_survives_interrupted_swap(spark, tmp_path):
+    """A crash between safe_overwrite's two renames leaves bronze only
+    at its '.old' backup. The next upsert must merge into the restored
+    table, not recreate bronze from the new rows alone."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    _stage(wh, [_row("c1"), _row("c2")])
+    medallion.bronze_upsert(wh)
+    path = wh.path("bronze", "churn_raw")
+    os.rename(path, path + ".old")  # simulate the crash window
+
+    _stage(wh, [_row("c3")])
+    stats = medallion.bronze_upsert(wh)
+    assert stats == {"inserted": 1, "updated": 0, "existing": 2}
+    ids = sorted(r["customer_id"] for r in wh.read("bronze", "churn_raw").collect())
+    assert ids == ["c1", "c2", "c3"]
+    assert not os.path.exists(path + ".old")
 
 
 def test_silver_defaults_and_gold_scrub(staged):
@@ -259,3 +278,175 @@ def test_split_write_observed_matches_error_rate(spark, tmp_path):
     assert quality.error_rate(df, rules) == (total, bad, pct)
     good = spark.read.parquet(out)
     assert good.count() == 8 and "error_details" not in good.columns
+
+
+def _write_csv(path, rows):
+    with open(path, "w") as f:
+        f.write(CSV_HEADER + "\n" + "\n".join(rows) + "\n")
+
+
+def _meta(wh):
+    return {r["file_name"]: r for r in wh.read("meta", FileRegistry.TABLE).collect()}
+
+
+def test_failed_run_marks_files_failed_and_retries(spark, tmp_path, monkeypatch):
+    """The failure path: rows that trip the bronze DQ gate halt the
+    run. Every file of the run ends FAILED with the error text and
+    keeps its checksum; a later run retries them (FAILED is never
+    skipped) and archives them once the data is fixed.
+
+    Staging applies the same rules as the gate, so the test removes
+    the staging Negative Tenure rule to let the bad rows reach bronze,
+    as a staging rule gap would."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    wh_root = str(tmp_path / "wh")
+    names = ["day_a.csv", "day_b.csv"]
+
+    def write_day(bad_tenure):
+        for name, prefix in zip(names, ("A", "B")):
+            _write_csv(
+                landing / name, [_row(f"{prefix}-1", tenure=bad_tenure), _row(f"{prefix}-2")]
+            )
+        return {n: md5_file(str(landing / n)) for n in names}
+
+    checksums = write_day("-5")
+    staging_rules = quality.churn_rules
+    monkeypatch.setattr(
+        quality,
+        "churn_rules",
+        lambda df, **kw: [
+            r for r in staging_rules(df, **kw) if r.reason != "Negative Tenure"
+        ],
+    )
+    with pytest.raises(AssertionError, match="negative_tenure"):
+        run_warehouse(spark, wh_root, str(landing), run_id="run_1")
+    monkeypatch.undo()
+
+    wh = Warehouse(spark, wh_root)
+    meta = _meta(wh)
+    assert sorted(meta) == names
+    for name, r in meta.items():
+        assert r["status"] == "FAILED"
+        assert "DQ checks failed" in r["error_message"]
+        assert "negative_tenure" in r["error_message"]
+        assert r["checksum_md5"] == checksums[name]
+        assert r["file_size_bytes"] == os.path.getsize(landing / name)
+        assert r["run_id"] == "run_1"
+
+    # The failed run already merged its rows into bronze: repair it
+    # with the M4 predicate delete, fix the files, run again.
+    bronze = wh.read("bronze", "churn_raw")
+    wh.overwrite_safe(
+        delete_where(bronze, F.col("tenure_in_months") < 0), "bronze", "churn_raw"
+    )
+    checksums = write_day("7")
+    report = run_warehouse(
+        spark, wh_root, str(landing), run_id="run_2", run_date="2026-08-14"
+    )
+    assert report["status"] == "SUCCESS"
+    assert report["files"] == [{"file": n, "status": "ARCHIVED"} for n in names]
+    assert report["staging"]["staged"] == 2  # A-1, B-1; A-2, B-2 already in bronze
+    assert report["gold_fact_rows"] == 4
+    meta = _meta(wh)
+    for name, r in meta.items():
+        assert (r["status"], r["checksum_md5"], r["run_id"]) == (
+            "ARCHIVED",
+            checksums[name],
+            "run_2",
+        )
+
+
+def test_dim_keys_dense_stable_and_null_safe(spark, tmp_path):
+    """Pins the gold dims' surrogate keys over two runs: dense 1..n,
+    new values numbered from the current max in value order, run 1's
+    keys unchanged by run 2, one dim_services row for all-NULL
+    services, and no new rows from a re-run over the same silver."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    wh_root = str(tmp_path / "wh")
+    no_services = ("",) * 9
+
+    _write_csv(
+        landing / "day1.csv",
+        [
+            _row("C-03", contract="Two year", payment="Mailed check",
+                 internet="Fiber optic"),
+            _row("C-01", churn="Yes", churn_value="1",
+                 reason="Competitor made better offer"),
+            _row("C-02", contract="One year", services=no_services),
+        ],
+    )
+    run_warehouse(spark, wh_root, str(landing), run_date="2026-08-13", archive=False)
+    wh = Warehouse(spark, wh_root)
+
+    def dims():
+        out = {}
+        for table, key, cols in [
+            ("dim_contract", "contract_key", ["contract_type"]),
+            ("dim_payment_method", "payment_method_key", ["payment_method"]),
+            ("dim_churn_reason", "churn_reason_key", ["churn_reason"]),
+            ("dim_customer", "customer_key", ["customer_id"]),
+            ("dim_services", "service_key", SERVICE_COLS),
+        ]:
+            rows = wh.read("gold", table).collect()
+            out[table] = {
+                r[key]: (r[cols[0]] if len(cols) == 1 else tuple(r[c] for c in cols))
+                for r in rows
+            }
+            assert len(out[table]) == len(rows)  # keys unique
+            assert sorted(out[table]) == list(range(1, len(rows) + 1))  # dense
+        return out
+
+    run1 = dims()
+    assert run1["dim_contract"] == {
+        1: "Month-to-Month", 2: "One year", 3: "Two year"
+    }
+    assert run1["dim_payment_method"] == {1: "Electronic check", 2: "Mailed check"}
+    assert run1["dim_churn_reason"] == {1: "Competitor made better offer", 2: "n/a"}
+    assert run1["dim_customer"] == {1: "C-01", 2: "C-02", 3: "C-03"}
+    assert len(run1["dim_services"]) == 3
+
+    _write_csv(
+        landing / "day2.csv",
+        [
+            _row("C-00", churn="Yes", churn_value="1", internet="No",
+                 payment="Bank transfer (automatic)",
+                 reason="Attitude of support person"),
+            _row("C-01", churn="Yes", churn_value="1",
+                 reason="Competitor made better offer"),
+            _row("C-04", contract="Two year", payment="Credit card (automatic)",
+                 services=no_services),
+        ],
+    )
+    report = run_warehouse(
+        spark, wh_root, str(landing), run_date="2026-08-14", archive=False
+    )
+    assert report["staging"]["dup_vs_bronze"] == 1  # C-01
+    run2 = dims()
+    for table, mapping in run1.items():
+        assert {k: run2[table][k] for k in mapping} == mapping, table
+    assert run2["dim_contract"] == run1["dim_contract"]
+    assert run2["dim_payment_method"] == {
+        **run1["dim_payment_method"],
+        3: "Bank transfer (automatic)",
+        4: "Credit card (automatic)",
+    }
+    assert run2["dim_churn_reason"] == {
+        **run1["dim_churn_reason"], 3: "Attitude of support person"
+    }
+    assert run2["dim_customer"] == {**run1["dim_customer"], 4: "C-00", 5: "C-04"}
+    assert len(run2["dim_services"]) == 4
+    assert list(run2["dim_services"].values()).count((None,) * 9) == 1
+    fact = wh.read("gold", "fact_customer_churn")
+    assert fact.count() == 5
+    assert fact.filter(F.col("service_key").isNull()).count() == 0
+
+    # A byte-identical re-run is skipped whole, and rebuilding the dims
+    # over the unchanged silver adds no row.
+    again = run_warehouse(
+        spark, wh_root, str(landing), run_date="2026-08-15", archive=False
+    )
+    assert again["status"] == "SKIPPED_NO_NEW_DATA"
+    medallion.build_dims(wh)
+    assert dims() == run2
