@@ -66,11 +66,7 @@ BRONZE_UPDATE_COLS = [
 # ---------------------------------------------------------------------------
 
 
-def load_staging(
-    wh: Warehouse,
-    raw: DataFrame,
-    quarantine_table: str = "staging_rejects",
-) -> dict[str, int]:
+def load_staging(wh: Warehouse, raw: DataFrame) -> dict[str, int]:
     """Validate + split + quarantine + write staging (truncate-load).
 
     ``raw`` is the normalized CSV scan (sources.files.read_csv_dir).
@@ -89,16 +85,15 @@ def load_staging(
     good = annotated.filter(F.col("error_details").isNull()).drop("error_details")
     bad = annotated.filter(F.col("error_details").isNotNull())
 
-    # One pass for both counts (the A10 conditional-agg trick).
-    row = annotated.agg(
-        F.count(F.lit(1)).alias("input"),
-        F.coalesce(
-            F.sum(F.when(F.col("error_details").isNotNull(), 1)), F.lit(0)
-        ).alias("rejected"),
-    ).collect()[0]
-    stats = {"input": row["input"], "rejected": int(row["rejected"])}
+    stats = quality.count_rows(
+        annotated,
+        [
+            quality.Rule("input", F.lit(True)),
+            quality.Rule("rejected", F.col("error_details").isNotNull()),
+        ],
+    )
     if stats["rejected"]:
-        wh.write(bad, "quarantine", quarantine_table, mode="append")
+        wh.write(bad, "quarantine", "staging_rejects", mode="append")
 
     if wh.exists("bronze", "churn_raw"):
         bronze = wh.read("bronze", "churn_raw")
@@ -153,9 +148,14 @@ def _bronze_projection(staging: DataFrame) -> DataFrame:
 
 
 def bronze_upsert(wh: Warehouse) -> dict[str, int]:
-    """M1: INSERT … ON CONFLICT (customer_id) DO UPDATE subset."""
+    """M1: INSERT … ON CONFLICT (customer_id) DO UPDATE subset.
+
+    The C2 gate (``quality.assert_checks_pass``) runs on the rows
+    about to become bronze, before they are written, so a failed gate
+    leaves bronze as it was."""
     src = _bronze_projection(wh.read("staging", "staging_churn"))
     if not wh.exists("bronze", "churn_raw"):
+        quality.assert_checks_pass(src)
         wh.write(src, "bronze", "churn_raw")
         return {"inserted": src.count(), "updated": 0, "existing": 0}
 
@@ -179,7 +179,9 @@ def bronze_upsert(wh: Warehouse) -> dict[str, int]:
     )
     stats_row = merged.groupBy("_merge_action").count().collect()
     stats = {r["_merge_action"]: r["count"] for r in stats_row}
-    wh.overwrite_safe(merged.drop("_merge_action"), "bronze", "churn_raw")
+    merged = merged.drop("_merge_action")
+    quality.assert_checks_pass(merged)
+    wh.overwrite_safe(merged, "bronze", "churn_raw")
     return {
         "inserted": stats.get("new", 0),
         "updated": stats.get("updated", 0),
@@ -388,15 +390,22 @@ def build_fact(wh: Warehouse, run_date: str | None = None) -> int:
 
 def gold_quality_gate(wh: Warehouse) -> dict[str, int]:
     """dq_gold_fact_check (DataWarehouse.py:841-863): orphan keys,
-    negative measures — all must be 0."""
-    fact = wh.read("gold", "fact_customer_churn")
-    dim_c = wh.read("gold", "dim_customer")
-    orphans = fact.join(dim_c.select("customer_key"), "customer_key", "left_anti")
-    checks = {
-        "orphan_customer_keys": orphans.count(),
-        "negative_tenure": fact.filter(F.col("tenure_months") < 0).count(),
-        "negative_charges": fact.filter(F.col("monthly_charges") < 0).count(),
-    }
+    negative measures — all must be 0. One aggregate over the fact
+    left-joined to the dim's keys: an orphan has no dim side."""
+    dim_keys = (
+        wh.read("gold", "dim_customer")
+        .select("customer_key", F.lit(True).alias("_in_dim"))
+        .distinct()
+    )
+    fact = wh.read("gold", "fact_customer_churn").join(dim_keys, "customer_key", "left")
+    checks = quality.count_rows(
+        fact,
+        [
+            quality.Rule("orphan_customer_keys", F.col("_in_dim").isNull()),
+            quality.Rule("negative_tenure", F.col("tenure_months") < 0),
+            quality.Rule("negative_charges", F.col("monthly_charges") < 0),
+        ],
+    )
     failing = {k: v for k, v in checks.items() if v != 0}
     if failing:
         raise AssertionError(f"gold DQ gate failed: {failing}")

@@ -4,8 +4,9 @@ split, error-rate circuit breaker, and the ported DQ-check corpus
 
 Every rule is a (predicate, reason) pair evaluated in ONE pass over
 the frame — the annotated split is two filters on the same scan, and
-the error rate comes from a single aggregate, not two counts
-(reference does bad/total in two queries, DataWarehouse.py:455-463).
+every count a gate needs comes from one ``count_rows`` aggregate, not
+one query per count (reference does bad/total in two queries,
+DataWarehouse.py:455-463).
 """
 
 from __future__ import annotations
@@ -136,21 +137,27 @@ def split_good_bad(df: DataFrame, rules: list[Rule]) -> tuple[DataFrame, DataFra
     return good, bad
 
 
+def count_rows(df: DataFrame, rules: list[Rule]) -> dict[str, int]:
+    """Rows matching each rule, counted by ONE aggregate query:
+    {reason: count}, in rule order. Rules may hold window expressions
+    (duplicate marking), which cannot nest inside an aggregate, so
+    the flags are projected first and counted after."""
+    if not rules:
+        return {}
+    flags = df.select(
+        *[F.when(r.predicate, F.lit(1)).alias(f"_{i}") for i, r in enumerate(rules)]
+    )
+    row = flags.agg(*[F.count(c) for c in flags.columns]).collect()[0]
+    return {r.reason: row[i] for i, r in enumerate(rules)}
+
+
 def error_rate(df: DataFrame, rules: list[Rule]) -> tuple[int, int, float]:
     """A10/C3 in a single aggregate pass: (total, bad, pct)."""
-    bad_pred = None
+    bad_pred = F.lit(False)
     for r in rules:
-        bad_pred = r.predicate if bad_pred is None else (bad_pred | r.predicate)
-    if bad_pred is None:
-        total = df.count()
-        return total, 0, 0.0
-    # Rules may contain window expressions (dup marking) which cannot
-    # nest inside an aggregate — project the flag first, then agg.
-    flagged = df.select(F.when(bad_pred, F.lit(1)).otherwise(0).alias("_bad"))
-    row = flagged.agg(
-        F.count(F.lit(1)).alias("total"), F.sum("_bad").alias("bad")
-    ).collect()[0]
-    total, bad = row[0], int(row[1] or 0)
+        bad_pred = bad_pred | r.predicate
+    n = count_rows(df, [Rule("total", F.lit(True)), Rule("bad", bad_pred)])
+    total, bad = n["total"], n["bad"]
     pct = (100.0 * bad / total) if total else 0.0
     return total, bad, pct
 
@@ -160,13 +167,11 @@ class CircuitBreakerTripped(RuntimeError):
     pipeline like the reference's raise (DataWarehouse.py:468-482)."""
 
 
-def check_circuit_breaker(
-    df: DataFrame, rules: list[Rule], threshold_pct: float = ERROR_RATE_THRESHOLD
-) -> tuple[int, int, float]:
+def check_circuit_breaker(df: DataFrame, rules: list[Rule]) -> tuple[int, int, float]:
     total, bad, pct = error_rate(df, rules)
-    if pct > threshold_pct:
+    if pct > ERROR_RATE_THRESHOLD:
         raise CircuitBreakerTripped(
-            f"error rate {pct:.2f}% exceeds threshold {threshold_pct}% "
+            f"error rate {pct:.2f}% exceeds threshold {ERROR_RATE_THRESHOLD}% "
             f"({bad}/{total} rows)"
         )
     return total, bad, pct
@@ -177,80 +182,48 @@ def check_circuit_breaker(
 # ---------------------------------------------------------------------------
 
 
-def run_layer_checks(df: DataFrame, key: str = "customer_id") -> dict[str, int]:
+def run_layer_checks(df: DataFrame) -> dict[str, int]:
     """The invariant battery the reference runs per layer: null keys,
-    duplicate keys, negative numerics. All values expected 0 after a
-    clean stage (SQLValueCheckOperator pass_value=0 semantics,
-    DataWarehouse.py:808-818)."""
+    duplicate keys, negative numerics, in one aggregate query. All
+    values expected 0 after a clean stage (SQLValueCheckOperator
+    pass_value=0 semantics, DataWarehouse.py:808-818).
+    ``duplicate_keys`` counts keys, not rows: one row per repeated
+    key (a repeated NULL key included) carries the flag."""
     cols = set(df.columns)
-    checks: dict[str, Column] = {}
+    key = "customer_id"
+    rules: list[Rule] = []
     if key in cols:
-        checks["null_key"] = F.count(F.when(F.col(key).isNull(), 1))
+        rules.append(Rule("null_key", F.col(key).isNull()))
     if "tenure_in_months" in cols:
-        checks["negative_tenure"] = F.count(
-            F.when(F.col("tenure_in_months").try_cast("double") < 0, 1)
+        rules.append(
+            Rule("negative_tenure", F.col("tenure_in_months").try_cast("double") < 0)
         )
     if "monthly_charges_amount" in cols:
-        checks["negative_charges"] = F.count(
-            F.when(F.col("monthly_charges_amount").try_cast("double") < 0, 1)
+        rules.append(
+            Rule(
+                "negative_charges",
+                F.col("monthly_charges_amount").try_cast("double") < 0,
+            )
         )
-    if not checks:
-        return {}
-    row = df.agg(*[c.alias(n) for n, c in checks.items()]).collect()[0]
-    out = {n: row[n] for n in checks}
     if key in cols:
-        out["duplicate_keys"] = (
-            df.groupBy(key).count().filter(F.col("count") > 1).count()
+        w = Window.partitionBy(key)
+        rules.append(
+            Rule(
+                "duplicate_keys",
+                (F.count(F.lit(1)).over(w) > 1)
+                & (F.row_number().over(w.orderBy(key)) == 1),
+            )
         )
-    return out
+    return count_rows(df, rules)
 
 
-def assert_checks_pass(df: DataFrame, key: str = "customer_id") -> dict[str, int]:
+def assert_checks_pass(df: DataFrame) -> dict[str, int]:
     """C2: value-check gate — every check must be 0."""
-    results = run_layer_checks(df, key)
+    results = run_layer_checks(df)
     failing = {k: v for k, v in results.items() if v != 0}
     if failing:
         raise AssertionError(f"DQ checks failed: {failing}")
     return results
-
-
-def split_write_observed(
-    df: DataFrame,
-    rules: list[Rule],
-    write_good,
-) -> tuple[int, int, float]:
-    """A10/C3 with ZERO extra scans: piggyback the DQ metrics on the
-    job that writes the good rows.
-
-    ``error_rate`` (above) answers the same question with a dedicated
-    aggregate job — a second full scan of the input. Here the counts
-    ride the write itself via ``DataFrame.observe``: the observation
-    node sits BELOW the good-rows filter, so every input row flows
-    through it exactly once during the write action, and the metrics
-    (total rows, bad rows) are accumulator-style side outputs of that
-    one pass. At 100 TB the difference is an entire extra table scan.
-
-    ``write_good`` is any action-taking callable (e.g.
-    ``lambda good: good.write.parquet(path)``); the metrics are
-    available as soon as it returns. Quarantining the bad rows still
-    needs its own pass — but only when ``bad > 0``, so the clean-data
-    common case stays single-scan.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    annotated = annotate(df, rules)
-    observed = annotated.observe(
-        obs,
-        F.count(F.lit(1)).alias("total"),
-        F.count(F.when(F.col("error_details").isNotNull(), 1)).alias("bad"),
-    )
-    good = observed.filter(F.col("error_details").isNull()).drop("error_details")
-    write_good(good)
-    got = obs.get
-    total, bad = int(got["total"]), int(got["bad"])
-    pct = (100.0 * bad / total) if total else 0.0
-    return total, bad, pct
 
 
 @query(

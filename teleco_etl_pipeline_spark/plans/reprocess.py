@@ -39,11 +39,8 @@ def reprocess_fixed_file(
     # Full validation incl. domain membership (Reprocessing.py:74-109)
     rules = quality.churn_rules(fixed, check_domains=True)
     good, bad = quality.split_good_bad(fixed, rules)
-    report = {
-        "file": os.path.basename(path),
-        "input": fixed.count(),
-        "rejected": bad.count(),
-    }
+    total, rejected, _ = quality.error_rate(fixed, rules)
+    report = {"file": os.path.basename(path), "input": total, "rejected": rejected}
     if report["rejected"] and quarantine_dir:
         out = os.path.join(
             quarantine_dir, f"rejected_{os.path.basename(path)}.csv"

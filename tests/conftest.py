@@ -3,6 +3,7 @@ churn ingest files exercising every DQ rule (FIXTURES.md §5)."""
 
 from __future__ import annotations
 
+import importlib.util
 import os
 import sys
 
@@ -25,6 +26,31 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return TESTDATA
+
+
+def load_entry():
+    """The `__spark_entry__` module, loaded from its file."""
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "__spark_entry__.py")
+    spec = importlib.util.spec_from_file_location("__spark_entry__", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+@pytest.fixture(scope="session")
+def catalog_plans(spark, sf_dir):
+    """Every ``__spark_entry__.queries()`` plan, built once per
+    session: name -> (columns, executed-plan string, build error).
+    Only these strings are kept, not the live DataFrames."""
+    plans = {}
+    for name, fn in load_entry().queries().items():
+        try:
+            df = fn(spark, sf_dir)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            plans[name] = (df.columns, plan, None)
+        except Exception as e:  # noqa: BLE001
+            plans[name] = ([], "", f"{type(e).__name__}: {e}")
+    return plans
 
 
 # 10 clean IBM-Telco-shaped rows + 1 of each dirty case.

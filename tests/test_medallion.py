@@ -5,12 +5,12 @@ schema, idempotency, reprocessing, and the quality gates."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
 from teleco_etl_pipeline_spark.catalog import SERVICE_COLS, Warehouse
-from teleco_etl_pipeline_spark.operators.upsert import delete_where
 from teleco_etl_pipeline_spark.plans import medallion, quality
 from teleco_etl_pipeline_spark.plans.pipeline import run_warehouse
 from teleco_etl_pipeline_spark.plans.reprocess import reprocess_fixed_file
@@ -199,7 +199,7 @@ def test_reprocess_fixed_file(staged, tmp_path):
         wh, fix_path, quarantine_dir=str(tmp_path / "q"), run_date="2026-08-14"
     )
     assert report["status"] == "SUCCESS"
-    assert report["upserted"] == 1 and report["rejected"] == 1
+    assert (report["input"], report["rejected"], report["upserted"]) == (2, 1, 1)
 
     silver = wh.read("silver", "churn_raw")
     assert silver.filter(F.col("customer_id") == "1000-CLEAN1").collect()[0][
@@ -213,14 +213,69 @@ def test_reprocess_fixed_file(staged, tmp_path):
 
 
 def test_gold_quality_gate_catches_orphans(staged):
+    """Pins the gold gate's dict and error text: orphans are fact rows
+    whose customer_key is missing from dim_customer, a NULL key
+    included."""
     spark, staging_dir, wh_root, _ = staged
     run_warehouse(spark, wh_root, staging_dir, run_date="2026-08-13")
     wh = Warehouse(spark, wh_root)
-    # corrupt: drop dim rows → orphans
-    dim = wh.read("gold", "dim_customer").limit(2)
-    wh.overwrite_safe(dim, "gold", "dim_customer")
-    with pytest.raises(AssertionError, match="orphan"):
+    assert medallion.gold_quality_gate(wh) == {
+        "orphan_customer_keys": 0,
+        "negative_tenure": 0,
+        "negative_charges": 0,
+    }
+    dim = wh.read("gold", "dim_customer")
+    wh.overwrite_safe(dim.filter(F.col("customer_key") <= 2), "gold", "dim_customer")
+    fact = wh.read("gold", "fact_customer_churn")
+    one = fact.filter(F.col("customer_key") == 1)
+    key_type = fact.schema["customer_key"].dataType
+    tenure_type = fact.schema["tenure_months"].dataType
+    bad = one.withColumn("customer_key", F.lit(None).cast(key_type)).unionByName(
+        one.withColumn("tenure_months", F.lit(-3).cast(tenure_type))
+    )
+    wh.overwrite_safe(fact.unionByName(bad), "gold", "fact_customer_churn")
+    # 8 fact rows lost their dim row, plus the NULL-key row
+    expected = "gold DQ gate failed: {'orphan_customer_keys': 9, 'negative_tenure': 1}"
+    with pytest.raises(AssertionError, match=re.escape(expected) + "$"):
         medallion.gold_quality_gate(wh)
+
+
+def _layer_frame(spark):
+    """2 NULL keys, one key three times, one twice, one negative
+    tenure and one negative charge."""
+    rows = (
+        [(None, 1, 10.0)] * 2
+        + [("T", 1, 10.0)] * 3
+        + [("D", 1, 10.0)] * 2
+        + [("U1", -1, 10.0), ("U2", 1, -5.0), ("U3", 1, 10.0)]
+    )
+    return spark.createDataFrame(
+        rows, "customer_id string, tenure_in_months int, monthly_charges_amount double"
+    )
+
+
+def test_run_layer_checks_counts_keys_not_rows(spark):
+    """Duplicates count keys, not rows; the repeated NULL key is one
+    duplicate key. The dict order is the order the error prints."""
+    df = _layer_frame(spark)
+    expected = {
+        "null_key": 2,
+        "negative_tenure": 1,
+        "negative_charges": 1,
+        "duplicate_keys": 3,
+    }
+    got = quality.run_layer_checks(df)
+    assert list(got.items()) == list(expected.items())
+    with pytest.raises(AssertionError, match=re.escape(f"DQ checks failed: {expected}") + "$"):
+        quality.assert_checks_pass(df)
+    clean = df.filter(F.col("customer_id") == "U3")
+    assert quality.assert_checks_pass(clean) == dict.fromkeys(expected, 0)
+
+
+def test_error_rate_without_rules(spark):
+    df = _layer_frame(spark)
+    assert quality.error_rate(df, []) == (10, 0, 0.0)
+    assert quality.error_rate(df.limit(0), []) == (0, 0, 0.0)
 
 
 def test_bucketed_join_eliminates_shuffle(spark, tmp_path):
@@ -254,32 +309,6 @@ def test_bucketed_join_eliminates_shuffle(spark, tmp_path):
     assert "Exchange" in plain._jdf.queryExecution().executedPlan().toString()
 
 
-def test_split_write_observed_matches_error_rate(spark, tmp_path):
-    """The observe-piggybacked metrics must equal the dedicated
-    aggregate pass, and the good-rows parquet must hold exactly the
-    clean subset — all from ONE write action."""
-    import io
-
-    import pandas as pd
-
-    rows = [_row(f"OK-{i}") for i in range(8)] + [
-        _row(f"BAD-{i}", tenure="-1") for i in range(2)
-    ]
-    pdf = pd.read_csv(io.StringIO("\n".join([CSV_HEADER] + rows)), dtype=str)
-    from teleco_etl_pipeline_spark.functions.scalars import normalize_columns
-
-    df = normalize_columns(spark.createDataFrame(pdf.where(pdf.notna())))
-    rules = quality.churn_rules(df)
-    out = str(tmp_path / "good.parquet")
-    total, bad, pct = quality.split_write_observed(
-        df, rules, lambda good: good.write.parquet(out)
-    )
-    assert (total, bad) == (10, 2) and abs(pct - 20.0) < 1e-9
-    assert quality.error_rate(df, rules) == (total, bad, pct)
-    good = spark.read.parquet(out)
-    assert good.count() == 8 and "error_details" not in good.columns
-
-
 def _write_csv(path, rows):
     with open(path, "w") as f:
         f.write(CSV_HEADER + "\n" + "\n".join(rows) + "\n")
@@ -291,70 +320,79 @@ def _meta(wh):
 
 def test_failed_run_marks_files_failed_and_retries(spark, tmp_path, monkeypatch):
     """The failure path: rows that trip the bronze DQ gate halt the
-    run. Every file of the run ends FAILED with the error text and
+    run before bronze changes, on the create path and on the merge
+    path. Every file of the run ends FAILED with the error text and
     keeps its checksum; a later run retries them (FAILED is never
-    skipped) and archives them once the data is fixed.
+    skipped) and archives them once the data is fixed, with no repair
+    of bronze in between.
 
     Staging applies the same rules as the gate, so the test removes
-    the staging Negative Tenure rule to let the bad rows reach bronze,
-    as a staging rule gap would."""
+    the staging Negative Tenure rule to let the bad rows reach the
+    gate, as a staging rule gap would."""
     landing = tmp_path / "landing"
     landing.mkdir()
     wh_root = str(tmp_path / "wh")
-    names = ["day_a.csv", "day_b.csv"]
+    wh = Warehouse(spark, wh_root)
+    staging_rules = quality.churn_rules
 
-    def write_day(bad_tenure):
-        for name, prefix in zip(names, ("A", "B")):
+    def write_day(names, bad_tenure):
+        for name in names:
+            prefix = name[4].upper()
             _write_csv(
                 landing / name, [_row(f"{prefix}-1", tenure=bad_tenure), _row(f"{prefix}-2")]
             )
         return {n: md5_file(str(landing / n)) for n in names}
 
-    checksums = write_day("-5")
-    staging_rules = quality.churn_rules
-    monkeypatch.setattr(
-        quality,
-        "churn_rules",
-        lambda df, **kw: [
-            r for r in staging_rules(df, **kw) if r.reason != "Negative Tenure"
-        ],
-    )
-    with pytest.raises(AssertionError, match="negative_tenure"):
-        run_warehouse(spark, wh_root, str(landing), run_id="run_1")
-    monkeypatch.undo()
+    def bronze_rows():
+        if not wh.exists("bronze", "churn_raw"):
+            return None
+        return sorted(map(tuple, wh.read("bronze", "churn_raw").collect()))
 
-    wh = Warehouse(spark, wh_root)
-    meta = _meta(wh)
-    assert sorted(meta) == names
-    for name, r in meta.items():
-        assert r["status"] == "FAILED"
-        assert "DQ checks failed" in r["error_message"]
-        assert "negative_tenure" in r["error_message"]
-        assert r["checksum_md5"] == checksums[name]
-        assert r["file_size_bytes"] == os.path.getsize(landing / name)
-        assert r["run_id"] == "run_1"
-
-    # The failed run already merged its rows into bronze: repair it
-    # with the M4 predicate delete, fix the files, run again.
-    bronze = wh.read("bronze", "churn_raw")
-    wh.overwrite_safe(
-        delete_where(bronze, F.col("tenure_in_months") < 0), "bronze", "churn_raw"
-    )
-    checksums = write_day("7")
-    report = run_warehouse(
-        spark, wh_root, str(landing), run_id="run_2", run_date="2026-08-14"
-    )
-    assert report["status"] == "SUCCESS"
-    assert report["files"] == [{"file": n, "status": "ARCHIVED"} for n in names]
-    assert report["staging"]["staged"] == 2  # A-1, B-1; A-2, B-2 already in bronze
-    assert report["gold_fact_rows"] == 4
-    meta = _meta(wh)
-    for name, r in meta.items():
-        assert (r["status"], r["checksum_md5"], r["run_id"]) == (
-            "ARCHIVED",
-            checksums[name],
-            "run_2",
+    def fail_then_retry(names, run):
+        before = bronze_rows()
+        checksums = write_day(names, "-5")
+        monkeypatch.setattr(
+            quality,
+            "churn_rules",
+            lambda df, **kw: [
+                r for r in staging_rules(df, **kw) if r.reason != "Negative Tenure"
+            ],
         )
+        with pytest.raises(AssertionError, match="negative_tenure"):
+            run_warehouse(spark, wh_root, str(landing), run_id=f"run_{run}")
+        monkeypatch.undo()
+        assert bronze_rows() == before
+
+        meta = _meta(wh)
+        for name in names:
+            r = meta[name]
+            assert r["status"] == "FAILED"
+            assert "DQ checks failed" in r["error_message"]
+            assert "negative_tenure" in r["error_message"]
+            assert r["checksum_md5"] == checksums[name]
+            assert r["file_size_bytes"] == os.path.getsize(landing / name)
+            assert r["run_id"] == f"run_{run}"
+
+        checksums = write_day(names, "7")
+        report = run_warehouse(
+            spark, wh_root, str(landing), run_id=f"run_{run + 1}", run_date="2026-08-14"
+        )
+        assert report["status"] == "SUCCESS"
+        assert report["files"] == [{"file": n, "status": "ARCHIVED"} for n in names]
+        assert report["staging"]["staged"] == 4
+        meta = _meta(wh)
+        for name in names:
+            assert (meta[name]["status"], meta[name]["checksum_md5"], meta[name]["run_id"]) == (
+                "ARCHIVED",
+                checksums[name],
+                f"run_{run + 1}",
+            )
+        return report
+
+    # Create path: no bronze yet, and none after the failed run.
+    assert fail_then_retry(["day_a.csv", "day_b.csv"], 1)["gold_fact_rows"] == 4
+    # Merge path, over the bronze the retry above created.
+    assert fail_then_retry(["day_c.csv", "day_d.csv"], 3)["gold_fact_rows"] == 8
 
 
 def test_dim_keys_dense_stable_and_null_safe(spark, tmp_path):

@@ -245,13 +245,11 @@ def test_lsh_multiprobe_recall_dominates_single_table(spark):
     assert recall_multi >= 0.12  # model predicts ~0.15; generous floor
 
 
-def test_lineage_annotations_no_python_udfs(spark, sf_dir):
+def test_lineage_annotations_no_python_udfs(catalog_plans):
     """Guard: the relational+text catalog must stay UDF-free (plans
     show no BatchEvalPython / PythonUDF nodes)."""
-    from teleco_etl_pipeline_spark.plans.registry import all_queries
-
-    for name, q in all_queries().items():
-        plan = q.build(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    for name, (_, plan, err) in catalog_plans.items():
+        assert err is None, f"{name}: {err}"
         assert "BatchEvalPython" not in plan, f"{name} uses a Python UDF"
 
 

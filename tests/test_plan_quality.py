@@ -204,17 +204,18 @@ SCALAR_BROADCASTS = {
 }
 
 
-def test_no_cartesian_or_nested_loop_anywhere(spark, sf_dir):
+def test_no_cartesian_or_nested_loop_anywhere(catalog_plans):
     """No query in the catalog may plan a cartesian product or a
     non-broadcast nested-loop join (except declared all-pairs
     baselines and 1-row scalar broadcasts). Collects ALL offenders
     before failing — the round-6 lesson: the first offender masked
     the rest."""
     offenders = []
-    for name, q in all_queries().items():
+    for name, (_, plan, err) in catalog_plans.items():
         if name in ALLPAIRS_BASELINES or name in SCALAR_BROADCASTS:
             continue
-        plan = q.build(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        if err:
+            offenders.append(f"{name}: {err}")
         if "CartesianProduct" in plan:
             offenders.append(f"{name}: CartesianProduct")
         if "BroadcastNestedLoopJoin" in plan:
