@@ -1,11 +1,11 @@
 """Forced-distributed scaling rows (r14; r13 verdict ask #2).
 
-The r13 sized gates (driver peels `_DRIVER_GRAPH_MAX_EDGES`, driver
-union-find `_DRIVER_CC_MAX_EDGES`, the superstep broadcast gates) all
-FIRE at every committed SF, so the bench/scaling artifacts stopped
-exercising the distributed fallbacks — the exact paths that run at
-100 TB. This harness measures them directly, in ONE process so every
-comparison is same-box interleaved:
+The sized gates (the driver twins' `graph.DRIVER_MAX_EDGES`, the
+superstep broadcast gates) all FIRE at every committed SF, so the
+bench/scaling artifacts stopped exercising the distributed
+fallbacks — the exact paths that run at 100 TB. This harness measures
+them directly, in ONE process so every comparison is same-box
+interleaved:
 
 - mode ``forced_dist``: driver-peel gates forced off (monkeypatch, the
   equality-test trick) → the distributed peel/CC loops run. (The r14
@@ -37,7 +37,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from teleco_etl_pipeline_spark.operators import dedup, graph
+from teleco_etl_pipeline_spark.operators import graph
 from teleco_etl_pipeline_spark.plans.registry import all_queries
 from teleco_etl_pipeline_spark.session import get_spark
 
@@ -67,17 +67,14 @@ SUPERSTEPS = [
 ]
 
 _REAL_FITS = graph._fits_broadcast
-_REAL_GRAPH_GATE = graph._DRIVER_GRAPH_MAX_EDGES
-_REAL_CC_GATE = dedup._DRIVER_CC_MAX_EDGES
+_REAL_GATE = graph.DRIVER_MAX_EDGES
 
 
 def set_mode(mode: str) -> None:
     graph._fits_broadcast = _REAL_FITS
-    graph._DRIVER_GRAPH_MAX_EDGES = _REAL_GRAPH_GATE
-    dedup._DRIVER_CC_MAX_EDGES = _REAL_CC_GATE
+    graph.DRIVER_MAX_EDGES = _REAL_GATE
     if mode in ("forced_dist", "forced_dist_shuffled"):
-        graph._DRIVER_GRAPH_MAX_EDGES = -1
-        dedup._DRIVER_CC_MAX_EDGES = -1
+        graph.DRIVER_MAX_EDGES = -1
     if mode == "forced_dist_shuffled":
         graph._fits_broadcast = lambda n_rows, row_bytes: False
 
@@ -86,7 +83,17 @@ def main() -> int:
     out_path = None
     args = sys.argv[1:]
     if args and args[0] == "--json":
+        if len(args) < 2:
+            print("usage: bench_forced_distributed.py [--json OUT]", file=sys.stderr)
+            return 2
         out_path = args[1]
+    try:
+        return _bench(out_path)
+    finally:
+        set_mode("default")
+
+
+def _bench(out_path: str | None) -> int:
     spark = get_spark(app_name="forced-distributed-scaling")
     spark.sparkContext.setLogLevel("ERROR")
     registry = all_queries()

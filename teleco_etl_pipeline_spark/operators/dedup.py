@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from teleco_etl_pipeline_spark.operators.graph import driver_edges
 from teleco_etl_pipeline_spark.operators.text import normalized_text, shingles, tokens
 from teleco_etl_pipeline_spark.plans.registry import query
 from teleco_etl_pipeline_spark.sources.tables import load_table
@@ -951,12 +952,6 @@ def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-# Driver union-find gate for neardup_clusters (module-level so tests
-# can force the superstep path): the sized-default bound on how many
-# near-dup edges one driver comfortably resolves in-memory.
-_DRIVER_CC_MAX_EDGES = 65536
-
-
 def neardup_clusters(
     pairs: DataFrame,
     docs: DataFrame,
@@ -1004,37 +999,22 @@ def neardup_clusters(
     """
     spark = pairs.sparkSession
     # ONE materialization of the candidate-pair pipeline: the gate
-    # count, the collect (driver path) or the per-round edge scans
-    # (loop path) must not each re-run the guarded shingle self-join
-    # behind a lazy `pairs`. Pair lists are the SMALL output of that
-    # pipeline (bounded by the dedup rate), the same frame the
-    # previous shape cached as `edges` at 2x the rows.
+    # collect (driver path) or the per-round edge scans (loop path)
+    # must not each re-run the guarded shingle self-join behind a
+    # lazy `pairs`. Pair lists are the SMALL output of that pipeline
+    # (bounded by the dedup rate), the same frame the previous shape
+    # cached as `edges` at 2x the rows.
     sym = pairs.select(
         F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst")
     ).localCheckpoint(eager=True)
-    # SIZED default (r13 optimization; the PPJoin df-cap / sized-ANN
-    # pattern): the label loop below costs ~5 scheduled jobs per
-    # round regardless of graph size — at real dedup rates the
-    # edge-induced subgraph is a few hundred to a few thousand edges
-    # and the loop is pure orchestration latency (measured 2.4 s for
-    # a 258-edge graph at sf0.1). When one bounded count shows the
-    # edge list fits comfortably on the driver, resolve the
-    # components with a union-find over the collected edges — the
-    # SAME min-label-per-component result (pinned by
-    # test_neardup_cc_driver_matches_superstep_loop) — and skip the
-    # loop; graphs past the gate take the superstep path unchanged.
-    n_edges = sym.count()
-    # Driver path requires an INTEGRAL id column (the union-find
-    # coerces with int() and rebuilds the label frame in the input's
-    # own type); non-integer id frames fall through to the superstep
-    # loop, which is type-generic (r13 ADVICE).
-    _id_type = sym.schema["src"].dataType.simpleString()
-    if n_edges <= _DRIVER_CC_MAX_EDGES and _id_type in {
-        "tinyint",
-        "smallint",
-        "int",
-        "bigint",
-    }:
+    # Driver twin (r13): at real dedup rates the edge-induced subgraph
+    # is a few hundred to a few thousand edges (the loop measured
+    # 2.4 s for a 258-edge graph at sf0.1). A union-find over the
+    # collected edges gives the SAME min-label-per-component result
+    # (pinned by test_neardup_cc_driver_matches_superstep_loop);
+    # non-integer ids take the type-generic loop.
+    es = driver_edges(sym, "src", "dst")
+    if es is not None:
         parent: dict[int, int] = {}
 
         def find(x: int) -> int:
@@ -1045,8 +1025,7 @@ def neardup_clusters(
                 parent[x], x = r, parent[x]
             return r
 
-        for row in sym.collect():
-            u, v = int(row["src"]), int(row["dst"])
+        for u, v in es:
             parent.setdefault(u, u)
             parent.setdefault(v, v)
             ru, rv = find(u), find(v)
@@ -1057,8 +1036,10 @@ def neardup_clusters(
             r = find(node)
             comp_min[r] = min(comp_min.get(r, node), node)
         lab_rows = [(node, comp_min[find(node)]) for node in sorted(parent)]
+        # the label frame keeps the input's own integral id type
+        id_type = sym.schema["src"].dataType.simpleString()
         labels = spark.createDataFrame(
-            lab_rows, f"node {_id_type}, label {_id_type}"
+            lab_rows, f"node {id_type}, label {id_type}"
         )
         return _neardup_cluster_report(labels, docs, id_col)
     # Symmetrize: min-labels must flow both directions of each edge.

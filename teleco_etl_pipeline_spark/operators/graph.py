@@ -35,7 +35,11 @@ d_num·sum multiply stays < 10^14 ≪ 2^63.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections import Counter
+from itertools import chain
+
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.types import IntegralType
 
 from teleco_etl_pipeline_spark.plans.registry import query
 from teleco_etl_pipeline_spark.sources.tables import load_table
@@ -49,22 +53,73 @@ _TOPK = 20
 # `n <= 2_000_000` row constants — r13 verdict issue #2): a superstep
 # frame that the planner cannot size (LogicalRDD after localCheckpoint)
 # is broadcast only while rows × payload bytes stays under a sane
-# build-relation bound. 32 MiB keeps the old behaviour EXACTLY for the
-# (long, long) frames the constant was tuned on (2M × 16 B = 32 MiB)
-# while a wider frame behind the same gate now trips proportionally
-# earlier — the §3.1 guidance the row-count constant could not honour.
+# build-relation bound. 32 MiB reproduces the old 2M-row gate only for
+# 16-byte rows (2M × 16 B = 32 MiB), so every caller passes 16 — the
+# node-only BFS frames too, whose hashed relation costs far more per
+# row than their 8 payload bytes — and a wider frame behind the same
+# gate trips proportionally earlier.
 _BCAST_CAP_BYTES = 32 * 1024 * 1024
 
 
 def _fits_broadcast(n_rows: int, row_bytes: int) -> bool:
     """True when a bounded driver count says an unsized (checkpointed)
-    frame of ``n_rows`` rows at ``row_bytes`` payload bytes per row is
-    safe to pin as the broadcast side of a superstep join; callers fall
-    back to the shuffled join past the gate (the sized-default
-    pattern). ``row_bytes`` is the caller's per-row payload width: 16
-    for the (long, long) rank/label/edge frames, 8 for node-only
-    frontier sets."""
+    frame of ``n_rows`` rows at ``row_bytes`` bytes per row is safe to
+    pin as the broadcast side of a superstep join; callers fall back to
+    the shuffled join past the gate (the sized-default pattern)."""
     return n_rows * row_bytes <= _BCAST_CAP_BYTES
+
+
+# The one driver-twin gate (tests force the distributed paths with -1).
+DRIVER_MAX_EDGES = 65536
+
+
+def driver_edges(
+    df: DataFrame, u: str = "u", v: str = "v"
+) -> list[tuple[int, int]] | None:
+    """The edge list of ``df`` as Python int pairs when it is small
+    enough to solve on the driver, else ``None``.
+
+    Several graph queries have a driver twin: below the gate the
+    distributed plan (a peel or label loop of ~5-10 scheduled jobs per
+    round, or a full triangle enumeration) is orchestration-dominated,
+    and one collected edge list yields the identical integers. The
+    gate is one bounded collect, ``limit(DRIVER_MAX_EDGES + 1)``
+    (Spark's take runs 1-2 jobs: one partition first, then scaled
+    up), so driver memory stays bounded by construction and no
+    separate count job runs. Ids must be integral: the twins coerce
+    with ``int()``, so any other id type returns ``None`` for the
+    type-generic distributed path. Callers cache or checkpoint ``df``
+    first so the fall-through computes the edge list once; on the
+    driver path that cache is released here."""
+    if not all(isinstance(df.schema[c].dataType, IntegralType) for c in (u, v)):
+        return None
+    rows = df.select(u, v).limit(DRIVER_MAX_EDGES + 1).collect()
+    if len(rows) > DRIVER_MAX_EDGES:
+        return None
+    df.unpersist()
+    return [(int(a), int(b)) for a, b in rows]
+
+
+def _degrees(es: list[tuple[int, int]]) -> dict[int, int]:
+    """Per-node degree of an undirected driver edge list."""
+    return Counter(chain.from_iterable(es))
+
+
+def _pair_density(x: int, n: int) -> float:
+    """2x/(n(n−1)) with the shared ROUND guard, rounded half-up to 6
+    places: the driver mirror of :func:`_pair_density_col`, op for op,
+    so the twins emit bit-identical doubles."""
+    from teleco_etl_pipeline_spark.operators.quantiles import half_up
+
+    return half_up(2.0 * float(x) / (float(n) * (float(n) - 1)) + 1e-9, 6)
+
+
+def _pair_density_col(x: Column, n: Column) -> Column:
+    """Spark side of :func:`_pair_density`."""
+    from pyspark.sql import functions as F
+
+    nd = n.cast("double")
+    return F.round(2.0 * x / (nd * (nd - 1)) + F.lit(1e-9), 6)
 
 
 def _pagerank_sql(iters: int, scale: int, d_num: int, d_den: int, topk: int) -> str:
@@ -705,6 +760,11 @@ def _degree_and_corners(edges):
     the suite's clearCache()."""
     from pyspark.sql import functions as F
 
+    # The driver_edges gate reads at most DRIVER_MAX_EDGES + 1 rows, so
+    # past it the edge cache is at most partly loaded; only a loaded
+    # cache gives the planner the list's real size for the degree
+    # joins (without it, 2-4 more AQE jobs at sf0.01 and sf0.1).
+    edges.count()
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))
@@ -753,10 +813,9 @@ def _driver_triangle_stats(
     """Exact per-node (degree, triangle-membership count) over a
     collected undirected edge list (u < v, no duplicates) — the
     driver twin of :func:`_degree_and_corners`'s corner aggregate,
-    used under the ``_DRIVER_GRAPH_MAX_EDGES`` gate (the ktruss /
-    kcore r13 pattern). All integers, so equality with the
-    distributed enumeration is exact (pinned by
-    test_triangle_driver_matches_distributed).
+    used under the ``DRIVER_MAX_EDGES`` gate (:func:`driver_edges`).
+    All integers, so equality with the distributed enumeration is
+    exact (pinned by test_triangle_driver_matches_distributed).
 
     Two regimes: a dense float64 adjacency matmul when the node set
     is small (the co-fulfillment graph is near-complete, so per-node
@@ -766,10 +825,7 @@ def _driver_triangle_stats(
     sparse volume-scaled graphs)."""
     import numpy as np
 
-    deg: dict[int, int] = {}
-    for u, v in es:
-        deg[u] = deg.get(u, 0) + 1
-        deg[v] = deg.get(v, 0) + 1
+    deg = _degrees(es)
     nodes = sorted(deg)
     if len(nodes) <= 4096:
         idx = {n: i for i, n in enumerate(nodes)}
@@ -808,15 +864,12 @@ def q_supplier_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     edges = _cofulfill_edges_spark(spark, sf_dir).cache()
-    # SIZED default (r14, the ktruss/kcore r13 pattern): the
-    # distributed path materializes the full triangle list (~|V|³/6
-    # rows on this near-complete graph — 4.9M rows at sf0.1) to count
-    # corners; under the gate one collected edge list yields the
-    # identical integer counts without enumerating a single triangle.
-    # Distributed path unchanged past the gate.
-    if edges.count() <= _DRIVER_GRAPH_MAX_EDGES:
-        es = [(int(r["u"]), int(r["v"])) for r in edges.collect()]
-        edges.unpersist()
+    # Driver twin (r14): the distributed path materializes the full
+    # triangle list (~|V|³/6 rows on this near-complete graph — 4.9M
+    # rows at sf0.1) to count corners; the twin counts the same
+    # integers without enumerating a single triangle.
+    es = driver_edges(edges)
+    if es is not None:
         _, tri = _driver_triangle_stats(es)
         rows = sorted(
             ((n, t) for n, t in tri.items() if t > 0),
@@ -906,27 +959,18 @@ def q_supplier_clustering_coefficient(
     from pyspark.sql import functions as F
 
     edges = _cofulfill_edges_spark(spark, sf_dir).cache()
-    # SIZED default (r14): same gate + exact integer (deg, T_v) twin
-    # as supplier_triangle_count; the double coefficient mirrors the
-    # Spark expression op-for-op (2.0·T / (d·(d−1)) + 1e-9, then the
-    # half-up ROUND replica from operators/quantiles.half_up), so the
-    # emitted doubles are bit-identical (pinned by
+    # Driver twin (r14): supplier_triangle_count's exact integer
+    # (deg, T_v) plus the shared density mirror, so the emitted doubles
+    # are bit-identical (pinned by
     # test_clustering_driver_matches_distributed).
-    if edges.count() <= _DRIVER_GRAPH_MAX_EDGES:
-        from teleco_etl_pipeline_spark.operators.quantiles import half_up
-
-        es = [(int(r["u"]), int(r["v"])) for r in edges.collect()]
-        edges.unpersist()
+    es = driver_edges(edges)
+    if es is not None:
         dg, tri = _driver_triangle_stats(es)
-        rows = []
-        for n, d in dg.items():
-            if d < 2:
-                continue
-            t = tri.get(n, 0)
-            c = half_up(
-                (2.0 * float(t)) / (float(d) * (float(d) - 1)) + 1e-9, 6
-            )
-            rows.append((n, d, t, c))
+        rows = [
+            (n, d, tri[n], _pair_density(tri[n], d))
+            for n, d in dg.items()
+            if d >= 2
+        ]
         rows.sort(key=lambda r: (-r[3], r[0]))
         return spark.createDataFrame(
             rows[:_TRI_TOPK],
@@ -934,7 +978,6 @@ def q_supplier_clustering_coefficient(
         ).orderBy(F.desc("clustering"), "s_suppkey")
     deg, corners = _degree_and_corners(edges)
     per_node = corners.groupBy("node").agg(F.count(F.lit(1)).alias("t"))
-    degd = F.col("deg").cast("double")
     return (
         deg.filter(F.col("deg") >= 2)
         .join(per_node, "node", "left")
@@ -942,11 +985,8 @@ def q_supplier_clustering_coefficient(
             F.col("node").cast("long").alias("s_suppkey"),
             F.col("deg").cast("long").alias("degree"),
             F.coalesce(F.col("t"), F.lit(0)).cast("long").alias("n_triangles"),
-            F.round(
-                2.0 * F.coalesce(F.col("t"), F.lit(0))
-                / (degd * (degd - 1))
-                + F.lit(1e-9),
-                6,
+            _pair_density_col(
+                F.coalesce(F.col("t"), F.lit(0)), F.col("deg")
             ).alias("clustering"),
         )
         .orderBy(F.col("clustering").desc(), "s_suppkey")
@@ -984,23 +1024,15 @@ def q_supplier_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # loss drops localCheckpoint blocks) — same shape, durable
     # storage.
     edges = _cofulfill_edges_spark(spark, sf_dir).cache()
-    # SIZED default (r13, the part_ktruss_peel pattern): under the
-    # gate, peel on the driver — per round keep nodes with degree
-    # ≥ k, keep edges with both endpoints kept, report
-    # (iter, |keep|, |edges'|): the identical integers the
-    # distributed rounds below compute (pinned by
-    # test_kcore_driver_matches_superstep_loop).
-    n_edges0 = edges.count()
-    if n_edges0 <= _DRIVER_GRAPH_MAX_EDGES:
-        es = [(int(r["u"]), int(r["v"])) for r in edges.collect()]
-        edges.unpersist()
+    # Driver twin (r13): per round keep nodes with degree ≥ k, keep
+    # edges with both endpoints kept, report (iter, |keep|, |edges'|):
+    # the identical integers the distributed rounds below compute
+    # (pinned by test_kcore_driver_matches_superstep_loop).
+    es = driver_edges(edges)
+    if es is not None:
         rows = []
         for i in range(1, _KCORE_ITERS + 1):
-            deg: dict[int, int] = {}
-            for u, v in es:
-                deg[u] = deg.get(u, 0) + 1
-                deg[v] = deg.get(v, 0) + 1
-            keep = {n for n, d in deg.items() if d >= _KCORE_K}
+            keep = {n for n, d in _degrees(es).items() if d >= _KCORE_K}
             es = [(u, v) for u, v in es if u in keep and v in keep]
             rows.append((i, len(keep), len(es)))
         return spark.createDataFrame(
@@ -1690,10 +1722,10 @@ def q_trade_graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         # hop (the PPR superstep lesson, OPTIMIZATION_r13.md). Falls
         # back to the shuffled join when a frontier outgrows a sane
         # broadcast.
-        fb = F.broadcast(f) if _fits_broadcast(f.count(), 8) else f
+        fb = F.broadcast(f) if _fits_broadcast(f.count(), 16) else f
         vb = (
             F.broadcast(visited)
-            if _fits_broadcast(visited.count(), 8)  # node-only frames
+            if _fits_broadcast(visited.count(), 16)
             else visited
         )
         nxt = (
@@ -1878,7 +1910,7 @@ def q_trade_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # suppliers outnumber customers can never broadcast an oversized
     # auth frame through the hub-side gate.
     bcast_hub = _fits_broadcast(hub.count(), 16)  # (c, h) longs
-    bcast_auth: bool | None = None  # known after the first auth _norm
+    n_auth0: int | None = None  # latched by the first auth _norm
     auth = None
     for _ in range(_HITS_ITERS):
         hside = F.broadcast(hub) if bcast_hub else hub
@@ -1886,8 +1918,12 @@ def q_trade_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             pairs.join(hside, "c").groupBy("s").agg(F.sum("h").alias("r"))
         )
         auth, n_auth = _norm(araw, "s", "r", "a")
-        if bcast_auth is None:
+        if n_auth0 is None:
+            n_auth0 = n_auth
             bcast_auth = _fits_broadcast(n_auth, 16)  # (s, a) longs
+        # The latch holds because _norm is row-preserving: the auth
+        # node set (every traded supplier) is iteration-invariant.
+        assert n_auth == n_auth0, "auth node set changed; bcast_auth is stale"
         aside = F.broadcast(auth) if bcast_auth else auth
         hraw = (
             pairs.join(aside, "s").groupBy("c").agg(F.sum("a").alias("r"))
@@ -2087,37 +2123,17 @@ def q_part_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     edges = _part_edges_spark(spark, sf_dir).cache()
-    # SIZED default (r14, the ktruss/kcore pattern): below the gate
-    # the whole phi(k) curve is five integer folds over one collected
-    # edge list — the distributed path's ×5 node and edge fan-outs
-    # plus two joins are pure orchestration at volume-scaled sizes.
-    # phi mirrors the Spark expression op-for-op with the half-up
-    # ROUND replica; distributed path unchanged past the gate
-    # (pinned by test_richclub_driver_matches_distributed).
-    if edges.count() <= _DRIVER_GRAPH_MAX_EDGES:
-        from teleco_etl_pipeline_spark.operators.quantiles import half_up
-
-        es = [(int(r["u"]), int(r["v"])) for r in edges.collect()]
-        edges.unpersist()
-        dg: dict[int, int] = {}
-        for u, v in es:
-            dg[u] = dg.get(u, 0) + 1
-            dg[v] = dg.get(v, 0) + 1
+    # Driver twin (r14): the whole phi(k) curve is five integer folds
+    # over the edge list plus the shared density mirror (pinned by
+    # test_richclub_driver_matches_distributed).
+    es = driver_edges(edges)
+    if es is not None:
+        dg = _degrees(es)
         rows = []
         for k in range(1, 6):
             nn = sum(1 for d in dg.values() if d > k)
             ne = sum(1 for u, v in es if dg[u] > k and dg[v] > k)
-            phi = (
-                half_up(
-                    (2.0 * float(ne))
-                    / (float(nn) * (float(nn) - 1))
-                    + 1e-9,
-                    6,
-                )
-                if nn >= 2
-                else 0.0
-            )
-            rows.append((k, nn, ne, phi))
+            rows.append((k, nn, ne, _pair_density(ne, nn) if nn >= 2 else 0.0))
         return spark.createDataFrame(
             rows, "k int, n_nodes long, n_edges long, phi double"
         ).orderBy("k")
@@ -2159,14 +2175,8 @@ def q_part_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("n_edges", F.lit(0)).cast("long").alias("n_edges"),
             F.when(
                 F.coalesce("n_nodes", F.lit(0)) >= 2,
-                F.round(
-                    2.0 * F.coalesce("n_edges", F.lit(0))
-                    / (
-                        F.col("n_nodes").cast("double")
-                        * (F.col("n_nodes").cast("double") - 1)
-                    )
-                    + F.lit(1e-9),
-                    6,
+                _pair_density_col(
+                    F.coalesce("n_edges", F.lit(0)), F.col("n_nodes")
                 ),
             )
             .otherwise(F.lit(0.0))
@@ -2204,11 +2214,6 @@ def q_part_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _TRUSS_K = 4
 _TRUSS_ITERS = 3
-# Driver-side peel gate (module-level so tests can force the
-# distributed path) — the neardup_clusters _DRIVER_CC_MAX_EDGES
-# pattern: below this bound the peel loop is orchestration-dominated
-# and one collected edge list resolves it exactly.
-_DRIVER_GRAPH_MAX_EDGES = 65536
 
 
 def _ktruss_body(k: int, iters: int) -> str:
@@ -2296,18 +2301,14 @@ def q_part_ktruss_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     prev = _part_edges_spark(spark, sf_dir).localCheckpoint(eager=True)
-    # SIZED default (r13, the neardup_clusters union-find pattern):
-    # each distributed peel round is ~10 scheduled jobs regardless of
-    # graph size, and the volume-scaled edge cut keeps this graph a
-    # few thousand edges at every committed SF — pure orchestration.
-    # Under the gate, peel on the driver with set-intersection
-    # support (supp(u,v) = |adj(u) ∩ adj(v)|, the identical integer
-    # the oriented-wedge enumeration counts; pinned by
-    # test_ktruss_driver_matches_superstep_loop); past the gate, the
-    # distributed rounds below are unchanged.
-    n_edges0 = prev.count()
-    if n_edges0 <= _DRIVER_GRAPH_MAX_EDGES:
-        edges = {(int(r["u"]), int(r["v"])) for r in prev.collect()}
+    # Driver twin (r13): the volume-scaled edge cut keeps this graph a
+    # few thousand edges at every committed SF. Set-intersection
+    # support supp(u,v) = |adj(u) ∩ adj(v)| is the identical integer
+    # the oriented-wedge enumeration counts (pinned by
+    # test_ktruss_driver_matches_superstep_loop).
+    es = driver_edges(prev)
+    if es is not None:
+        edges = set(es)
         rows = []
         for i in range(1, _TRUSS_ITERS + 1):
             adj: dict[int, set] = {}

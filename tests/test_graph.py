@@ -332,3 +332,21 @@ def test_assortativity_bounded_on_testdata(spark, sf_dir):
     )
     assert -1.0 - 1e-9 <= r.assortativity <= 1.0 + 1e-9
     assert r.n_directed_edges % 2 == 0  # both orientations present
+
+
+def test_bfs_broadcast_gates_size_rows_at_16_bytes(spark, sf_dir, monkeypatch):
+    """The 32 MiB broadcast cap reproduces the tuned 2M-row gate only
+    at 16 bytes per row; BFS's node-only frontier and visited frames
+    must not claim 8 and double it."""
+    from teleco_etl_pipeline_spark.operators import graph
+
+    widths = []
+    real = graph._fits_broadcast
+
+    def recording(n_rows, row_bytes):
+        widths.append(row_bytes)
+        return real(n_rows, row_bytes)
+
+    monkeypatch.setattr(graph, "_fits_broadcast", recording)
+    graph.q_trade_graph_bfs_levels(spark, sf_dir)
+    assert widths and set(widths) == {16}

@@ -440,9 +440,15 @@ def test_neardup_clusters_transitive_closure(spark):
     assert [d for d in out if out[d]["is_keeper"] == 1] == [1, 4, 6]
 
 
-def test_neardup_clusters_long_chain_converges_in_log_rounds(spark):
+def test_neardup_clusters_long_chain_converges_in_log_rounds(spark, monkeypatch):
+    import pytest
+
+    from teleco_etl_pipeline_spark.operators import graph
     from teleco_etl_pipeline_spark.operators.dedup import neardup_clusters
 
+    # Force the superstep loop: 39 edges would otherwise take the
+    # driver union-find, which converges by construction.
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", -1)
     n = 40  # diameter 39 — plain propagation would need 39 rounds;
     # pointer jumping must close it within 8 (2^8 >> 40).
     docs = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
@@ -451,6 +457,9 @@ def test_neardup_clusters_long_chain_converges_in_log_rounds(spark):
     )
     out = neardup_clusters(pairs, docs, max_iter=8).collect()
     assert all(r["cluster_id"] == 0 and r["cluster_size"] == n for r in out)
+    # ...and the bound has teeth: 3 rounds cannot close a 39-hop chain.
+    with pytest.raises(RuntimeError, match="did not converge"):
+        neardup_clusters(pairs, docs, max_iter=3)
 
 
 def test_chunk_documents_spans_and_content(spark):
@@ -500,11 +509,11 @@ def test_chunk_documents_rejects_bad_overlap(spark):
 def test_neardup_clusters_raises_on_nonconvergence(spark, monkeypatch):
     import pytest
 
-    from teleco_etl_pipeline_spark.operators import dedup
+    from teleco_etl_pipeline_spark.operators import dedup, graph
 
     # Force the superstep path (the driver union-find always
     # converges); the loud nonconvergence guard is loop behavior.
-    monkeypatch.setattr(dedup, "_DRIVER_CC_MAX_EDGES", -1)
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", -1)
     docs = spark.createDataFrame([(i,) for i in range(6)], ["doc_id"])
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(5)], ["doc_id_a", "doc_id_b"]
@@ -1970,7 +1979,7 @@ def test_neardup_cc_driver_matches_superstep_loop(spark, monkeypatch):
     """The sized driver union-find (r13 optimization) must produce the
     EXACT frame the superstep min-label loop produces — chain (tests
     transitivity), clique, pair, and singleton shapes."""
-    from teleco_etl_pipeline_spark.operators import dedup
+    from teleco_etl_pipeline_spark.operators import dedup, graph
 
     docs = spark.createDataFrame([(i,) for i in range(1, 12)], ["doc_id"])
     pairs = spark.createDataFrame(
@@ -1981,7 +1990,7 @@ def test_neardup_cc_driver_matches_superstep_loop(spark, monkeypatch):
     driver = sorted(
         tuple(r) for r in dedup.neardup_clusters(pairs, docs).collect()
     )
-    monkeypatch.setattr(dedup, "_DRIVER_CC_MAX_EDGES", -1)
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", -1)
     loop = sorted(
         tuple(r) for r in dedup.neardup_clusters(pairs, docs).collect()
     )
@@ -2000,7 +2009,7 @@ def test_ktruss_driver_matches_superstep_loop(spark, monkeypatch, tmp_path):
     driver = [
         tuple(r) for r in graph.q_part_ktruss_peel(spark, sf_dir).collect()
     ]
-    monkeypatch.setattr(graph, "_DRIVER_GRAPH_MAX_EDGES", -1)
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", -1)
     loop = [
         tuple(r) for r in graph.q_part_ktruss_peel(spark, sf_dir).collect()
     ]
@@ -2016,7 +2025,7 @@ def test_kcore_driver_matches_superstep_loop(spark, monkeypatch):
     driver = [
         tuple(r) for r in graph.q_supplier_kcore_peel(spark, sf_dir).collect()
     ]
-    monkeypatch.setattr(graph, "_DRIVER_GRAPH_MAX_EDGES", -1)
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", -1)
     loop = [
         tuple(r) for r in graph.q_supplier_kcore_peel(spark, sf_dir).collect()
     ]
@@ -2033,7 +2042,7 @@ def test_triangle_driver_matches_distributed(spark, monkeypatch):
         tuple(r)
         for r in graph.q_supplier_triangle_count(spark, sf_dir).collect()
     ]
-    monkeypatch.setattr(graph, "_DRIVER_GRAPH_MAX_EDGES", -1)
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", -1)
     dist = [
         tuple(r)
         for r in graph.q_supplier_triangle_count(spark, sf_dir).collect()
@@ -2053,7 +2062,7 @@ def test_clustering_driver_matches_distributed(spark, monkeypatch):
             spark, sf_dir
         ).collect()
     ]
-    monkeypatch.setattr(graph, "_DRIVER_GRAPH_MAX_EDGES", -1)
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", -1)
     dist = [
         tuple(r)
         for r in graph.q_supplier_clustering_coefficient(
@@ -2072,11 +2081,27 @@ def test_richclub_driver_matches_distributed(spark, monkeypatch):
     driver = [
         tuple(r) for r in graph.q_part_rich_club(spark, sf_dir).collect()
     ]
-    monkeypatch.setattr(graph, "_DRIVER_GRAPH_MAX_EDGES", -1)
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", -1)
     dist = [
         tuple(r) for r in graph.q_part_rich_club(spark, sf_dir).collect()
     ]
     assert driver == dist and len(driver) == 5
+
+
+def test_driver_edges_bounded_collect(spark, monkeypatch):
+    """The one driver-twin gate: int pairs up to the cap, None past it
+    or for non-integral ids."""
+    from teleco_etl_pipeline_spark.operators import graph
+
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 3)
+    three = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "u int, v int")
+    assert sorted(graph.driver_edges(three)) == [(1, 2), (2, 3), (3, 4)]
+    four = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5)], "u long, v long"
+    )
+    assert graph.driver_edges(four) is None
+    strs = spark.createDataFrame([("a", "b")], "src string, dst string")
+    assert graph.driver_edges(strs, "src", "dst") is None
 
 
 def test_driver_triangle_stats_regimes_agree():
