@@ -1,12 +1,12 @@
-"""Layer catalog: explicit StructType schemas for every warehouse
-table (SURVEY.md §1.2-§1.3) and path management for Parquet layers.
+"""Layer catalog: the business column list, the staging and
+metadata schemas, and path management and IO for Parquet layers.
 
 The reference keeps four Postgres schemas (public/staging, bronze,
 silver, gold) plus pipeline metadata (dags/DataWarehouse.py:37,
 dags/SQL/Bronze/DDL_BronzeTable.sql, dags/SQL/Silver/DDL_Silver_
 Table.sql, dags/SQL/Gold/DDL_gold.sql). Here each layer is a
-directory of Parquet tables; schemas are code, applied at read/write
-boundaries so drift is caught early.
+directory of Parquet tables. ``Warehouse.read`` and ``write`` apply
+no schema: each table keeps the schema of the frame that wrote it.
 """
 
 from __future__ import annotations
@@ -14,7 +14,8 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from teleco_etl_pipeline_spark.operators.upsert import (
@@ -67,28 +68,11 @@ _BUSINESS_FIELDS: list[tuple[str, T.DataType]] = [
     ("churn_reason", T.StringType()),
 ]
 
-BUSINESS_SCHEMA = T.StructType(
-    [T.StructField(n, t, True) for n, t in _BUSINESS_FIELDS]
-)
-
 # Staging reads everything as string (schema-on-read tolerance,
 # DataWarehouse.py:615 pandas inference ~ permissive).
 STAGING_SCHEMA = T.StructType(
     [T.StructField(n, T.StringType(), True) for n, _ in _BUSINESS_FIELDS]
 )
-
-# Bronze = business cols + audit cols (DDL_BronzeTable.sql:42-44).
-BRONZE_SCHEMA = T.StructType(
-    list(BUSINESS_SCHEMA.fields)
-    + [
-        T.StructField("created_at", T.TimestampType(), True),
-        T.StructField("updated_at", T.TimestampType(), True),
-        T.StructField("record_type", T.StringType(), True),
-    ]
-)
-
-# Silver = cleaned business cols, no audit (DDL_Silver_Table.sql:3-38).
-SILVER_SCHEMA = BUSINESS_SCHEMA
 
 META_SCHEMA = T.StructType(
     [
@@ -114,6 +98,18 @@ WATERMARK_SCHEMA = T.StructType(
 )
 
 LAYERS = ("staging", "bronze", "silver", "gold", "meta", "quarantine")
+
+
+def _write_counted(df: DataFrame, write) -> int:
+    """Run ``write(df)`` and return the rows it wrote, counted by an
+    observation on ``df`` during the write job itself (no second
+    query). ``df`` must be the frame the write's final stage consumes,
+    with every exchange below it: Spark applies accumulator updates
+    exactly once only from result stages, and a job that re-runs a
+    shuffle's child (a range sampler) would count rows twice."""
+    obs = Observation()
+    write(df.observe(obs, F.count(F.lit(1)).alias("rows")))
+    return obs.get["rows"]
 
 
 @dataclass
@@ -147,12 +143,16 @@ class Warehouse:
         heal_interrupted_swap(path)
         return self.spark.read.parquet(path)
 
-    def write(self, df: DataFrame, layer: str, table: str, mode: str = "overwrite") -> None:
-        df.write.mode(mode).parquet(self.path(layer, table))
+    def write(self, df: DataFrame, layer: str, table: str, mode: str = "overwrite") -> int:
+        """Write ``df`` to a table; returns the rows this call wrote."""
+        path = self.path(layer, table)
+        return _write_counted(df, lambda d: d.write.mode(mode).parquet(path))
 
-    def overwrite_safe(self, df: DataFrame, layer: str, table: str) -> None:
-        """Overwrite a table that ``df`` may lazily read from."""
-        safe_overwrite(df, self.path(layer, table))
+    def overwrite_safe(self, df: DataFrame, layer: str, table: str) -> int:
+        """Overwrite a table that ``df`` may lazily read from; returns
+        the rows written."""
+        path = self.path(layer, table)
+        return _write_counted(df, lambda d: safe_overwrite(d, path))
 
     def upsert_into(
         self,
@@ -180,7 +180,7 @@ class Warehouse:
         zcols: list,
         n_files: int = 16,
         bits: int = 8,
-    ) -> None:
+    ) -> int:
         """Overwrite a layer table Z-order-clustered on ``zcols`` —
         the multi-dimensional data-skipping layout
         (``operators/layout.py``): range-partition + sort on the
@@ -194,13 +194,16 @@ class Warehouse:
         sizes output files: pick ~ table size / 128 MB at the target
         SF (the clustering shuffle is the same single exchange a
         plain sorted write would pay). Atomic like
-        :meth:`overwrite_safe`."""
+        :meth:`overwrite_safe`, and returns the rows written."""
         from teleco_etl_pipeline_spark.operators.layout import (
             zorder_repartition,
         )
 
+        # Counted above the range exchange, not on ``df``: its sampler
+        # job re-runs everything below it.
         clustered = zorder_repartition(df, zcols, n_files, bits)
-        safe_overwrite(clustered, self.path(layer, table))
+        path = self.path(layer, table)
+        return _write_counted(clustered, lambda d: safe_overwrite(d, path))
 
     # -- bucketed tables: shuffle elimination for repeated key joins --
 

@@ -27,9 +27,20 @@ import os
 import shutil
 import tempfile
 from collections.abc import Sequence
+from functools import reduce
+from operator import and_
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def null_safe_eq(left: str, right: str, cols: Sequence[str]) -> Column:
+    """AND of ``left.c <=> right.c`` over ``cols`` (``left``/``right``
+    are frame aliases): a join condition under which NULL matches
+    NULL, SQL ``IS NOT DISTINCT FROM``."""
+    return reduce(
+        and_, [F.col(f"{left}.{c}").eqNullSafe(F.col(f"{right}.{c}")) for c in cols]
+    )
 
 
 def merge_upsert(
@@ -60,11 +71,7 @@ def merge_upsert(
     s = source.withColumn("__present", F.lit(1)).alias("__s")
     tc = lambda c: F.col(f"__t.{c}")  # noqa: E731
     sc = lambda c: F.col(f"__s.{c}")  # noqa: E731
-    cond = None
-    for k in keys:
-        clause = tc(k).eqNullSafe(sc(k))
-        cond = clause if cond is None else (cond & clause)
-    joined = t.join(s, on=cond, how="full_outer")
+    joined = t.join(s, on=null_safe_eq("__t", "__s", keys), how="full_outer")
 
     matched_t = tc("__present").isNotNull()
     matched_s = sc("__present").isNotNull()

@@ -33,7 +33,11 @@ from pyspark.sql import functions as F
 from teleco_etl_pipeline_spark.catalog import SERVICE_COLS, STAGING_SCHEMA, Warehouse
 from teleco_etl_pipeline_spark.functions.scalars import safe_int, scrub_numeric
 from teleco_etl_pipeline_spark.operators.keys import add_surrogate_key
-from teleco_etl_pipeline_spark.operators.upsert import anti_dedup, merge_upsert
+from teleco_etl_pipeline_spark.operators.upsert import (
+    anti_dedup,
+    merge_upsert,
+    null_safe_eq,
+)
 from teleco_etl_pipeline_spark.plans import quality
 
 BUSINESS_COLS = [f.name for f in STAGING_SCHEMA.fields]
@@ -99,9 +103,7 @@ def load_staging(wh: Warehouse, raw: DataFrame) -> dict[str, int]:
         bronze = wh.read("bronze", "churn_raw")
         good = anti_dedup(good, bronze, keys=["customer_id"])
 
-    wh.write(good, "staging", "staging_churn")  # S12 truncate-load
-    # Count the WRITTEN table: parquet footer metadata, no recompute.
-    stats["staged"] = wh.read("staging", "staging_churn").count()
+    stats["staged"] = wh.write(good, "staging", "staging_churn")  # S12 truncate-load
     stats["dup_vs_bronze"] = stats["input"] - stats["rejected"] - stats["staged"]
     annotated.unpersist()
     return stats
@@ -156,8 +158,8 @@ def bronze_upsert(wh: Warehouse) -> dict[str, int]:
     src = _bronze_projection(wh.read("staging", "staging_churn"))
     if not wh.exists("bronze", "churn_raw"):
         quality.assert_checks_pass(src)
-        wh.write(src, "bronze", "churn_raw")
-        return {"inserted": src.count(), "updated": 0, "existing": 0}
+        inserted = wh.write(src, "bronze", "churn_raw")
+        return {"inserted": inserted, "updated": 0, "existing": 0}
 
     target = wh.read("bronze", "churn_raw")
     merged = merge_upsert(
@@ -203,9 +205,7 @@ def silver_load(wh: Warehouse) -> int:
             cols.append(F.coalesce(F.col(c), F.lit("n/a")).alias(c))
         else:
             cols.append(F.col(c))
-    silver = bronze.select(*cols)
-    wh.write(silver, "silver", "churn_raw")
-    return silver.count()
+    return wh.write(bronze.select(*cols), "silver", "churn_raw")
 
 
 def silver_clean(wh: Warehouse) -> dict[str, int]:
@@ -248,18 +248,15 @@ def _idempotent_dim(
     existing = wh.read("gold", table) if wh.exists("gold", table) else None
     if existing is not None:
         max_key = existing.agg(F.max(key_col)).collect()[0][0] or 0
-        cond = None
-        for c in match_cols:
-            clause = F.col(f"__n.{c}").eqNullSafe(F.col(f"__e.{c}"))
-            cond = clause if cond is None else (cond & clause)
-        fresh = fresh.alias("__n").join(existing.alias("__e"), cond, "left_anti")
+        fresh = fresh.alias("__n").join(
+            existing.alias("__e"), null_safe_eq("__n", "__e", match_cols), "left_anti"
+        )
     dim = add_surrogate_key(
         fresh, key_col, order_by=match_cols, start_at=max_key + 1
     ).select(key_col, *values.columns)
     if existing is not None:
         dim = existing.unionByName(dim)
-    wh.overwrite_safe(dim, "gold", table)
-    return wh.read("gold", table).count()
+    return wh.overwrite_safe(dim, "gold", table)
 
 
 def build_dims(wh: Warehouse) -> dict[str, int]:
@@ -321,21 +318,9 @@ def build_fact(wh: Warehouse, run_date: str | None = None) -> int:
     cr = F.broadcast(wh.read("gold", "dim_churn_reason")).alias("cr")
     sv = F.broadcast(wh.read("gold", "dim_services")).alias("sv")
 
-    sv_cond = None
-    for col in SERVICE_COLS:
-        clause = F.col(f"sv.{col}").eqNullSafe(F.col(f"s.{col}"))
-        sv_cond = clause if sv_cond is None else (sv_cond & clause)
-
     fact = (
         s.join(c, F.col("c.customer_id") == F.col("s.customer_id"))
-        .join(
-            ct,
-            F.col("ct.contract_type")
-            == F.replace(
-                F.col("s.contract"), F.lit("Month-to-month"), F.lit("Month-to-Month")
-            ),
-            "left",
-        )
+        .join(ct, F.col("ct.contract_type") == _norm_contract(), "left")
         .join(pm, F.col("pm.payment_method") == F.col("s.payment_method"), "left")
         .join(
             cr,
@@ -343,7 +328,7 @@ def build_fact(wh: Warehouse, run_date: str | None = None) -> int:
             == F.trim(F.upper(F.coalesce(F.col("s.churn_reason"), F.lit("n/a")))),
             "left",
         )
-        .join(sv, sv_cond, "left")
+        .join(sv, null_safe_eq("sv", "s", SERVICE_COLS), "left")
         .select(
             F.col("c.customer_key"),
             F.col("ct.contract_key"),
@@ -375,7 +360,7 @@ def build_fact(wh: Warehouse, run_date: str | None = None) -> int:
         merged = existing.unionByName(fact)
     else:
         merged = fact
-    wh.write_zordered(
+    return wh.write_zordered(
         merged,
         "gold",
         "fact_customer_churn",
@@ -385,7 +370,6 @@ def build_fact(wh: Warehouse, run_date: str | None = None) -> int:
         ],
         n_files=16,
     )
-    return wh.read("gold", "fact_customer_churn").count()
 
 
 def gold_quality_gate(wh: Warehouse) -> dict[str, int]:

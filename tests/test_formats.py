@@ -22,6 +22,32 @@ def test_warehouse_routes_through_format(spark, tmp_path):
     assert wh.read("bronze", "t").count() == 5
 
 
+def test_warehouse_writes_return_rows_written(spark, tmp_path):
+    """Each write returns the rows that call wrote, counted by its own
+    job; the count must survive the z-order range sampler, whose job
+    re-runs everything below the range exchange."""
+    wh = Warehouse(spark, str(tmp_path))
+    on_disk = lambda table: wh.read("gold", table).count()  # noqa: E731
+
+    def ids(lo, hi):
+        return spark.range(lo, hi, numPartitions=8).select(
+            F.col("id").alias("k"), (F.col("id") % 7).alias("v")
+        )
+
+    assert wh.write(ids(0, 1000), "gold", "t") == 1000 == on_disk("t")
+    assert wh.write(ids(1000, 1030), "gold", "t", mode="append") == 30
+    assert on_disk("t") == 1030
+    # Replaces the table it reads: drops the 143 + 5 rows with v == 0.
+    kept = wh.read("gold", "t").filter(F.col("v") != 0)
+    assert wh.overwrite_safe(kept, "gold", "t") == 882 == on_disk("t")
+
+    zcols = [F.pmod(F.col("k"), F.lit(256)).cast("long"), F.col("v")]
+    assert wh.write_zordered(ids(0, 1000), "gold", "z", zcols, n_files=16) == 1000
+    assert on_disk("z") == 1000
+
+    assert wh.write(ids(0, 1000).limit(0), "gold", "empty") == 0 == on_disk("empty")
+
+
 def test_parquet_upsert_into_column_subset(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path))
     base = spark.createDataFrame(

@@ -415,18 +415,29 @@ def test_dim_keys_dense_stable_and_null_safe(spark, tmp_path):
             _row("C-02", contract="One year", services=no_services),
         ],
     )
-    run_warehouse(spark, wh_root, str(landing), run_date="2026-08-13", archive=False)
+    report = run_warehouse(
+        spark, wh_root, str(landing), run_date="2026-08-13", archive=False
+    )
     wh = Warehouse(spark, wh_root)
+    dim_specs = [
+        ("dim_contract", "contract_key", ["contract_type"]),
+        ("dim_payment_method", "payment_method_key", ["payment_method"]),
+        ("dim_churn_reason", "churn_reason_key", ["churn_reason"]),
+        ("dim_customer", "customer_key", ["customer_id"]),
+        ("dim_services", "service_key", SERVICE_COLS),
+    ]
+
+    def assert_report_counts_on_disk(report):
+        """Every stage reports the rows its write left on disk."""
+        rows = lambda layer, table: wh.read(layer, table).count()  # noqa: E731
+        assert report["gold_dims"] == {t: rows("gold", t) for t, _, _ in dim_specs}
+        assert report["gold_fact_rows"] == rows("gold", "fact_customer_churn")
+        assert report["silver_rows"] == rows("silver", "churn_raw")
+        assert report["staging"]["staged"] == rows("staging", "staging_churn")
 
     def dims():
         out = {}
-        for table, key, cols in [
-            ("dim_contract", "contract_key", ["contract_type"]),
-            ("dim_payment_method", "payment_method_key", ["payment_method"]),
-            ("dim_churn_reason", "churn_reason_key", ["churn_reason"]),
-            ("dim_customer", "customer_key", ["customer_id"]),
-            ("dim_services", "service_key", SERVICE_COLS),
-        ]:
+        for table, key, cols in dim_specs:
             rows = wh.read("gold", table).collect()
             out[table] = {
                 r[key]: (r[cols[0]] if len(cols) == 1 else tuple(r[c] for c in cols))
@@ -436,6 +447,7 @@ def test_dim_keys_dense_stable_and_null_safe(spark, tmp_path):
             assert sorted(out[table]) == list(range(1, len(rows) + 1))  # dense
         return out
 
+    assert_report_counts_on_disk(report)
     run1 = dims()
     assert run1["dim_contract"] == {
         1: "Month-to-Month", 2: "One year", 3: "Two year"
@@ -461,6 +473,7 @@ def test_dim_keys_dense_stable_and_null_safe(spark, tmp_path):
         spark, wh_root, str(landing), run_date="2026-08-14", archive=False
     )
     assert report["staging"]["dup_vs_bronze"] == 1  # C-01
+    assert_report_counts_on_disk(report)
     run2 = dims()
     for table, mapping in run1.items():
         assert {k: run2[table][k] for k in mapping} == mapping, table
