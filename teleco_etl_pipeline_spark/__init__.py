@@ -19,9 +19,8 @@ Layout
                  dedup family (exact/MinHash/SimHash/Jaccard/embedding),
                  similarity search, text analysis, multimodal plumbing
 - ``plans``      pipeline stages: staging→bronze→silver→gold star
-                 schema, quality engine, incremental extract, ML
-- ``streaming``  Structured Streaming: file-arrival source, watermark
-                 incremental contract
+                 schema, quality engine, incremental extract, ML,
+                 file-sensor reprocessing
 """
 
 __version__ = "0.1.0"

@@ -204,124 +204,3 @@ class Warehouse:
         clustered = zorder_repartition(df, zcols, n_files, bits)
         path = self.path(layer, table)
         return _write_counted(clustered, lambda d: safe_overwrite(d, path))
-
-    # -- bucketed tables: shuffle elimination for repeated key joins --
-
-    def bucketed_name(self, layer: str, table: str) -> str:
-        return f"{layer}_{table}"
-
-    def write_bucketed(
-        self,
-        df: DataFrame,
-        layer: str,
-        table: str,
-        bucket_cols: list[str],
-        n_buckets: int = 32,
-        sorted_by: list[str] | None = None,
-        mode: str = "overwrite",
-    ) -> str:
-        """Write a catalog table bucketed (and optionally sorted) by
-        the join/merge key. Equi-joins and groupBys between tables
-        co-bucketed on the same key then run with ZERO Exchange (and
-        zero Sort when ``sorted_by`` matches) — at 100 TB this removes
-        the repeated customer_id shuffle from every bronze-upsert /
-        silver-clean / gold-fact stage. ``n_buckets`` sizes reducer
-        parallelism: pick ~ (table size / 128 MB) at the target SF.
-        Returns the catalog table name."""
-        name = self.bucketed_name(layer, table)
-        writer = (
-            df.write.mode(mode)
-            .format("parquet")
-            .option("path", self.path(layer, table + "__bucketed"))
-            .bucketBy(n_buckets, *bucket_cols)
-        )
-        if sorted_by:
-            writer = writer.sortBy(*sorted_by)
-        writer.saveAsTable(name)
-        return name
-
-    def read_bucketed(self, layer: str, table: str) -> DataFrame:
-        """Read a bucketed table THROUGH the catalog (a raw
-        ``read.parquet`` of the same path would lose the bucket
-        spec and reintroduce shuffles)."""
-        return self.spark.table(self.bucketed_name(layer, table))
-
-    # -- versioned snapshots: reproducible dataset releases ----------
-
-    def snapshot_dir(self, layer: str, table: str) -> str:
-        return self.path(layer, table) + "__snapshots"
-
-    def list_snapshots(self, layer: str, table: str) -> list[int]:
-        """Committed snapshot versions, ascending. A version is
-        committed iff its directory carries the format's success
-        marker — a half-written snapshot (writer died mid-job) is
-        invisible here and harmless on disk."""
-        base = self.snapshot_dir(layer, table)
-        if not os.path.isdir(base):
-            return []
-        out = []
-        for d in os.listdir(base):
-            if d.startswith("v=") and os.path.exists(
-                os.path.join(base, d, "_SUCCESS")
-            ):
-                out.append(int(d[2:]))
-        return sorted(out)
-
-    def write_snapshot(self, df: DataFrame, layer: str, table: str) -> int:
-        """Append an immutable, numbered snapshot of ``df`` and return
-        its version — the reproducibility primitive for training-data
-        releases: a model's data card pins (layer, table, version) and
-        re-reading that triple yields byte-identical rows forever,
-        regardless of later pipeline runs.
-
-        Commit protocol is write-then-visible: the snapshot writes
-        into its own fresh ``v=N`` directory and becomes a committed
-        version only when the parquet job drops ``_SUCCESS`` as its
-        final act — no rename window, no partial-version reads, safe
-        under concurrent readers. At scale this is a directory-per-
-        release layout (object-store friendly: immutable prefixes,
-        trivially lifecycle-tiered); storage cost is bounded with
-        :meth:`prune_snapshots`.
-        """
-        versions = self.list_snapshots(layer, table)
-        version = (versions[-1] + 1) if versions else 1
-        df.write.mode("error").parquet(
-            os.path.join(self.snapshot_dir(layer, table), f"v={version}")
-        )
-        return version
-
-    def read_snapshot(
-        self, layer: str, table: str, version: int | None = None
-    ) -> DataFrame:
-        """Read a pinned snapshot (default: latest committed)."""
-        versions = self.list_snapshots(layer, table)
-        if not versions:
-            raise FileNotFoundError(
-                f"no snapshots for {layer}.{table} under "
-                f"{self.snapshot_dir(layer, table)}"
-            )
-        if version is None:
-            version = versions[-1]
-        if version not in versions:
-            raise FileNotFoundError(
-                f"snapshot v={version} of {layer}.{table} not found "
-                f"(have {versions})"
-            )
-        return self.spark.read.parquet(
-            os.path.join(self.snapshot_dir(layer, table), f"v={version}")
-        )
-
-    def prune_snapshots(self, layer: str, table: str, keep_last: int) -> list[int]:
-        """Drop all but the newest ``keep_last`` committed snapshots
-        (and any uncommitted debris). Returns the versions removed.
-        Retention runs newest-first off the committed list, so a
-        concurrent writer's in-flight version is never touched."""
-        import shutil
-
-        if keep_last < 1:
-            raise ValueError(f"keep_last must be >= 1, got {keep_last}")
-        versions = self.list_snapshots(layer, table)
-        doomed = versions[:-keep_last] if len(versions) > keep_last else []
-        for v in doomed:
-            shutil.rmtree(os.path.join(self.snapshot_dir(layer, table), f"v={v}"))
-        return doomed

@@ -83,9 +83,8 @@ def reprocess_fixed_file(
 def watch_and_reprocess(
     wh: Warehouse, fixed_dir: str, archive: bool = True, **kw
 ) -> list[dict]:
-    """Batch analogue of the file-arrival sensor (St2): process every
-    file currently in fixed_dir. The streaming variant lives in
-    streaming/file_stream.py."""
+    """The file-arrival sensor (St2): process every file currently in
+    fixed_dir, the batch form of the reference's sensor DAG."""
     import datetime as dt
 
     reports = []

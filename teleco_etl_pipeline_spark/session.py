@@ -77,23 +77,10 @@ def get_spark(
         .config("spark.sql.ansi.enabled", "false")
         # Quiet timezone semantics: store/compare in UTC everywhere.
         .config("spark.sql.session.timeZone", "UTC")
-        # --- Periodic driver GC interval (ContextCleaner trigger):
-        #     kept at Spark's default, env-overridable. r13 measured
-        #     BOTH failure modes: uncollected checkpoint/shuffle
-        #     backlog stalls a later Python-exchange stage inside
-        #     induced full GCs (multimodal_resize_exec 39 s after an
-        #     18-query graph preamble, 2.9 s after one System.gc()),
-        #     but a tight 45s interval injects stop-the-world pauses
-        #     into measured work (full-suite sum-of-medians regressed
-        #     257 -> 397 s). The resolution lives where the problem
-        #     is: bench.py runs one UNTIMED System.gc() per query
-        #     (cross-query leakage hygiene, like its clearCache),
-        #     and long-lived multi-query services can set
-        #     SPARK_GRAFT_PERIODIC_GC to taste. ---
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "30min"),
-        )
+        # spark.cleaner.periodicGC.interval stays at Spark's 30min
+        # default: in r13 a 45s interval put stop-the-world pauses into
+        # measured work (bench sum of medians 257 s -> 397 s). bench.py
+        # runs one untimed System.gc() per query instead.
         # --- Driver heap: in local mode the driver JVM IS every
         #     executor; Spark's 1g default is laptop-sized and a
         #     long bench/parity session (hundreds of queries of

@@ -1,8 +1,9 @@
 """Pipeline state stores: file-metadata registry and watermarks
 (SURVEY.md §2.8 M2/M7, §2.10 St1, §2.12 C5/C6).
 
-Both are tiny Parquet tables mutated through ``Warehouse.upsert_into``,
-the keyed merge the data tables use. Each merge rewrites the whole
+Both are tiny Parquet tables mutated by the keyed merge the data
+tables use (``operators.upsert.merge_upsert``, which
+``Warehouse.upsert_into`` wraps). Each merge rewrites the whole
 table, so callers write one batch per state transition. The state
 machine semantics of the reference
 (PENDING→PROCESSING→SUCCESS/FAILED→ARCHIVED; watermark advances only
@@ -17,6 +18,7 @@ from datetime import datetime, timezone
 from pyspark.sql import functions as F
 
 from teleco_etl_pipeline_spark.catalog import META_SCHEMA, WATERMARK_SCHEMA, Warehouse
+from teleco_etl_pipeline_spark.operators.upsert import merge_upsert
 
 STATUSES = ("PENDING", "PROCESSING", "SUCCESS", "FAILED", "ARCHIVED")
 
@@ -39,7 +41,9 @@ class FileRegistry:
     def upsert(self, rows: list[dict]) -> None:
         """M2/M7: one keyed merge on file_name for a batch of files.
         Only the fields a row carries are updated; the rest (e.g. the
-        checksum on a status change) keep their stored value."""
+        checksum on a status change) keep their stored value. The one
+        exception is ``error_message``: only a FAILED file keeps one, so
+        a retry that succeeds clears it."""
         assert all(r.get("status") in STATUSES for r in rows)
         now = datetime.now(timezone.utc).replace(tzinfo=None)
         rows = [{"created_at": now, **r, "processed_at": now} for r in rows]
@@ -47,21 +51,26 @@ class FileRegistry:
             [tuple(r.get(f.name) for f in META_SCHEMA.fields) for r in rows],
             META_SCHEMA,
         )
-        self.wh.upsert_into(
-            src,
-            "meta",
-            self.TABLE,
-            keys=["file_name"],
-            update_cols=[
-                "file_path",
-                "file_size_bytes",
-                "row_count",
-                "status",
-                "error_message",
-                "processed_at",
-                "run_id",
-                "checksum_md5",
-            ],
+        if self.wh.exists("meta", self.TABLE):
+            src = merge_upsert(
+                self.wh.read("meta", self.TABLE),
+                src,
+                keys=["file_name"],
+                update_cols=[
+                    "file_path",
+                    "file_size_bytes",
+                    "row_count",
+                    "status",
+                    "error_message",
+                    "processed_at",
+                    "run_id",
+                    "checksum_md5",
+                ],
+            )
+        # The merge keeps the stored value wherever the source is NULL.
+        failed_only = F.when(F.col("status") == "FAILED", F.col("error_message"))
+        self.wh.overwrite_safe(
+            src.withColumn("error_message", failed_only), "meta", self.TABLE
         )
 
     def status_of(self, file_name: str) -> tuple[str, str] | None:

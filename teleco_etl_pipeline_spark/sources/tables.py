@@ -103,19 +103,6 @@ def _normalize_event_time(df: DataFrame) -> DataFrame:
     raise TypeError(f"events.ts has unsupported type {dt}")
 
 
-def register_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every harness table and register it as a temp view."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLE_NAMES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if not os.path.exists(path):
-            continue
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
-
-
 def ensure_min_splits(df: DataFrame, key_col: str) -> DataFrame:
     """Small-file cliff guard (r10): a compact parquet file splits
     into fewer input partitions than cores (byte-based split sizing),

@@ -78,44 +78,6 @@ def test_cluster_by_produces_disjoint_file_ranges(spark, tmp_path):
     assert got == list(range(20_000))
 
 
-def test_snapshot_write_read_prune(spark, tmp_path):
-    """Versioned snapshots: immutable numbered releases, latest-or-
-    pinned reads, bounded retention — the training-data
-    reproducibility primitive (a data card pins (table, version))."""
-    import pytest as _pytest
-
-    from teleco_etl_pipeline_spark.catalog import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    v1 = wh.write_snapshot(
-        spark.createDataFrame([(1, "a")], "id long, v string"), "gold", "corpus"
-    )
-    v2 = wh.write_snapshot(
-        spark.createDataFrame([(2, "b")], "id long, v string"), "gold", "corpus"
-    )
-    assert (v1, v2) == (1, 2)
-    assert wh.list_snapshots("gold", "corpus") == [1, 2]
-    # latest and pinned reads see different, immutable data
-    assert [r["id"] for r in wh.read_snapshot("gold", "corpus").collect()] == [2]
-    assert [r["id"] for r in wh.read_snapshot("gold", "corpus", 1).collect()] == [1]
-    # a third release, then retention keeps only the newest two
-    wh.write_snapshot(
-        spark.createDataFrame([(3, "c")], "id long, v string"), "gold", "corpus"
-    )
-    assert wh.prune_snapshots("gold", "corpus", keep_last=2) == [1]
-    assert wh.list_snapshots("gold", "corpus") == [2, 3]
-    with _pytest.raises(FileNotFoundError):
-        wh.read_snapshot("gold", "corpus", 1)
-    with _pytest.raises(FileNotFoundError):
-        wh.read_snapshot("gold", "missing")
-    # an uncommitted (no _SUCCESS) directory is invisible
-    import os as _os
-
-    bad = _os.path.join(wh.snapshot_dir("gold", "corpus"), "v=99")
-    _os.makedirs(bad)
-    assert wh.list_snapshots("gold", "corpus") == [2, 3]
-
-
 def test_zorder_narrows_row_group_ranges_on_both_keys(spark, tmp_path):
     """Z-order vs single-key clustering: after zorder_by(x, y), the
     per-row-group min/max span must shrink well below the full domain

@@ -278,37 +278,6 @@ def test_error_rate_without_rules(spark):
     assert quality.error_rate(df.limit(0), []) == (0, 0, 0.0)
 
 
-def test_bucketed_join_eliminates_shuffle(spark, tmp_path):
-    """Two tables co-bucketed on the join key: sort-merge join plan
-    must contain zero Exchange (bucketing provides the partitioning)
-    and zero Sort (sortBy provides the ordering)."""
-    from teleco_etl_pipeline_spark.catalog import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    left = spark.range(0, 1000).withColumnRenamed("id", "k").withColumn(
-        "a", F.col("k") * 2
-    )
-    right = spark.range(0, 500).withColumnRenamed("id", "k").withColumn(
-        "b", F.col("k") + 1
-    )
-    wh.write_bucketed(left, "silver", "t_left", ["k"], n_buckets=8, sorted_by=["k"])
-    wh.write_bucketed(right, "silver", "t_right", ["k"], n_buckets=8, sorted_by=["k"])
-
-    l, r = wh.read_bucketed("silver", "t_left"), wh.read_bucketed("silver", "t_right")
-    joined = l.hint("merge").join(r, "k")
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-    assert joined.count() == 500
-
-    # control: the same data read as plain parquet DOES shuffle
-    plain = (
-        spark.read.parquet(wh.path("silver", "t_left__bucketed"))
-        .hint("merge")
-        .join(spark.read.parquet(wh.path("silver", "t_right__bucketed")), "k")
-    )
-    assert "Exchange" in plain._jdf.queryExecution().executedPlan().toString()
-
-
 def _write_csv(path, rows):
     with open(path, "w") as f:
         f.write(CSV_HEADER + "\n" + "\n".join(rows) + "\n")
@@ -324,7 +293,7 @@ def test_failed_run_marks_files_failed_and_retries(spark, tmp_path, monkeypatch)
     path. Every file of the run ends FAILED with the error text and
     keeps its checksum; a later run retries them (FAILED is never
     skipped) and archives them once the data is fixed, with no repair
-    of bronze in between.
+    of bronze in between; archiving clears every file's error text.
 
     Staging applies the same rules as the gate, so the test removes
     the staging Negative Tenure rule to let the bad rows reach the
@@ -387,6 +356,7 @@ def test_failed_run_marks_files_failed_and_retries(spark, tmp_path, monkeypatch)
                 checksums[name],
                 f"run_{run + 1}",
             )
+        assert all(r["error_message"] is None for r in meta.values())
         return report
 
     # Create path: no bronze yet, and none after the failed run.

@@ -1,10 +1,9 @@
-"""ML pipeline, streaming file source, and multimodal plumbing tests."""
+"""ML pipeline and multimodal plumbing tests."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from teleco_etl_pipeline_spark.catalog import Warehouse
 from teleco_etl_pipeline_spark.plans import ml
@@ -50,66 +49,6 @@ def test_latest_model_wins(gold_wh, tmp_path):
     ml.train(gold_wh, models_dir, version="2026_01_01")
     ml.train(gold_wh, models_dir, version="2026_06_01")
     assert ml.latest_model_path(models_dir).endswith("churn_model_2026_06_01")
-
-
-def test_file_arrival_stream(spark, tmp_path):
-    from teleco_etl_pipeline_spark.streaming.file_stream import (
-        file_arrival_stream,
-        foreach_batch_upsert,
-    )
-
-    watch = tmp_path / "watch"
-    watch.mkdir()
-    (watch / "a.csv").write_text("id,v\n1,x\n2,y\n")
-    (watch / "b.csv").write_text("id,v\n3,z\n")
-
-    schema = T.StructType(
-        [T.StructField("id", T.IntegerType()), T.StructField("v", T.StringType())]
-    )
-    seen: list[tuple] = []
-
-    def merge(batch_df, batch_id):
-        seen.extend((r["id"], r["v"], r["source_file"]) for r in batch_df.collect())
-
-    stream = file_arrival_stream(spark, str(watch), schema)
-    q = foreach_batch_upsert(
-        stream, str(tmp_path / "ckpt"), merge, available_now=True
-    )
-    q.awaitTermination(60)
-    assert sorted(seen) == [(1, "x", "a.csv"), (2, "y", "a.csv"), (3, "z", "b.csv")]
-
-    # exactly-once: a second drain sees nothing new
-    seen.clear()
-    q2 = foreach_batch_upsert(
-        file_arrival_stream(spark, str(watch), schema),
-        str(tmp_path / "ckpt"),
-        merge,
-        available_now=True,
-    )
-    q2.awaitTermination(60)
-    assert seen == []
-
-
-def test_streaming_watermarked_counts(spark, tmp_path):
-    """Event-time windowed agg with watermark over a rate-like stream
-    (batch-mode check of the plan shape on static data)."""
-    import datetime as dt
-
-    from teleco_etl_pipeline_spark.streaming.file_stream import watermarked_counts
-
-    events = spark.createDataFrame(
-        [
-            (dt.datetime(2026, 1, 1, 0, 1), "click"),
-            (dt.datetime(2026, 1, 1, 0, 2), "click"),
-            (dt.datetime(2026, 1, 1, 0, 15), "view"),
-        ],
-        ["ts", "event_type"],
-    )
-    out = {
-        (r["window_start"].minute, r["event_type"]): r["cnt"]
-        for r in watermarked_counts(events).collect()
-    }
-    assert out == {(0, "click"): 2, (10, "view"): 1}
 
 
 def test_multimodal_plumbing(spark):
@@ -239,133 +178,6 @@ def test_real_png_decode(spark):
     assert got[3]["width"] is None and got[3]["pixels_mean"] is None
 
 
-def test_session_window_matches_lag_cumsum_sessionize(spark):
-    """Built-in session_window and the plans/events.py lag/cumsum
-    sessionization must produce identical session partitions (bounds
-    differ by construction: session_window end = last event + gap)."""
-    from teleco_etl_pipeline_spark.plans.registry import all_queries
-    from teleco_etl_pipeline_spark.sources.tables import load_table
-    from teleco_etl_pipeline_spark.streaming.stateful import session_windows
-
-    sf_dir = "/root/testdata/sf0.001"
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", F.col("ts").cast("timestamp").alias("ts"), "value"
-    )
-    native = session_windows(ev, gap="30 minutes")
-    manual = all_queries()["events_sessionize"].build(spark, sf_dir)
-
-    def sig(df, start_col):
-        return sorted(
-            (r["user_id"], r[start_col], r["n_events"]) for r in df.collect()
-        )
-
-    native_sig = [
-        (u, int(s.timestamp() * 1_000_000), n)
-        for u, s, n in sig(native, "session_start")
-    ]
-    manual_sig = sig(manual, "session_start_us")
-    assert native_sig == manual_sig
-
-
-def test_transform_with_state_accumulates_across_batches(spark, tmp_path):
-    """transformWithStateInPandas (Spark 4 API): same cumulative
-    semantics as the applyInPandasWithState twin."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState's Python runner speaks protobuf to the "
-        "JVM; the lib is absent in this container (works where "
-        "pyspark[connect] deps are installed)",
-    )
-    from teleco_etl_pipeline_spark.streaming.stateful import running_user_totals_tws
-
-    watch = tmp_path / "ev"
-    watch.mkdir()
-    (watch / "b1.csv").write_text("user_id,value\n1,10.0\n1,5.0\n2,1.0\n")
-    (watch / "b2.csv").write_text("user_id,value\n1,2.5\n3,7.0\n")
-    schema = T.StructType(
-        [T.StructField("user_id", T.LongType()), T.StructField("value", T.DoubleType())]
-    )
-    stream = (
-        spark.readStream.format("csv")
-        .schema(schema)
-        .option("header", True)
-        .option("maxFilesPerTrigger", 1)
-        .load(str(watch))
-    )
-    emitted: list[tuple] = []
-
-    def sink(batch_df, batch_id):
-        emitted.extend(
-            (batch_id, r["user_id"], r["n_events"], r["total_value"])
-            for r in batch_df.collect()
-        )
-
-    q = (
-        running_user_totals_tws(stream)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    finals = {}
-    for _bid, uid, n, tot in sorted(emitted):
-        finals[uid] = (n, tot)
-    assert finals == {1: (3, 17.5), 2: (1, 1.0), 3: (1, 7.0)}
-
-
-def test_apply_in_pandas_with_state_accumulates_across_batches(spark, tmp_path):
-    """applyInPandasWithState: per-key state must persist across
-    micro-batches (one file per trigger → 2 batches)."""
-    from teleco_etl_pipeline_spark.streaming.stateful import running_user_totals
-
-    watch = tmp_path / "ev"
-    watch.mkdir()
-    (watch / "b1.csv").write_text("user_id,value\n1,10.0\n1,5.0\n2,1.0\n")
-    (watch / "b2.csv").write_text("user_id,value\n1,2.5\n3,7.0\n")
-    schema = T.StructType(
-        [T.StructField("user_id", T.LongType()), T.StructField("value", T.DoubleType())]
-    )
-    stream = (
-        spark.readStream.format("csv")
-        .schema(schema)
-        .option("header", True)
-        .option("maxFilesPerTrigger", 1)
-        .load(str(watch))
-    )
-    emitted: list[tuple] = []
-
-    def sink(batch_df, batch_id):
-        emitted.extend(
-            (batch_id, r["user_id"], r["n_events"], r["total_value"])
-            for r in batch_df.collect()
-        )
-
-    q = (
-        running_user_totals(stream)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    finals = {}
-    for _bid, uid, n, tot in sorted(emitted):
-        finals[uid] = (n, tot)
-    assert finals == {1: (3, 17.5), 2: (1, 1.0), 3: (1, 7.0)}
-    # user 1 appears in both batches → two emissions, the second
-    # cumulative over the first (file→batch order is mtime-tied and
-    # not deterministic, so assert shape, not order).
-    user1 = [(n, tot) for _b, u, n, tot in sorted(emitted) if u == 1]
-    assert len(user1) == 2
-    assert user1[-1] == (3, 17.5)
-    assert user1[0][0] < 3  # first batch saw a strict subset
-
-
 def test_resize_plan_and_payload_path_agree(spark):
     """The metadata resize PLAN and the payload path (here in its
     fake=True plumbing mode over non-PNG payloads; the real PNG mode
@@ -461,126 +273,6 @@ def test_resize_plan_invariants_dense_grid(spark):
             # aspect preserved to integer rounding:
             # |ow/oh - w/h| bounded by one rounding step on each axis
             assert abs(ow * h - oh * w) <= max(w, h), r
-
-
-def test_streaming_watermark_drops_too_late_rows(spark, tmp_path):
-    """True streaming late-data semantics across micro-batches (the
-    batch-mode twin above only checks plan shape): after the
-    watermark passes a window's end, a late row for that window is
-    DROPPED — its count never updates — while a late-but-within-
-    watermark row still aggregates."""
-    import json as _json
-
-    from teleco_etl_pipeline_spark.streaming.file_stream import watermarked_counts
-
-    src = tmp_path / "events"
-    src.mkdir()
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("event_type", T.StringType()),
-        ]
-    )
-
-    def _write(name, rows):
-        (src / name).write_text(
-            "\n".join(_json.dumps({"ts": ts, "event_type": et}) for ts, et in rows)
-        )
-
-    # Batch 1: e1 in window [00:00,00:10); e2 at 00:20 advances the
-    # watermark to 00:15 (threshold 5 min) for the NEXT batch.
-    _write("b1.json", [("2026-01-01T00:05:00", "e1"), ("2026-01-01T00:20:00", "e2")])
-
-    counts = watermarked_counts(
-        spark.readStream.schema(schema).json(str(src)),
-        late_threshold="5 minutes",
-    )
-    q = (
-        counts.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("wmc")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # Batch 2: e1 at 00:02 targets the [00:00,00:10) window whose
-        # end (00:10) is behind the watermark (00:15) → dropped.
-        # e3 at 00:12 targets [00:10,00:20), end 00:20 > watermark →
-        # aggregated.
-        _write(
-            "b2.json",
-            [("2026-01-01T00:02:00", "e1"), ("2026-01-01T00:12:00", "e3")],
-        )
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    rows = spark.sql("SELECT * FROM wmc").collect()
-    by_key = {}
-    for r in rows:
-        by_key.setdefault((r["window_start"].minute, r["event_type"]), []).append(
-            r["cnt"]
-        )
-    # The dropped late row never produced an updated count for e1.
-    assert by_key[(0, "e1")] == [1]
-    # The within-watermark late row DID aggregate.
-    assert by_key[(10, "e3")] == [1]
-    assert by_key[(20, "e2")] == [1]
-
-
-def test_streaming_scd2_matches_batch_rebuild(spark, tmp_path):
-    """Two change files drained as separate micro-batch groups must
-    leave the SCD2 dim identical to a one-shot batch rebuild over the
-    concatenated change log."""
-    from teleco_etl_pipeline_spark.operators.scd import scd2_from_changes
-    from teleco_etl_pipeline_spark.streaming.file_stream import (
-        file_arrival_stream,
-        foreach_batch_scd2,
-    )
-
-    watch = tmp_path / "cdc"
-    watch.mkdir()
-    dim_path = str(tmp_path / "dim_history")
-    ckpt = str(tmp_path / "ckpt_scd2")
-    schema = T.StructType(
-        [
-            T.StructField("k", T.LongType()),
-            T.StructField("eid", T.LongType()),
-            T.StructField("ts_us", T.LongType()),
-            T.StructField("v", T.StringType()),
-        ]
-    )
-    args = dict(
-        key_cols=["k"], ts_us_col="ts_us", attr_cols=["v"], tiebreak_col="eid"
-    )
-
-    (watch / "day1.csv").write_text("k,eid,ts_us,v\n1,10,100,a\n1,12,300,b\n2,20,150,x\n")
-    q = foreach_batch_scd2(
-        file_arrival_stream(spark, str(watch), schema), ckpt, dim_path, **args
-    )
-    q.awaitTermination(60)
-    (watch / "day2.csv").write_text("k,eid,ts_us,v\n1,30,400,b\n2,31,500,y\n3,32,450,n\n")
-    q2 = foreach_batch_scd2(
-        file_arrival_stream(spark, str(watch), schema), ckpt, dim_path, **args
-    )
-    q2.awaitTermination(60)
-
-    all_changes = spark.createDataFrame(
-        [(1, 10, 100, "a"), (1, 12, 300, "b"), (2, 20, 150, "x"),
-         (1, 30, 400, "b"), (2, 31, 500, "y"), (3, 32, 450, "n")],
-        ["k", "eid", "ts_us", "v"],
-    )
-    expect = scd2_from_changes(all_changes, **args)
-
-    def canon(df):
-        return sorted(
-            (r["k"], r["v"], r["valid_from_us"], r["valid_to_us"], r["is_current"])
-            for r in df.collect()
-        )
-
-    got = spark.read.parquet(dim_path).select(*expect.columns)
-    assert canon(got) == canon(expect)
 
 
 def test_media_builders_pickle_by_value(tmp_path):
