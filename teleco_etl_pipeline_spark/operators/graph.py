@@ -170,50 +170,6 @@ def _pagerank_sql(iters: int, scale: int, d_num: int, d_den: int, topk: int) -> 
     """
 
 
-def _pagerank_sql_baked(
-    n: int, iters: int, scale: int, d_num: int, d_den: int, topk: int
-) -> str:
-    """Spark-side twin of ``_pagerank_sql`` with the two node-count-
-    derived constants baked as literals (computed at plan-build time
-    with the same floor-division arithmetic, so the values are
-    identical to what the oracle's ``c`` CTE derives in-engine).
-    Removes four uncorrelated scalar-subquery JOBS from the plan —
-    pure scheduling latency on a fixed-size constant.
-    """
-    base = ((d_den - d_num) * scale) // (d_den * n)
-    r0 = scale // n
-    its = []
-    prev = "r0"
-    for i in range(1, iters + 1):
-        its.append(
-            f"""
-    it{i} AS (
-      SELECT e.dst AS node,
-             CAST({base} AS BIGINT)
-               + ({d_num} * SUM(s.contrib)) div {d_den} AS rank_units
-      FROM edges e
-      JOIN (SELECT r.node, r.rank_units div od.outdeg AS contrib
-            FROM {prev} r JOIN outdeg od ON r.node = od.src) s
-        ON e.src = s.node
-      GROUP BY e.dst
-    )"""
-        )
-        prev = f"it{i}"
-    return f"""
-    WITH outdeg AS (
-      SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src
-    ),
-    r0 AS (
-      SELECT DISTINCT src AS node, CAST({r0} AS BIGINT) AS rank_units
-      FROM edges
-    ),{",".join(its)}
-    SELECT node, CAST(rank_units AS BIGINT) AS rank_units
-    FROM {prev}
-    ORDER BY rank_units DESC, node
-    LIMIT {topk}
-    """
-
-
 _EDGES_SQL_DUCK = """
     WITH pairs AS (
       SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s

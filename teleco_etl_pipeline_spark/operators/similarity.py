@@ -74,10 +74,6 @@ def cosine_similarity_col(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def _query_vec_literal(vec) -> Column:
-    return F.array(*[F.lit(float(x)) for x in vec])
-
-
 # ---------------------------------------------------------------------------
 # Quantized-exact cosine (determinism by construction — round-7)
 #

@@ -30,10 +30,6 @@ def tokens(col: Column | str) -> Column:
     return F.split(F.trim(c), r"\s+")
 
 
-def stopword_count(toks: Column) -> Column:
-    return F.size(F.filter(toks, lambda x: x.isin(*STOPWORDS)))
-
-
 def normalized_text(col: Column | str) -> Column:
     """Canonical form for fingerprint/dedup: lower + collapse spaces."""
     c = F.col(col) if isinstance(col, str) else col

@@ -1051,8 +1051,10 @@ def q_part_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the executed plan showed FIVE independent lineitem scans and
         # no ReusedExchange (plans/r14/part_basket_lift_before.txt).
         # The frame is distinct (order, part) incidence grain — the
-        # same rows every downstream shuffle already moves.
-        .localCheckpoint(eager=True)
+        # same rows every downstream shuffle already moves. A persist,
+        # not a local checkpoint: at fact scale a lost executor's
+        # blocks must be recomputable from lineage.
+        .persist()
     )
     n_orders = io.agg(
         F.countDistinct("l_orderkey").alias("n_orders")

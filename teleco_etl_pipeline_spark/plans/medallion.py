@@ -30,7 +30,12 @@ import datetime as dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from teleco_etl_pipeline_spark.catalog import SERVICE_COLS, STAGING_SCHEMA, Warehouse
+from teleco_etl_pipeline_spark.catalog import (
+    _BUSINESS_FIELDS,
+    SERVICE_COLS,
+    STAGING_SCHEMA,
+    Warehouse,
+)
 from teleco_etl_pipeline_spark.functions.scalars import safe_int, scrub_numeric
 from teleco_etl_pipeline_spark.operators.keys import add_surrogate_key
 from teleco_etl_pipeline_spark.operators.upsert import (
@@ -116,30 +121,16 @@ def load_staging(wh: Warehouse, raw: DataFrame) -> dict[str, int]:
 
 def _bronze_projection(staging: DataFrame) -> DataFrame:
     """Typed projection staging→bronze shape (P5/P8/P9 + audit cols):
-    safe zip cast, lat_long recompute, current timestamps."""
-    cols = []
-    for c in BUSINESS_COLS:
-        if c == "zip_code":
-            cols.append(safe_int("zip_code").alias("zip_code"))
-        elif c == "lat_long":
-            # lat_long recomputed from components (bronze SQL :31)
-            cols.append(
-                F.concat_ws(
-                    ",",
-                    F.col("latitude").cast("string"),
-                    F.col("longitude").cast("string"),
-                ).alias("lat_long")
-            )
-        elif c in ("latitude", "longitude"):
-            cols.append(F.col(c).try_cast("double").alias(c))
-        elif c == "tenure_in_months":
-            cols.append(F.col(c).try_cast("int").alias(c))
-        elif c in ("monthly_charges_amount", "total_charges"):
-            cols.append(F.col(c).try_cast("double").alias(c))
-        elif c == "churn_value":
-            cols.append(F.col(c).try_cast("int").alias(c))
-        else:
-            cols.append(F.col(c).cast("string").alias(c))
+    each column try-cast to its catalog type, except a safe zip cast
+    and lat_long recomputed from its components (bronze SQL :31),
+    plus current timestamps."""
+    special = {
+        "zip_code": safe_int("zip_code"),
+        "lat_long": F.concat_ws(
+            ",", F.col("latitude").cast("string"), F.col("longitude").cast("string")
+        ),
+    }
+    cols = [special.get(c, F.col(c).try_cast(t)).alias(c) for c, t in _BUSINESS_FIELDS]
     now = F.current_timestamp()
     return staging.select(
         *cols,
@@ -219,6 +210,12 @@ def silver_clean(wh: Warehouse) -> dict[str, int]:
         wh.write(bad, "quarantine", "silver_rejects", mode="append")
         wh.overwrite_safe(good, "silver", "churn_raw")
     return {"total": total, "removed": bad_cnt, "error_rate_pct": round(pct, 4)}
+
+
+def derive_silver(wh: Warehouse) -> dict:
+    """Silver re-derived from bronze: the full-refresh load, then the
+    DQ sweep. The daily run and the fix loop both take this path."""
+    return {"silver_rows": silver_load(wh), "silver_clean": silver_clean(wh)}
 
 
 # ---------------------------------------------------------------------------
@@ -394,3 +391,13 @@ def gold_quality_gate(wh: Warehouse) -> dict[str, int]:
     if failing:
         raise AssertionError(f"gold DQ gate failed: {failing}")
     return checks
+
+
+def derive_gold(wh: Warehouse, run_date: str | None) -> dict:
+    """Gold re-derived from silver: the dims, the fact, then the gold
+    DQ gate. The daily run and the fix loop both take this path."""
+    return {
+        "gold_dims": build_dims(wh),
+        "gold_fact_rows": build_fact(wh, run_date),
+        "gold_gate": gold_quality_gate(wh),
+    }

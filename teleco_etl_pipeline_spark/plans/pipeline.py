@@ -5,8 +5,10 @@ lazy DataFrame stages with value-check gates).
 Stages (mirrors dags/DataWarehouse.py:879 task order):
   ingest CSVs → staging (validate/quarantine/dedup)
   → bronze upsert, its DQ gate run on the merged rows before the swap
-  → silver load → silver clean (circuit breaker)
-  → gold dims + fact → gold DQ gate
+  → silver, derived from bronze (``medallion.derive_silver``: load,
+    then clean with the circuit breaker)
+  → gold, derived from silver (``medallion.derive_gold``: dims, fact,
+    then the gold DQ gate)
   → archive + metadata bookkeeping
 
 Returns a run-report dict (C7/C8 analogue) with per-stage counts.
@@ -83,11 +85,8 @@ def run_warehouse(
         )
         report["staging"] = medallion.load_staging(wh, raw)
         report["bronze"] = medallion.bronze_upsert(wh)  # C2 gate inside
-        report["silver_rows"] = medallion.silver_load(wh)
-        report["silver_clean"] = medallion.silver_clean(wh)
-        report["gold_dims"] = medallion.build_dims(wh)
-        report["gold_fact_rows"] = medallion.build_fact(wh, run_date)
-        report["gold_gate"] = medallion.gold_quality_gate(wh)
+        report.update(medallion.derive_silver(wh))
+        report.update(medallion.derive_gold(wh, run_date))
     except Exception as e:  # noqa: BLE001
         transition("FAILED", str(e)[:500])
         raise

@@ -3,17 +3,18 @@ reference dags/Reprocessing.py).
 
 Corrected files land in a fixed_data/ directory; each is re-validated
 with the FULL domain rule set (gender/contract/payment/internet,
-Reprocessing.py:41-44,74-109), valid rows are upserted into silver
-via delete-then-insert (M3, :113-126), rejects are exported with
-error_details (:130-137), and gold is re-derived (:194-198).
+Reprocessing.py:41-44,74-109), and rejects are exported with
+error_details (:130-137). Valid rows go into bronze via
+delete-then-insert (M3, :113-126); silver and gold are then re-derived
+by the daily run's own stages (``medallion.derive_silver`` /
+``derive_gold``). The reference upserts silver only (:113-126), which
+its next full silver refresh from bronze undoes; writing bronze keeps
+the fix (PARITY.md S12/M3).
 """
 
 from __future__ import annotations
 
 import os
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from teleco_etl_pipeline_spark.catalog import Warehouse
 from teleco_etl_pipeline_spark.operators.upsert import delete_then_insert
@@ -52,30 +53,34 @@ def reprocess_fixed_file(
         report["status"] = "ALL_REJECTED"
         return report
 
-    # Align to silver schema: keep silver's columns, typed like bronze
-    silver = wh.read("silver", "churn_raw")
-    fixes = medallion._bronze_projection(good).select(*silver.columns)
-
-    # M3: delete-then-insert keyed on customer_id, atomically visible
-    merged = delete_then_insert(silver, fixes, keys=["customer_id"])
-    wh.overwrite_safe(merged, "silver", "churn_raw")
+    # M3: delete-then-insert keyed on customer_id into bronze, the
+    # system of record, so the next daily run's silver keeps the fix.
+    # No bronze gate: ``good`` passed churn_rules(check_domains=True),
+    # which covers every rule of run_layer_checks, and the file's
+    # duplicate keys were rejected, so no key can repeat.
+    fixes = medallion._bronze_projection(good)
+    bronze = wh.read("bronze", "churn_raw")
+    wh.overwrite_safe(
+        delete_then_insert(bronze, fixes, ["customer_id"]), "bronze", "churn_raw"
+    )
     report["upserted"] = report["input"] - report["rejected"]
+    medallion.derive_silver(wh)
 
     if refresh_gold:
-        medallion.build_dims(wh)
-        # fact rows for fixed customers must be rebuilt: drop + re-add
-        dim_c = wh.read("gold", "dim_customer")
-        fixed_keys = dim_c.join(
-            fixes.select("customer_id"), "customer_id", "left_semi"
-        ).select("customer_key")
+        # The fact build adds only customers without a fact row, so the
+        # fixed customers' rows go first. A customer new to bronze has
+        # no dim_customer key and no fact row yet.
         if wh.exists("gold", "fact_customer_churn"):
+            fixed_keys = wh.read("gold", "dim_customer").join(
+                fixes.select("customer_id"), "customer_id", "left_semi"
+            ).select("customer_key")
             fact = wh.read("gold", "fact_customer_churn")
             wh.overwrite_safe(
                 fact.join(fixed_keys, "customer_key", "left_anti"),
                 "gold",
                 "fact_customer_churn",
             )
-        report["gold_fact_rows"] = medallion.build_fact(wh, run_date)
+        report["gold_fact_rows"] = medallion.derive_gold(wh, run_date)["gold_fact_rows"]
     report["status"] = "SUCCESS"
     return report
 

@@ -9,11 +9,15 @@ import re
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from teleco_etl_pipeline_spark.catalog import SERVICE_COLS, Warehouse
+from teleco_etl_pipeline_spark.catalog import _BUSINESS_FIELDS, SERVICE_COLS, Warehouse
 from teleco_etl_pipeline_spark.plans import medallion, quality
 from teleco_etl_pipeline_spark.plans.pipeline import run_warehouse
-from teleco_etl_pipeline_spark.plans.reprocess import reprocess_fixed_file
+from teleco_etl_pipeline_spark.plans.reprocess import (
+    reprocess_fixed_file,
+    watch_and_reprocess,
+)
 from teleco_etl_pipeline_spark.sources.files import md5_file
 from teleco_etl_pipeline_spark.sources.state import FileRegistry
 from tests.conftest import CSV_HEADER, _row, write_ingest_csv
@@ -53,6 +57,14 @@ def test_full_pipeline_run(staged):
     # file archived + metadata terminal
     assert report["files"][0]["status"] == "ARCHIVED"
     assert os.path.exists(os.path.join(staging_dir, "archive"))
+    # bronze is typed as the catalog's business fields plus audit columns
+    bronze = wh.read("bronze", "churn_raw").schema
+    assert [(f.name, f.dataType) for f in bronze.fields] == [
+        *_BUSINESS_FIELDS,
+        ("created_at", T.TimestampType()),
+        ("updated_at", T.TimestampType()),
+        ("record_type", T.StringType()),
+    ]
 
 
 def test_pipeline_idempotent_rerun(staged):
@@ -210,6 +222,66 @@ def test_reprocess_fixed_file(staged, tmp_path):
     dim_c = wh.read("gold", "dim_customer")
     k = dim_c.filter(F.col("customer_id") == "1000-CLEAN1").collect()[0]["customer_key"]
     assert fact.filter(F.col("customer_key") == k).collect()[0]["tenure_months"] == 77
+
+
+def test_fix_survives_next_run(staged, tmp_path):
+    """The fix loop, driven through its file sensor: a correction to a
+    loaded customer and to a rejected one reaches bronze, silver and
+    gold, and a next daily run over an unrelated file keeps it. Silver
+    stays the clean projection of bronze, one row per fact row and
+    dim_customer row."""
+    spark, staging_dir, wh_root, _ = staged
+    run_warehouse(spark, wh_root, staging_dir, run_date="2026-08-13")
+    wh = Warehouse(spark, wh_root)
+
+    fixed_dir = tmp_path / "fixed_data"
+    fixed_dir.mkdir()
+    _write_csv(
+        fixed_dir / "churn_99_fixed.csv",
+        [_row("1000-CLEAN1", tenure="77"), _row("2000-NEGTEN", tenure="5")],
+    )
+    _write_csv(  # still outside the contract domain: rejected whole
+        fixed_dir / "churn_98_rejected.csv", [_row("2003-BADGEN", contract="Three year")]
+    )
+    reports = watch_and_reprocess(
+        wh, str(fixed_dir), quarantine_dir=str(tmp_path / "q"), run_date="2026-08-14"
+    )
+    assert [(r["file"], r["status"], r.get("upserted")) for r in reports] == [
+        ("churn_98_rejected.csv", "ALL_REJECTED", None),
+        ("churn_99_fixed.csv", "SUCCESS", 2),
+    ]
+    [archived] = os.listdir(fixed_dir / "archive")
+    assert re.fullmatch(r"churn_99_fixed_archived_\d{8}_\d{6}\.csv", archived)
+    assert sorted(os.listdir(fixed_dir)) == ["archive", "churn_98_rejected.csv"]
+
+    def assert_fix_everywhere(n):
+        fixed = {"1000-CLEAN1": 77, "2000-NEGTEN": 5}
+        bronze = wh.read("bronze", "churn_raw")
+        silver = wh.read("silver", "churn_raw")
+        dim_c = wh.read("gold", "dim_customer")
+        fact = wh.read("gold", "fact_customer_churn").join(dim_c, "customer_key")
+        for df, col in ((bronze, "tenure_in_months"), (silver, "tenure_in_months"),
+                        (fact, "tenure_months")):
+            got = df.filter(F.col("customer_id").isin(*fixed)).collect()
+            assert {r["customer_id"]: r[col] for r in got} == fixed
+        got = silver.filter(F.col("customer_id").isin(*fixed)).collect()
+        assert [r["churn_reason"] for r in got] == ["n/a", "n/a"]
+
+        projection = bronze.select(
+            *[F.coalesce(c, F.lit("n/a")).alias(c) if c == "churn_reason" else c
+              for c in medallion.BUSINESS_COLS]
+        )
+        clean, _ = quality.split_good_bad(
+            projection, quality.churn_rules(projection, check_domains=False)
+        )
+        assert sorted(map(tuple, silver.collect())) == sorted(map(tuple, clean.collect()))
+        assert (silver.count(), fact.count(), dim_c.count()) == (n, n, n)
+
+    assert_fix_everywhere(11)
+    _write_csv(os.path.join(staging_dir, "churn_day2.csv"), [_row("3000-NEW")])
+    report = run_warehouse(spark, wh_root, staging_dir, run_date="2026-08-15")
+    assert report["status"] == "SUCCESS" and report["staging"]["staged"] == 1
+    assert_fix_everywhere(12)
 
 
 def test_gold_quality_gate_catches_orphans(staged):

@@ -11,13 +11,16 @@ from teleco_etl_pipeline_spark.plans.pipeline import run_warehouse
 from tests.conftest import write_ingest_csv
 
 
-@pytest.fixture()
-def gold_wh(tmp_path, spark):
-    staging_dir = tmp_path / "landing"
+@pytest.fixture(scope="module")
+def gold_wh(tmp_path_factory, spark):
+    """One 10-row warehouse for the module: training only reads gold,
+    and the predictions table inference adds is read by no other test."""
+    root = tmp_path_factory.mktemp("gold_wh")
+    staging_dir = root / "landing"
     staging_dir.mkdir()
     write_ingest_csv(str(staging_dir / "churn.csv"))
-    run_warehouse(spark, str(tmp_path / "wh"), str(staging_dir), run_date="2026-08-13")
-    return Warehouse(spark, str(tmp_path / "wh"))
+    run_warehouse(spark, str(root / "wh"), str(staging_dir), run_date="2026-08-13")
+    return Warehouse(spark, str(root / "wh"))
 
 
 def test_train_and_infer(gold_wh, tmp_path):
