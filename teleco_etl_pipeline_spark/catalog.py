@@ -7,6 +7,9 @@ dags/SQL/Bronze/DDL_BronzeTable.sql, dags/SQL/Silver/DDL_Silver_
 Table.sql, dags/SQL/Gold/DDL_gold.sql). Here each layer is a
 directory of Parquet tables. ``Warehouse.read`` and ``write`` apply
 no schema: each table keeps the schema of the frame that wrote it.
+Pipeline metadata is no table: ``sources/state.py`` keeps it as JSON
+documents under ``meta/``, and ``META_SCHEMA`` is the file
+registry's shape when Spark reads it (``FileRegistry.frame``).
 """
 
 from __future__ import annotations
@@ -20,7 +23,6 @@ from pyspark.sql import types as T
 
 from teleco_etl_pipeline_spark.operators.upsert import (
     heal_interrupted_swap,
-    merge_upsert,
     safe_overwrite,
 )
 
@@ -89,16 +91,6 @@ META_SCHEMA = T.StructType(
     ]
 )
 
-WATERMARK_SCHEMA = T.StructType(
-    [
-        T.StructField("name", T.StringType(), False),
-        T.StructField("value", T.StringType(), True),
-        T.StructField("updated_at", T.TimestampType(), True),
-    ]
-)
-
-LAYERS = ("staging", "bronze", "silver", "gold", "meta", "quarantine")
-
 
 def _write_counted(df: DataFrame, write) -> int:
     """Run ``write(df)`` and return the rows it wrote, counted by an
@@ -153,24 +145,6 @@ class Warehouse:
         the rows written."""
         path = self.path(layer, table)
         return _write_counted(df, lambda d: safe_overwrite(d, path))
-
-    def upsert_into(
-        self,
-        source: DataFrame,
-        layer: str,
-        table: str,
-        keys: list[str],
-        update_cols: list[str] | None = None,
-    ) -> None:
-        """Keyed MERGE into a layer table (M1 semantics): creates the
-        table from ``source`` when it does not exist yet."""
-        if self.exists(layer, table):
-            merged = merge_upsert(
-                self.read(layer, table), source, keys, update_cols=update_cols
-            )
-            self.overwrite_safe(merged, layer, table)
-        else:
-            self.write(source, layer, table)
 
     def write_zordered(
         self,

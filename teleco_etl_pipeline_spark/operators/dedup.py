@@ -1587,7 +1587,6 @@ def q_ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (p+q)), so no float ulp can desync the Spark plan from the DuckDB
 # oracle at a ceil boundary.
 _PREFIX_NUM, _PREFIX_DEN = 9, 10  # τ = 9/10
-_PREFIX_T = _PREFIX_NUM / _PREFIX_DEN
 
 # Volume-scaled hub-token cap for the PPJoin candidate join (the
 # dense-universe knob, r10 verdict weak #2). PPJoin's candidate

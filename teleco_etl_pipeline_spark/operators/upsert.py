@@ -13,8 +13,8 @@ caller then writes with ``safe_overwrite``:
 - ``delete_then_insert``: anti-join on fix keys ∪ fixes.
 - ``anti_dedup``: drop staging rows already present in the target (M6).
 
-``catalog.Warehouse`` applies them to the layer tables
-(``upsert_into``, ``overwrite_safe``).
+Callers write the merged frames over the layer tables with
+``catalog.Warehouse.overwrite_safe``.
 
 Scale notes: the merge join shuffles both sides on the key — at
 100 TB bucket both layer tables by the business key so the merge is

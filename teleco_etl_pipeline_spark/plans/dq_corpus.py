@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from teleco_etl_pipeline_spark.catalog import Warehouse
+from teleco_etl_pipeline_spark.sources.state import FileRegistry
 
 
 @dataclass(frozen=True)
@@ -72,7 +73,7 @@ def all_checks() -> list[Check]:
     checks: list[Check] = [
         # ---- §1 metadata (ref :8-33) ----
         C("metadata", "file_status_report",
-          lambda wh: wh.read("meta", "pipeline_file_metadata").select(
+          lambda wh: FileRegistry(wh).frame().select(
               "file_name", "status", "row_count", "file_size_bytes",
               "processed_at", "run_id",
               F.when(F.col("error_message").isNotNull(), "Has Error")
@@ -80,11 +81,11 @@ def all_checks() -> list[Check]:
           ).orderBy(F.desc("processed_at")),
           ref="DWH_Quality_Checks.sql:12-22"),
         C("metadata", "files_by_status",
-          lambda wh: wh.read("meta", "pipeline_file_metadata")
+          lambda wh: FileRegistry(wh).frame()
           .groupBy("status").agg(F.count(F.lit(1)).alias("file_count")),
           ref=":25-27"),
         C("metadata", "files_needing_reprocess",
-          lambda wh: wh.read("meta", "pipeline_file_metadata")
+          lambda wh: FileRegistry(wh).frame()
           .filter(F.col("status").isin("FAILED", "PROCESSING"))
           .select("file_name", "status", "error_message", "processed_at"),
           expect=_zero_rows, ref=":30-33"),

@@ -38,7 +38,6 @@ from teleco_etl_pipeline_spark.functions import epoch_us
 from teleco_etl_pipeline_spark.plans.registry import query
 from teleco_etl_pipeline_spark.sources.tables import load_table
 
-HOUR_US = 3_600 * 1_000_000
 HALF_HOUR_US = 1_800 * 1_000_000
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30-minute inactivity gap
 

@@ -67,7 +67,7 @@ def run_warehouse(
         report["status"] = "SKIPPED_NO_NEW_DATA"  # C4 skip semantics
         return report
 
-    # Every registry write rewrites the whole table, so each state
+    # Every registry write rewrites the whole document, so each state
     # transition is one write covering all of the run's files.
     names = [r["file_name"] for r in processing]
 

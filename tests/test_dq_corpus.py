@@ -39,6 +39,13 @@ def test_corpus_green_after_clean_run(built_wh):
     # profile checks returned data
     assert results["fact.churn_flag_distribution"]["rows"]
     assert results["consistency.layer_row_summary"]["rows"][1]["layer"] == "Bronze"
+    # §1 reads the file registry: one archived file, no error, none pending
+    assert results["metadata.files_by_status"]["rows"] == [
+        {"status": "ARCHIVED", "file_count": 1}
+    ]
+    (status_row,) = results["metadata.file_status_report"]["rows"]
+    assert status_row["error_flag"] == "Clean"
+    assert results["metadata.files_needing_reprocess"] == {"rows": [], "passed": True}
 
 
 def test_corpus_catches_violation(built_wh):

@@ -96,26 +96,30 @@ def test_file_registry_checksum_skip(spark, tmp_path):
     assert not reg.should_skip("new.csv", "abc")
 
     reg.upsert([{"file_name": "f1.csv", "status": "ARCHIVED"}])
-    assert reg.status_of("f1.csv")[0] == "ARCHIVED"
+    assert reg.files["f1.csv"]["status"] == "ARCHIVED"
     # checksum survived the status update (column-subset merge)
     assert reg.should_skip("f1.csv", "abc")
+    # a fresh registry reads what the first one wrote
+    assert FileRegistry(wh).files == reg.files
+    assert FileRegistry(wh).should_skip("f1.csv", "abc")
 
 
 def test_file_registry_survives_interrupted_swap(spark, tmp_path):
-    """A crash between safe_overwrite's two renames leaves the registry
-    only at its '.old' backup. The archived file must still be skipped,
-    and the next upsert must merge into the restored table instead of
-    starting a new one that forgets it."""
+    """A crash inside a registry write can leave a torn '<doc>.tmp'
+    beside the document. It must be ignored: the archived file is
+    still skipped, and the next upsert keeps both names and leaves no
+    '.tmp' behind."""
     wh = Warehouse(spark, str(tmp_path / "wh"))
-    reg = FileRegistry(wh)
-    reg.upsert([{"file_name": "a.csv", "status": "ARCHIVED", "checksum_md5": "abc"}])
-    path = wh.path("meta", FileRegistry.TABLE)
-    os.rename(path, path + ".old")  # simulate the crash window
+    FileRegistry(wh).upsert(
+        [{"file_name": "a.csv", "status": "ARCHIVED", "checksum_md5": "abc"}]
+    )
+    tmp = FileRegistry(wh).path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write('{"a.csv": {"status": "PROC')  # simulate the crash window
 
+    reg = FileRegistry(wh)
     assert reg.should_skip("a.csv", "abc")
     reg.upsert([{"file_name": "b.csv", "status": "PROCESSING", "checksum_md5": "def"}])
-    names = sorted(
-        r["file_name"] for r in wh.read("meta", FileRegistry.TABLE).collect()
-    )
-    assert names == ["a.csv", "b.csv"]
+    assert sorted(FileRegistry(wh).files) == ["a.csv", "b.csv"]
+    assert not os.path.exists(tmp)
     assert reg.should_skip("a.csv", "abc")

@@ -1,5 +1,5 @@
-"""Warehouse storage on plain Parquet: keyed upsert, create-on-first-
-write, predicate delete, swap healing, and the file-format features
+"""Warehouse storage on plain Parquet: keyed upsert, predicate
+delete, swap healing, and the file-format features
 (JSONL, schema evolution, hidden metadata) the layers rely on."""
 
 from __future__ import annotations
@@ -9,7 +9,7 @@ import os
 from pyspark.sql import functions as F
 
 from teleco_etl_pipeline_spark.catalog import Warehouse
-from teleco_etl_pipeline_spark.operators.upsert import delete_where
+from teleco_etl_pipeline_spark.operators.upsert import delete_where, merge_upsert
 
 
 def test_warehouse_routes_through_format(spark, tmp_path):
@@ -48,33 +48,6 @@ def test_warehouse_writes_return_rows_written(spark, tmp_path):
     assert wh.write(ids(0, 1000).limit(0), "gold", "empty") == 0 == on_disk("empty")
 
 
-def test_parquet_upsert_into_column_subset(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path))
-    base = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20)], ["k", "name", "v"]
-    )
-    wh.write(base, "bronze", "t")
-    src = spark.createDataFrame(
-        [(2, "B-new", 99), (3, "c", 30)], ["k", "name", "v"]
-    )
-    # Only v updates on match; name keeps the target value.
-    wh.upsert_into(src, "bronze", "t", keys=["k"], update_cols=["v"])
-    rows = {
-        r["k"]: (r["name"], r["v"])
-        for r in wh.read("bronze", "t").collect()
-    }
-    assert rows[1] == ("a", 10)  # untouched
-    assert rows[2] == ("b", 99)  # v updated, name kept
-    assert rows[3] == ("c", 30)  # inserted
-
-
-def test_parquet_upsert_into_creates_missing_table(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path))
-    src = spark.createDataFrame([(1, 10)], ["k", "v"])
-    wh.upsert_into(src, "bronze", "fresh", keys=["k"])
-    assert wh.read("bronze", "fresh").count() == 1
-
-
 def test_parquet_delete_where_in_place(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path))
     df = spark.range(10).select(F.col("id").alias("k"))
@@ -97,18 +70,14 @@ def test_parquet_delete_where_keeps_null_predicate_rows(spark):
 
 def test_parquet_upsert_heals_interrupted_swap(spark, tmp_path):
     """If a previous safe_overwrite crashed between its two renames
-    (table only at path+'.old'), the next upsert must restore and
-    MERGE — not treat the path as a first write and drop the table."""
+    (table only at path+'.old'), the next read must restore the table,
+    so the merge over it keeps the pre-crash rows."""
     wh = Warehouse(spark, str(tmp_path))
     wh.write(spark.createDataFrame([(1, "a"), (2, "b")], ["id", "v"]), "bronze", "t")
     path = wh.path("bronze", "t")
     os.rename(path, path + ".old")  # simulate the crash window
-    wh.upsert_into(
-        spark.createDataFrame([(2, "B"), (3, "c")], ["id", "v"]),
-        "bronze",
-        "t",
-        keys=["id"],
-    )
+    src = spark.createDataFrame([(2, "B"), (3, "c")], ["id", "v"])
+    wh.overwrite_safe(merge_upsert(wh.read("bronze", "t"), src, keys=["id"]), "bronze", "t")
     out = {r["id"]: r["v"] for r in wh.read("bronze", "t").collect()}
     assert out == {1: "a", 2: "B", 3: "c"}  # pre-crash row 1 survives
     assert not os.path.exists(path + ".old")

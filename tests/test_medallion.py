@@ -70,11 +70,18 @@ def test_full_pipeline_run(staged):
 def test_pipeline_idempotent_rerun(staged):
     spark, staging_dir, wh_root, _ = staged
     run_warehouse(spark, wh_root, staging_dir, run_date="2026-08-13", archive=False)
-    report2 = run_warehouse(
-        spark, wh_root, staging_dir, run_date="2026-08-14", archive=False
-    )
-    # same files, same checksums → skipped entirely (C5)
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "idempotent_rerun")
+    try:
+        report2 = run_warehouse(
+            spark, wh_root, staging_dir, run_date="2026-08-14", archive=False
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # same files, same checksums → skipped entirely (C5), decided on
+    # the driver without a single Spark job
     assert report2["status"] == "SKIPPED_NO_NEW_DATA"
+    assert sc.statusTracker().getJobIdsForGroup("idempotent_rerun") == []
 
     wh = Warehouse(spark, wh_root)
     assert wh.read("gold", "fact_customer_churn").count() == 10
@@ -356,7 +363,7 @@ def _write_csv(path, rows):
 
 
 def _meta(wh):
-    return {r["file_name"]: r for r in wh.read("meta", FileRegistry.TABLE).collect()}
+    return FileRegistry(wh).files
 
 
 def test_failed_run_marks_files_failed_and_retries(spark, tmp_path, monkeypatch):
