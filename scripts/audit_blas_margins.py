@@ -44,6 +44,7 @@ measure.)
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -70,12 +71,11 @@ def _argmin_gap(scores: np.ndarray) -> float:
 
 
 def main() -> int:
-    argv = list(sys.argv[1:])
-    json_out = None
-    if argv and argv[0] == "--json":
-        json_out = argv[1]
-        argv = argv[2:]
-    sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
+    parser = argparse.ArgumentParser()
+    parser.add_argument("--json", metavar="OUT", help="also write the margins to OUT")
+    parser.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    args = parser.parse_args()
+    json_out, sf_dir = args.json, args.sf_dir
 
     from teleco_etl_pipeline_spark.operators.similarity import (
         _LSH_DIM,

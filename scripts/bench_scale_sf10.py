@@ -21,25 +21,21 @@ total-coverage kNN engaging the 16-plane cap (rule wanted 17) no
 longer applies; the cap next engages at ~8M vectors, far past every
 committed SF.
 
-Variance protocol (r11, verdict item 6): each query is timed N_RUNS
-times (default 3) and the JSON records per-query median, min, max,
-and all runs — the run band lives in the artifact itself, not in
-PARITY.md prose (the r10 bpe_encode_stored 14.5-36.2 s band was
-prose-only).
-
-PROTOCOL BREAK vs SCALING_r10_sf10.json — r11 numbers are NOT
-comparable to r10 per-query values for cache-using plans: r10 timed
-best-of-2 and cleared the Spark cache once per QUERY, so run 2 of a
-plan that .cache()s its shared leaves (minhash signatures, shingle
-explodes, stored-index probes) re-read resident blocks and best-of-2
-reported the WARM-cache path (r10's minhash_lsh_pairs "3.2 s at
-sf10" was 500k docs' signatures served from cache). r11 clears the
-cache after EVERY run, so the median measures the COLD path — the
-honest regime at 100 TB, where nothing is resident. For the same
-reason the sf1 BASELINE is always re-measured inline here under the
-identical cold protocol (never taken from SCALING_r11.json, whose
-best-of-2-per-query numbers are warm) — otherwise the growth column
-would divide a cold sf10 by a warm sf1 and overstate growth.
+Protocol: ``bench.time_query``, the timing core every query bench
+shares (see bench.py's docstring): each query is timed 3 times (the
+three stored-artifact serve rows 5 times, see STORED_RUNS), with the
+Spark cache cleared and a driver GC after EVERY run, and the JSON
+records per-query median, min, max and all runs, so the run band
+lives in the artifact itself (r11 verdict item 6). Median, not min:
+sf10 on this box includes genuine device I/O every run, so min would
+systematically pick the least-I/O-contended outlier. When the sf1
+dir exists, the sf1 baseline is re-measured inline under the same
+cold protocol, so the growth column does not divide a cold sf10 by
+the warm best-of-2 sf1 of SCALING_r10.json (only a fallback). The
+box-control row runs at START and END. r10's
+SCALING_r10_sf10.json was warm best-of-2 with one cache clear per
+query; later rounds cleared the cache per run but ran no GC between
+runs.
 
 Usage: python scripts/bench_scale_sf10.py [--json OUT]
 """
@@ -49,18 +45,22 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from teleco_etl_pipeline_spark.plans.registry import all_queries
-from teleco_etl_pipeline_spark.session import get_spark
+import bench
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF10 = os.environ.get(
-    "SPARK_GRAFT_SF10_DIR", os.path.join(REPO, ".scaledata", "sf10")
+    "SPARK_GRAFT_SF10_DIR", os.path.join(bench.REPO, ".scaledata", "sf10")
 )
-BASELINE = os.path.join(REPO, "SCALING_r10.json")
+BASELINE = os.path.join(bench.REPO, "SCALING_r10.json")
+
+# Artifact-serve rows get median-of-5 (r11 verdict ask #7): the r11
+# bpe_encode_stored band was 27.9/28.7/138.9 s — a x5 I/O outlier
+# inside a median-of-3 leaves the median one bad run from flipping;
+# two extra runs make the median robust to a single outlier pair.
+STORED = {"bpe_encode_stored", "embedding_ivf_topk_stored", "incremental_index_dedup"}
+STORED_RUNS = 5
 
 QUERIES = [
     # linear references
@@ -170,11 +170,7 @@ QUERIES = [
 
 
 def main() -> None:
-    json_out = None
-    argv = sys.argv[1:]
-    if argv and argv[0] == "--json":
-        json_out = argv[1]
-        argv = argv[2:]
+    json_out = bench.json_out_arg()
     if not os.path.isdir(SF10):
         raise SystemExit(f"sf10 dir missing: {SF10} (run gen_scaledata.py)")
     sf1 = {}
@@ -183,67 +179,26 @@ def main() -> None:
             k: v.get("sec_sf1")
             for k, v in json.load(open(BASELINE))["queries"].items()
         }
-    spark = get_spark(
-        app_name="bench-sf10",
-        extra_conf={
-            "spark.driver.memory": os.environ.get(
-                "SPARK_GRAFT_DRIVER_MEM", "48g"
-            )
-        },
+    spark = bench.start_session(
+        "bench-sf10",
+        SF10,
+        {"spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")},
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    registry = all_queries()
-    registry["distinct_values"].build(spark, SF10).count()  # warm-up
-    sf1_dir = os.path.join(REPO, ".scaledata", "sf1")
-
-    n_runs = int(os.environ.get("SPARK_GRAFT_SF10_RUNS", "3"))
-    # Artifact-serve rows get median-of-5 (r11 verdict ask #7): the
-    # r11 bpe_encode_stored band was 27.9/28.7/138.9 s — a x5 I/O
-    # outlier inside a median-of-3 leaves the median one bad run from
-    # flipping; two extra runs make the median robust to a single
-    # outlier pair.
-    n_runs_stored = max(n_runs, int(os.environ.get("SPARK_GRAFT_SF10_STORED_RUNS", "5")))
-    STORED = {"bpe_encode_stored", "embedding_ivf_topk_stored", "incremental_index_dedup"}
-
-    def timed_runs(name: str, sf_dir: str) -> list[float]:
-        runs = []
-        for _ in range(n_runs_stored if name in STORED else n_runs):
-            t0 = time.perf_counter()
-            df = registry[name].build(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(round(time.perf_counter() - t0, 3))
-            spark.catalog.clearCache()
-        return runs
-
-    def median(xs: list[float]) -> float:
-        s = sorted(xs)
-        mid = len(s) // 2
-        return s[mid] if len(s) % 2 else round((s[mid - 1] + s[mid]) / 2, 3)
-
+    ctl_start = bench.box_control(spark)
     results: dict[str, dict] = {}
     for name in QUERIES:
-        runs = timed_runs(name, SF10)
-        med = median(runs)
-        # MEDIAN-of-N with the full run band in the artifact (r11
-        # verdict item 6; r10 reported best-of-2 with the band in
-        # prose). Median, not min: sf10 on this box includes genuine
-        # device I/O every run, so min would systematically pick the
-        # least-I/O-contended outlier.
+        n_runs = STORED_RUNS if name in STORED else 3
+        times = bench.time_query(spark, name, SF10, n_runs)
+        med, best = bench.med_min(times)
         row: dict = {
             "sec_sf10": med,
-            "sec_sf10_min": min(runs),
-            "sec_sf10_max": max(runs),
-            "runs_sf10": runs,
+            "sec_sf10_min": best,
+            "sec_sf10_max": round(times[-1], 3),
+            "runs_sf10": [round(t, 3) for t in times],
         }
-        # sf1 baseline ALWAYS re-measured inline under the identical
-        # cold protocol (see header: SCALING_r11's per-query numbers
-        # are warm best-of-2 — dividing cold sf10 by warm sf1 would
-        # overstate growth for every cache-using plan).
-        base = None
-        if os.path.isdir(sf1_dir):
-            base = median(timed_runs(name, sf1_dir))
-        if base is None:
-            base = sf1.get(name)
+        base = sf1.get(name)
+        if os.path.isdir(bench.SF1_DIR):
+            base = bench.med_min(bench.time_query(spark, name, bench.SF1_DIR, n_runs))[0]
         if base:
             row["sec_sf1"] = base
             row["growth_10x_sf10"] = round(med / base, 2)
@@ -251,22 +206,21 @@ def main() -> None:
         print(name, row, flush=True)
     from teleco_etl_pipeline_spark.operators.artifacts import fit_seconds
 
-    out = {
-        "metric": "scaling_10x_growth_sf10",
-        "sf10_dir": SF10,
-        "protocol": (
-            f"median-of-{n_runs} (stored-artifact serve rows "
-            f"median-of-{n_runs_stored}), per-run band recorded"
-        ),
-        "queries": results,
-        "artifact_fit_sec": fit_seconds(),
-    }
-    line = json.dumps(out)
-    print(line)
-    if json_out:
-        with open(json_out, "w") as fh:
-            fh.write(line + "\n")
-
+    bench.emit(
+        {
+            "metric": "scaling_10x_growth_sf10",
+            "sf10_dir": SF10,
+            "protocol": (
+                f"median_of_3 (stored-artifact serve rows median_of_{STORED_RUNS}),"
+                " per-run band recorded; cold runs"
+            ),
+            "box_control_start": ctl_start,
+            "box_control_end": bench.box_control(spark),
+            "queries": results,
+            "artifact_fit_sec": fit_seconds(),
+        },
+        json_out,
+    )
 
 if __name__ == "__main__":
     main()

@@ -18,8 +18,12 @@ Pairs measured (baseline → scale path):
   - pricing_summary / exact_dedup: linear references for calibration
 
 Usage: python scripts/bench_scaling.py [--json OUT]
-Prints one JSON line {"metric": "scaling_10x_growth", "queries":
-{name: {"sec_sf0.01": s, "sec_sf0.1": s, "growth_10x_data": r}}}.
+Prints one JSON line {"metric": "scaling_10x_growth", "protocol": ...,
+"box_control_start": ..., "box_control_end": ..., "queries": {name:
+{"sec_sf0.01": median, "sec_sf0.01_min": min, "sec_sf0.1": ...,
+"growth_10x_data": r}}}, timed by ``bench.time_query`` (median-of-3
+cold runs; before it this harness reported best-of-2 with one cache
+clear per query, so pre-change SCALING artifacts are warm best-of-2).
 Run it uncontended — ratios are wall-clock.
 
 DECLARED super-linear growers at the sf1 point (r9-measured, r10
@@ -175,33 +179,21 @@ paths are now the registered defaults, oracle-backed at every SF):
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from teleco_etl_pipeline_spark.plans.registry import all_queries
-from teleco_etl_pipeline_spark.session import get_spark
-
-SF_DIRS = ["/root/testdata/sf0.01", "/root/testdata/sf0.1"]
+import bench
 
 # Optional third point ABOVE the driver-shipped SFs: generated by
 # scripts/gen_scaledata.py (10x sf0.1, deterministic, derived from
 # the committed tables — see that script's construction notes).
 # Appended automatically when present so the growth table gains a
 # sec_sf1 column and a second 10x ratio.
-_SF1 = os.environ.get(
-    "SPARK_GRAFT_SF1_DIR",
-    os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".scaledata",
-        "sf1",
-    ),
-)
-if os.path.isdir(_SF1):
-    SF_DIRS.append(_SF1)
+SF_DIRS = ["/root/testdata/sf0.01", "/root/testdata/sf0.1"]
+if os.path.isdir(bench.SF1_DIR):
+    SF_DIRS.append(bench.SF1_DIR)
 
 QUERIES = [
     # linear references
@@ -397,90 +389,49 @@ QUERIES = [
 
 
 def main() -> None:
-    json_out = None
-    argv = sys.argv[1:]
-    if argv and argv[0] == "--json":
-        if len(argv) < 2:
-            raise SystemExit("usage: bench_scaling.py [--json OUT]")
-        json_out = argv[1]
-        argv = argv[2:]
-    if argv:
-        raise SystemExit(f"unexpected arguments: {argv} (usage: bench_scaling.py [--json OUT])")
+    json_out = bench.json_out_arg()
     # The sf1 point needs a real heap (Spark's local-mode default is
     # 1g — sized for a laptop, not 6M-row shuffles across 32 threads;
     # a cluster submit would set this per-executor anyway). Only
     # effective when this process creates the session, which a CLI
     # run always does.
-    spark = get_spark(
-        app_name="bench-scaling",
-        extra_conf={
-            "spark.driver.memory": os.environ.get(
-                "SPARK_GRAFT_DRIVER_MEM", "32g"
-            )
-        },
+    spark = bench.start_session(
+        "bench-scaling",
+        SF_DIRS[0],
+        {"spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")},
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    registry = all_queries()
-    registry["distinct_values"].build(spark, SF_DIRS[0]).count()  # warm-up
-
-    # Time build() + action TOGETHER (bench.py's convention): the
-    # iterative operators (PageRank/HITS/k-core/k-center/BFS)
-    # materialize their supersteps with EAGER localCheckpoint inside
-    # build(), so an action-only timer would miss almost all of their
-    # work and report flat ~25 ms growth curves for the very
-    # operators whose growth this harness exists to measure.
+    ctl_start = bench.box_control(spark)
     results: dict[str, dict] = {}
     for name in QUERIES:
-        per_sf: list[float | None] = []
-        refused: str | None = None
-        for sf_dir in SF_DIRS:
-            best = float("inf")
+        row = results[name] = {}
+        prev = None
+        for i, sf_dir in enumerate(SF_DIRS):
+            tag = os.path.basename(sf_dir.rstrip("/"))
             try:
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    df = registry[name].build(spark, sf_dir)
-                    df.write.format("noop").mode("overwrite").save()
-                    best = min(best, time.perf_counter() - t0)
+                med, best = bench.med_min(bench.time_query(spark, name, sf_dir))
             except ValueError as e:
                 # the declared loud guards (e.g. embedding_neardup's
                 # 4096-row all-pairs refusal) FIRE at sf1 — that is
                 # the guard working, recorded as such, not a crash.
-                per_sf.append(None)
-                refused = f"{os.path.basename(sf_dir)}: {e}"
+                row[f"sec_{tag}"] = None
+                row["refused_by_guard"] = f"{tag}: {e}"
                 spark.catalog.clearCache()
                 break
-            per_sf.append(round(best, 3))
-        results[name] = {}
-        for i, sf_dir in enumerate(SF_DIRS):
-            tag = os.path.basename(sf_dir.rstrip("/"))
-            if i < len(per_sf):
-                results[name][f"sec_{tag}"] = per_sf[i]
-            if (
-                i >= 1
-                and i < len(per_sf)
-                and per_sf[i] is not None
-                and per_sf[i - 1]
-            ):
-                key = (
-                    "growth_10x_data"
-                    if i == 1
-                    else f"growth_10x_{tag}"
-                )
-                results[name][key] = round(per_sf[i] / per_sf[i - 1], 2)
-        if refused:
-            results[name]["refused_by_guard"] = refused
-        # Several operators cache shared leaves (gram/shingle
-        # explodes, minhash signatures); drop them so one query's
-        # resident cache never skews a later query's timed region.
-        spark.catalog.clearCache()
-
-    out = {"metric": "scaling_10x_growth", "queries": results}
-    print(json.dumps(out))
-    if json_out:
-        with open(json_out, "w") as f:
-            json.dump(out, f, indent=1, sort_keys=True)
-            f.write("\n")
-
+            row[f"sec_{tag}"], row[f"sec_{tag}_min"] = med, best
+            if prev:
+                key = "growth_10x_data" if i == 1 else f"growth_10x_{tag}"
+                row[key] = round(med / prev, 2)
+            prev = med
+    bench.emit(
+        {
+            "metric": "scaling_10x_growth",
+            "protocol": "median_of_3 per (query, sf), min alongside; cold runs",
+            "box_control_start": ctl_start,
+            "box_control_end": bench.box_control(spark),
+            "queries": results,
+        },
+        json_out,
+    )
 
 if __name__ == "__main__":
     main()

@@ -19,6 +19,7 @@ Usage: python scripts/check_parity.py [--json OUT] [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import argparse
 import decimal
 import json
 import math
@@ -71,13 +72,12 @@ def _multiset(rows, cols_order):
 
 
 def main() -> int:
-    argv = list(sys.argv[1:])
-    json_out = None
-    if argv and argv[0] == "--json":
-        json_out = argv[1]
-        argv = argv[2:]
-    sf_dir = argv[0] if argv else "/root/testdata/sf0.001"
-    only = set(argv[1:])
+    parser = argparse.ArgumentParser()
+    parser.add_argument("--json", metavar="OUT", help="also write the per-query records to OUT")
+    parser.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.001")
+    parser.add_argument("query", nargs="*", help="check only these queries")
+    args = parser.parse_args()
+    json_out, sf_dir, only = args.json, args.sf_dir, set(args.query)
     records: dict[str, dict] = {}
     spark = get_spark(app_name="parity-check", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from teleco_etl_pipeline_spark.catalog import Warehouse
@@ -146,6 +146,10 @@ def run_batch_inference(
 
     model = PipelineModel.load(latest_model_path(models_dir))
     df = build_training_frame(wh)
+    # The day's rows are counted while the write runs: no exchange lies
+    # between ``preds`` and the write's final stage (catalog.
+    # _write_counted's condition), so the observation counts each once.
+    scored = Observation()
     preds = model.transform(df).select(
         F.col("customer_key"),
         F.col("prediction").cast("smallint").alias("churn_prediction"),
@@ -153,7 +157,7 @@ def run_batch_inference(
             F.element_at(vector_to_array("probability"), 2), 4
         ).cast("decimal(5,4)").alias("churn_probability"),
         F.lit(model_run_date).cast("date").alias("model_run_date"),
-    )
+    ).observe(scored, F.count(F.lit(1)).alias("rows"))
     if wh.exists("gold", "churn_predictions"):
         existing = wh.read("gold", "churn_predictions").filter(
             F.col("model_run_date") != F.lit(model_run_date).cast("date")
@@ -162,9 +166,7 @@ def run_batch_inference(
     else:
         merged = preds
     wh.overwrite_safe(merged, "gold", "churn_predictions")
-    return wh.read("gold", "churn_predictions").filter(
-        F.col("model_run_date") == F.lit(model_run_date).cast("date")
-    ).count()
+    return scored.get["rows"]
 
 
 # ---------------------------------------------------------------------------

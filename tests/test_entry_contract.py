@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import importlib.util
 import os
 
 from tests.conftest import load_entry
@@ -36,21 +37,34 @@ def test_every_query_builds_valid_plan(catalog_plans):
         assert columns and plan, name
 
 
-def test_bench_queries_all_registered():
-    """bench.py must never KeyError at driver time (the round-3
-    failure mode was a bench crash): every headline name resolves in
-    the registry."""
-    import importlib.util
-
-    from teleco_etl_pipeline_spark.plans.registry import all_queries
-
+def _load_bench():
+    """The `bench` module, loaded from its file."""
     path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "bench.py")
     spec = importlib.util.spec_from_file_location("bench", path)
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
+    return bench
+
+
+def test_bench_queries_all_registered():
+    """bench.py must never KeyError at driver time (the round-3
+    failure mode was a bench crash): every headline name resolves in
+    the registry."""
+    from teleco_etl_pipeline_spark.plans.registry import all_queries
+
+    bench = _load_bench()
     missing = [n for n in bench.BENCH_QUERIES if n not in all_queries()]
     assert not missing, missing
     assert len(set(bench.BENCH_QUERIES)) == len(bench.BENCH_QUERIES)
+
+
+def test_time_query_runs_cold(spark, sf_dir):
+    """Every timed run starts cold: part_basket_lift persists its
+    incidence frame in build(), and time_query clears the cache after
+    each run, so nothing stays resident for the next run or query."""
+    times = _load_bench().time_query(spark, "part_basket_lift", sf_dir, runs=2)
+    assert len(times) == 2 and 0 < times[0] <= times[1]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_record_window_is_exact_and_disjoint():

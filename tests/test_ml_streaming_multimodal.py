@@ -39,9 +39,13 @@ def test_train_and_infer(gold_wh, tmp_path):
     probs = [float(r["churn_probability"]) for r in preds.collect()]
     assert all(0.0 <= p <= 1.0 for p in probs)
 
+    # a second day appends; the count is that day's rows only
+    assert ml.run_batch_inference(gold_wh, models_dir, "2026-08-14") == 10
+    assert gold_wh.read("gold", "churn_predictions").count() == 20
+
     # idempotent per-day rerun (M5): no duplicates
-    ml.run_batch_inference(gold_wh, models_dir, "2026-08-13")
-    assert gold_wh.read("gold", "churn_predictions").count() == 10
+    assert ml.run_batch_inference(gold_wh, models_dir, "2026-08-13") == 10
+    assert gold_wh.read("gold", "churn_predictions").count() == 20
 
 
 def test_latest_model_wins(gold_wh, tmp_path):

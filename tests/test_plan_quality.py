@@ -11,11 +11,6 @@ import pytest
 from teleco_etl_pipeline_spark.plans.registry import all_queries
 
 
-def _plan(spark, sf_dir, name: str) -> str:
-    q = all_queries()[name]
-    return q.build(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-
-
 # Sanctioned all-pairs plans: the exact near-dup BASELINE is O(n²)
 # by definition (scale path: lsh_bucketed_pairs / minhash_lsh_pairs,
 # bucketed equi-joins), and batch retrieval is a DELIBERATE broadcast
@@ -223,16 +218,16 @@ def test_no_cartesian_or_nested_loop_anywhere(catalog_plans):
     assert not offenders, offenders
 
 
-def test_watermark_filter_pushes_to_scan(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "watermark_window")
+def test_watermark_filter_pushes_to_scan(catalog_plans):
+    plan = catalog_plans["watermark_window"][1]
     assert "PushedFilters: [" in plan
     # the raw-column NTZ-literal comparisons must reach the reader
     # (not post-scan; an expression over ts would not push)
     assert "GreaterThan(ts" in plan and "LessThanOrEqual(ts" in plan
 
 
-def test_pricing_summary_prunes_and_pushes(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "pricing_summary")
+def test_pricing_summary_prunes_and_pushes(catalog_plans):
+    plan = catalog_plans["pricing_summary"][1]
     # shipdate predicate reaches the parquet reader
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
     # column pruning: the 16-column table scans only the 7 needed
@@ -240,45 +235,45 @@ def test_pricing_summary_prunes_and_pushes(spark, sf_dir):
     assert "l_orderkey" not in read_schema and "l_partkey" not in read_schema
 
 
-def test_star_join_broadcasts_dims(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "star_join")
+def test_star_join_broadcasts_dims(catalog_plans):
+    plan = catalog_plans["star_join"][1]
     assert plan.count("BroadcastHashJoin") >= 2  # nation and region
     assert "SortMergeJoin" not in plan
 
 
-def test_shipping_priority_shape(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "shipping_priority")
+def test_shipping_priority_shape(catalog_plans):
+    plan = catalog_plans["shipping_priority"][1]
     assert "BroadcastHashJoin" in plan  # filtered customer side
     assert "TakeOrderedAndProject" in plan  # top-k without global sort
 
 
-def test_topk_is_take_ordered_not_global_sort(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "topk_orders")
+def test_topk_is_take_ordered_not_global_sort(catalog_plans):
+    plan = catalog_plans["topk_orders"][1]
     assert "TakeOrderedAndProject" in plan
 
 
-def test_sessionize_single_shuffle(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "events_sessionize")
+def test_sessionize_single_shuffle(catalog_plans):
+    plan = catalog_plans["events_sessionize"][1]
     assert plan.count("Exchange") == 1  # windows + agg share hash(user_id)
 
 
-def test_tumbling_window_partial_agg(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "events_tumbling_hourly")
+def test_tumbling_window_partial_agg(catalog_plans):
+    plan = catalog_plans["events_tumbling_hourly"][1]
     assert "partial_count" in plan  # map-side combine before the shuffle
     assert plan.count("Exchange") == 1
 
 
 @pytest.mark.parametrize("name", ["semi_join", "anti_join"])
-def test_exists_forms_stay_joins(spark, sf_dir, name):
-    plan = _plan(spark, sf_dir, name)
+def test_exists_forms_stay_joins(catalog_plans, name):
+    plan = catalog_plans[name][1]
     assert "LeftSemi" in plan or "LeftAnti" in plan
 
 
-def test_disjunctive_pushdown_splits_conjuncts(spark, sf_dir):
+def test_disjunctive_pushdown_splits_conjuncts(catalog_plans):
     """Q19 shape: the OR-of-ANDs must decompose into single-side
     pushed filters (quantity range on lineitem, brand/size on part)
     with only the cross-side disjunction left as join residual."""
-    plan = _plan(spark, sf_dir, "disjunctive_revenue")
+    plan = catalog_plans["disjunctive_revenue"][1]
     assert "PushedFilters: [" in plan
     # the disjunction of quantity ranges reaches the lineitem scan
     assert "Or(Or(And(GreaterThanOrEqual(l_quantity,1.0)" in plan
@@ -288,129 +283,129 @@ def test_disjunctive_pushdown_splits_conjuncts(spark, sf_dir):
     assert "BroadcastHashJoin" in plan
 
 
-def test_q21_shape_semi_anti_no_extra_shuffle(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "sole_return_suppliers")
+def test_q21_shape_semi_anti_no_extra_shuffle(catalog_plans):
+    plan = catalog_plans["sole_return_suppliers"][1]
     assert "LeftSemi" in plan and "LeftAnti" in plan
     assert "TakeOrderedAndProject" in plan
 
 
-def test_order_gap_window_and_agg_share_one_exchange(spark, sf_dir):
+def test_order_gap_window_and_agg_share_one_exchange(catalog_plans):
     """LAG window on o_custkey and the downstream groupBy must reuse
     the same hash partitioning — exactly one Exchange."""
-    plan = _plan(spark, sf_dir, "order_gap_stats")
+    plan = catalog_plans["order_gap_stats"][1]
     assert plan.count("Exchange") == 1
 
 
-def test_grouping_sets_single_expand(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "grouping_sets_summary")
+def test_grouping_sets_single_expand(catalog_plans):
+    plan = catalog_plans["grouping_sets_summary"][1]
     assert plan.count("Expand") == 1
     assert plan.count("Exchange") == 1
 
 
-def test_balanced_mix_broadcasts_rates_not_fact(spark, sf_dir):
+def test_balanced_mix_broadcasts_rates_not_fact(catalog_plans):
     """The per-source rate table must broadcast back onto the corpus
     (one tiny agg; the documents scan itself joins map-side)."""
-    plan = _plan(spark, sf_dir, "doc_balanced_mix")
+    plan = catalog_plans["doc_balanced_mix"][1]
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
 
-def test_split_and_redaction_are_map_side_only(spark, sf_dir):
+def test_split_and_redaction_are_map_side_only(catalog_plans):
     """Pure per-row operators must not shuffle at all."""
     for name in ("doc_split_assign", "doc_pii_redaction"):
-        plan = _plan(spark, sf_dir, name)
+        plan = catalog_plans[name][1]
         assert "Exchange" not in plan, name
         # '*(1)' prefix = the stage runs inside whole-stage codegen
         assert "*(1)" in plan, name
 
 
-def test_small_quantity_brand_filter_reaches_both_passes(spark, sf_dir):
+def test_small_quantity_brand_filter_reaches_both_passes(catalog_plans):
     """Q17 shape: the brand restriction must semi-join-prune BOTH the
     revenue side and the per-part average side (never aggregate
     averages for the other ~96% of parts)."""
-    plan = _plan(spark, sf_dir, "small_quantity_revenue")
+    plan = catalog_plans["small_quantity_revenue"][1]
     assert plan.count("LeftSemi") >= 2
 
 
-def test_q16_not_in_plans_null_aware_hash_join(spark, sf_dir):
+def test_q16_not_in_plans_null_aware_hash_join(catalog_plans):
     """NOT IN must lower to a null-aware BROADCAST HASH anti join
     (the trailing `true` flag), never a nested-loop scan — Spark only
     recognizes the `eq | isnull(eq)` single-column pattern, so this
     locks that rewrite in."""
-    plan = _plan(spark, sf_dir, "supplier_class_counts")
+    plan = catalog_plans["supplier_class_counts"][1]
     assert "LeftAnti, BuildRight, true" in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_q10_topk_no_global_sort(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "returned_item_report")
+def test_q10_topk_no_global_sort(catalog_plans):
+    plan = catalog_plans["returned_item_report"][1]
     assert "TakeOrderedAndProject" in plan
 
 
-def test_q20_nested_semis_single_agg_shuffle(spark, sf_dir):
+def test_q20_nested_semis_single_agg_shuffle(catalog_plans):
     """Both IN subqueries must be semi joins; the only shuffle that
     scales with lineitem is the per-supplier aggregate."""
-    plan = _plan(spark, sf_dir, "heavy_part_shippers")
+    plan = catalog_plans["heavy_part_shippers"][1]
     assert plan.count("LeftSemi") == 2
     assert "CartesianProduct" not in plan
 
 
-def test_q8_fact_predicates_push_to_scans(spark, sf_dir):
+def test_q8_fact_predicates_push_to_scans(catalog_plans):
     """The deepest join tree in the catalog: date range must reach the
     orders scan and the type filter the part scan."""
-    plan = _plan(spark, sf_dir, "market_share")
+    plan = catalog_plans["market_share"][1]
     assert "GreaterThanOrEqual(o_orderdate" in plan
     assert "EqualTo(p_type,ECONOMY)" in plan
 
 
-def test_chunking_is_map_side_codegen(spark, sf_dir):
+def test_chunking_is_map_side_codegen(catalog_plans):
     """Chunking = project + generate only: zero shuffles, inside
     whole-stage codegen."""
-    plan = _plan(spark, sf_dir, "doc_chunking")
+    plan = catalog_plans["doc_chunking"][1]
     assert "Exchange" not in plan
     assert "*(1)" in plan
 
 
-def test_packing_single_shard_shuffle(spark, sf_dir):
+def test_packing_single_shard_shuffle(catalog_plans):
     """Sequence packing may shuffle exactly once — on the shard id."""
-    plan = _plan(spark, sf_dir, "doc_pack_windows")
+    plan = catalog_plans["doc_pack_windows"][1]
     assert plan.count("Exchange") == 1
     assert "hashpartitioning(shard" in plan
 
 
-def test_q2_argmin_scans_fact_once(spark, sf_dir):
+def test_q2_argmin_scans_fact_once(catalog_plans):
     """The window-MIN decorrelation must scan lineitem ONCE (the
     join-back form would aggregate the fact twice) — 3 scans total:
     lineitem + the two broadcast dims."""
-    plan = _plan(spark, sf_dir, "min_cost_supplier")
+    plan = catalog_plans["min_cost_supplier"][1]
     assert plan.count("FileScan parquet") == 3
 
 
-def test_minhash_signature_agg_combines_map_side(spark, sf_dir):
+def test_minhash_signature_agg_combines_map_side(catalog_plans):
     """The 32 per-seed MINs must partial-aggregate before the doc_id
     shuffle — at 100 TB the shuffle then carries k longs per doc, not
     the exploded (doc, shingle) stream."""
-    plan = _plan(spark, sf_dir, "minhash_lsh_pairs")
+    plan = catalog_plans["minhash_lsh_pairs"][1]
     assert "partial_min" in plan
     assert "CartesianProduct" not in plan
 
 
-def test_simhash_votes_combine_map_side(spark, sf_dir):
+def test_simhash_votes_combine_map_side(catalog_plans):
     """Per-bit majority votes are partial SUMs before the doc_id
     shuffle (token stream reduced to 60 longs map-side)."""
-    plan = _plan(spark, sf_dir, "simhash_neardup")
+    plan = catalog_plans["simhash_neardup"][1]
     assert "partial_sum" in plan
 
 
-def test_hopping_window_single_shuffle_partial_agg(spark, sf_dir):
+def test_hopping_window_single_shuffle_partial_agg(catalog_plans):
     """The overlap explode is map-side; one Exchange with map-side
     combine does the rest."""
-    plan = _plan(spark, sf_dir, "events_hopping_counts")
+    plan = catalog_plans["events_hopping_counts"][1]
     assert plan.count("Exchange") == 1
     assert "partial_count" in plan
 
 
-def test_lsh_bits_computed_via_arrow_matmul(spark, sf_dir):
+def test_lsh_bits_computed_via_arrow_matmul(catalog_plans):
     """LSH bucket bits must come from Arrow-batched matmul UDFs
     (ArrowEvalPython nodes), never from interpreted per-plane
     higher-order folds — the r2 regression: per-lambda aggregate()
@@ -418,7 +413,7 @@ def test_lsh_bits_computed_via_arrow_matmul(spark, sf_dir):
     rerank legitimately uses a Catalyst fold per CANDIDATE pair; the
     guard is that the per-ROW bit computation stays in Arrow.)"""
     for name in ("embedding_lsh_pairs", "embedding_lsh_multiprobe"):
-        plan = _plan(spark, sf_dir, name)
+        plan = catalog_plans[name][1]
         assert plan.count("ArrowEvalPython") >= 1, name
 
 
@@ -464,7 +459,7 @@ def test_star_join_dynamic_partition_pruning(spark, sf_dir, tmp_path):
     assert j.count() == expect
 
 
-def test_scrub_reassembly_is_map_side_filter_not_pos_join(spark, sf_dir):
+def test_scrub_reassembly_is_map_side_filter_not_pos_join(catalog_plans):
     """doc_frequent_ngram_scrub's reassembly must stay the map-side
     higher-order-filter shape: no posexplode of token positions and
     no anti join — their presence means the 3-shuffle
@@ -472,7 +467,7 @@ def test_scrub_reassembly_is_map_side_filter_not_pos_join(spark, sf_dir):
     sf0.1, and its extra shuffles grow with the corpus). The only
     Generate is the gram explode (it prints once per consumer of the
     cached gram relation, so count by signature, not occurrences)."""
-    plan = _plan(spark, sf_dir, "doc_frequent_ngram_scrub")
+    plan = catalog_plans["doc_frequent_ngram_scrub"][1]
     assert "posexplode" not in plan, plan
     assert "LeftAnti" not in plan, plan
     assert "Generate explode(transform(sequence(1," in plan
@@ -555,26 +550,23 @@ def test_forecast_revenue_pushes_every_conjunct(spark, sf_dir):
     assert "l_orderkey" not in read_schema and "l_returnflag" not in read_schema
 
 
-def test_winsorize_bounds_are_driver_literals_not_nlj(spark, sf_dir):
+def test_winsorize_bounds_are_driver_literals_not_nlj(catalog_plans):
     """price_winsorize_report's [p01,p99] bounds are driver LITERALS
     from the bounded-memory exact-percentile machinery (r11: the
     scalar-subquery F.percentile was a single final-agg buffer over
     the whole fact column — the HBOS weak-#1 pattern). The final plan
     must be ONE plain aggregate over the scan: no percentile
     aggregate, no subquery re-execution surface, no NLJ."""
-    from teleco_etl_pipeline_spark.plans.registry import all_queries
-
-    df = all_queries()["price_winsorize_report"].build(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = catalog_plans["price_winsorize_report"][1]
     assert "percentile" not in plan.lower()
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 
 
-def test_cms_scan_prunes_to_key_column(spark, sf_dir):
+def test_cms_scan_prunes_to_key_column(catalog_plans):
     """The count-min build must read ONLY the sketched key from the
     16-column fact table, and probe via broadcast joins."""
-    plan = _plan(spark, sf_dir, "cms_frequency_estimates")
+    plan = catalog_plans["cms_frequency_estimates"][1]
     read_schema = plan.split("ReadSchema: ")[1].splitlines()[0]
     assert "l_partkey" in read_schema
     assert "l_extendedprice" not in read_schema and "l_comment" not in read_schema
@@ -582,45 +574,45 @@ def test_cms_scan_prunes_to_key_column(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
-def test_profile_is_one_scan_one_expand(spark, sf_dir):
+def test_profile_is_one_scan_one_expand(catalog_plans):
     """The column profiler must be a single scan with ONE Expand for
     the multi-distinct — not N per-column scans."""
-    plan = _plan(spark, sf_dir, "orders_column_profile")
+    plan = catalog_plans["orders_column_profile"][1]
     assert plan.count("Scan parquet") == 1
     assert plan.count("Expand") == 1
 
 
-def test_fk_integrity_broadcasts_every_dim(spark, sf_dir):
+def test_fk_integrity_broadcasts_every_dim(catalog_plans):
     """All 7 FK edges must probe via broadcast joins of the distinct
     parent keys — no shuffle join anywhere in the sweep."""
-    plan = _plan(spark, sf_dir, "fk_integrity_report")
+    plan = catalog_plans["fk_integrity_report"][1]
     assert plan.count("BroadcastHashJoin") == 7
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
 
 
-def test_triangle_join_has_no_shuffle_explosion_markers(spark, sf_dir):
+def test_triangle_join_has_no_shuffle_explosion_markers(catalog_plans):
     """Triangle enumeration is equi-joins only (wedge closes on an
     equality of oriented edges) — no theta join may appear."""
-    plan = _plan(spark, sf_dir, "supplier_triangle_count")
+    plan = catalog_plans["supplier_triangle_count"][1]
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_bpe_encode_vocab_join_broadcasts(spark, sf_dir):
+def test_bpe_encode_vocab_join_broadcasts(catalog_plans):
     """Tokenizer application joins the doc token stream against the
     vocab-sized word→token-count table — the vocab side must hash-join
     (broadcast at this scale), never nested-loop."""
-    plan = _plan(spark, sf_dir, "bpe_encode_docs")
+    plan = catalog_plans["bpe_encode_docs"][1]
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 
 
-def test_incremental_index_dedup_broadcasts_batch_probe(spark, sf_dir):
+def test_incremental_index_dedup_broadcasts_batch_probe(catalog_plans):
     """The stored-index dedup's contract is ZERO corpus shuffle: the
     (small) batch band table broadcasts onto the stored index scan.
     Pin the BroadcastHashJoin so a future rewrite can't silently
     regress to shuffling the corpus-sized index."""
-    plan = _plan(spark, sf_dir, "incremental_index_dedup")
+    plan = catalog_plans["incremental_index_dedup"][1]
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
@@ -692,12 +684,12 @@ def test_ppr_superstep_broadcasts_frontier(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_sq8_is_scan_plus_takeordered(spark, sf_dir):
+def test_sq8_is_scan_plus_takeordered(catalog_plans):
     """SQ8's candidate stage is ONE projection scan over the
     embeddings table feeding a TakeOrdered top-C (the trained range
     and query code are literals) — no join anywhere; the rerank runs
     on the 50-row candidate frame."""
-    plan = _plan(spark, sf_dir, "embedding_sq8_topk")
+    plan = catalog_plans["embedding_sq8_topk"][1]
     assert "TakeOrderedAndProject" in plan
     for marker in (
         "SortMergeJoin",
@@ -708,11 +700,11 @@ def test_sq8_is_scan_plus_takeordered(spark, sf_dir):
         assert marker not in plan
 
 
-def test_key_skew_report_is_two_reduces_no_join(spark, sf_dir):
+def test_key_skew_report_is_two_reduces_no_join(catalog_plans):
     """The skew diagnostic must never itself skew: two hash
     aggregations (map-side combined), zero joins, and the scan reads
     only the two key columns."""
-    plan = _plan(spark, sf_dir, "events_key_skew_report")
+    plan = catalog_plans["events_key_skew_report"][1]
     for marker in (
         "SortMergeJoin",
         "BroadcastHashJoin",
@@ -725,30 +717,30 @@ def test_key_skew_report_is_two_reduces_no_join(spark, sf_dir):
     assert "props" not in read_schema and "value" not in read_schema
 
 
-def test_hard_negatives_broadcasts_anchor_set(spark, sf_dir):
+def test_hard_negatives_broadcasts_anchor_set(catalog_plans):
     """Hard-negative mining is the batch_topk broadcast shape: the
     anchor set broadcasts (BroadcastNestedLoopJoin on the inequality
     pair — the sanctioned Q≪N scan), the corpus never shuffles."""
-    plan = _plan(spark, sf_dir, "embedding_hard_negatives")
+    plan = catalog_plans["embedding_hard_negatives"][1]
     assert "Broadcast" in plan
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
 
 
-def test_textrank_graph_build_dedups_before_supersteps(spark, sf_dir):
+def test_textrank_graph_build_dedups_before_supersteps(catalog_plans):
     """The co-occurrence graph is DISTINCT pairs (vocabulary-sized),
     and the superstep plan (post-checkpoint) is the single-join
     shape: exactly one join per iteration, no nested-loop."""
-    plan = _plan(spark, sf_dir, "doc_textrank_keywords")
+    plan = catalog_plans["doc_textrank_keywords"][1]
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 
 
-def test_markov_stationary_single_stream_pass(spark, sf_dir):
+def test_markov_stationary_single_stream_pass(catalog_plans):
     """The events stream pays one window + reduce; the final plan's
     joins run on the checkpointed |types|^2 matrix (scanned as an
     ExistingRDD, never re-deriving the events lineage)."""
-    plan = _plan(spark, sf_dir, "events_markov_stationary")
+    plan = catalog_plans["events_markov_stationary"][1]
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     # post-checkpoint supersteps: the weight matrix is an RDD scan
@@ -785,117 +777,117 @@ def _no_unpartitioned_window_on(plan: str, *cols: str) -> list[str]:
     ]
 
 
-def test_mannwhitney_rank_comes_from_value_histogram(spark, sf_dir):
+def test_mannwhitney_rank_comes_from_value_histogram(catalog_plans):
     """No per-row rank window over the filtered orders frame: the
     rank-sum folds from the per-cents histogram cumsum (weak #1,
     r11 verdict). The only unpartitioned window left is the
     value_cumsum level-2 offset cumsum over ≤ _RANK_BUCKETS rows."""
-    plan = _plan(spark, sf_dir, "mannwhitney_priority")
+    plan = catalog_plans["mannwhitney_priority"][1]
     assert not _no_unpartitioned_window_on(plan, "cents")
 
 
-def test_acctbal_quantile_normalize_ranks_are_two_phase(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "acctbal_quantile_normalize")
+def test_acctbal_quantile_normalize_ranks_are_two_phase(catalog_plans):
+    plan = catalog_plans["acctbal_quantile_normalize"][1]
     assert "hashpartitioning(__pid" in plan  # per-bucket local windows
     assert not _no_unpartitioned_window_on(plan, "c_acctbal", "s_acctbal")
 
 
-def test_balance_deciles_ntile_is_two_phase(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "balance_deciles")
+def test_balance_deciles_ntile_is_two_phase(catalog_plans):
+    plan = catalog_plans["balance_deciles"][1]
     assert "hashpartitioning(__pid" in plan
     assert not _no_unpartitioned_window_on(plan, "c_acctbal")
 
 
-def test_model_lift_gains_ntile_is_two_phase(spark, sf_dir):
+def test_model_lift_gains_ntile_is_two_phase(catalog_plans):
     """The 10-row decile frame is localCheckpointed (its lineage —
     including the two-phase rank — runs at build time and the final
     plan scans an ExistingRDD), so assert the checkpoint boundary and
     the absence of any unpartitioned acctbal window; the rank
     machinery itself is pinned via balance_deciles, which shares it
     un-checkpointed."""
-    plan = _plan(spark, sf_dir, "model_lift_gains")
+    plan = catalog_plans["model_lift_gains"][1]
     assert "ExistingRDD" in plan or "Scan[obj" in plan
     assert not _no_unpartitioned_window_on(plan, "c_acctbal")
 
 
-def test_customer_pareto_cumsum_is_two_phase(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "customer_pareto_abc")
+def test_customer_pareto_cumsum_is_two_phase(catalog_plans):
+    plan = catalog_plans["customer_pareto_abc"][1]
     assert "hashpartitioning(__pid" in plan
     assert not _no_unpartitioned_window_on(plan, "spend")
 
 
-def test_customer_spend_percentile_uses_value_histogram(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "customer_spend_percentile")
+def test_customer_spend_percentile_uses_value_histogram(catalog_plans):
+    plan = catalog_plans["customer_spend_percentile"][1]
     assert not _no_unpartitioned_window_on(plan, "total_spend")
 
 
-def test_gopher_rules_is_one_scan_map_side(spark, sf_dir):
+def test_gopher_rules_is_one_scan_map_side(catalog_plans):
     """The Gopher report is a single documents scan + one partial-agg
     fold: no join, no window; at most two exchanges — the 1-row final
     aggregation plus (at compact test layouts only) the
     ensure_min_splits cliff-guard repartition, which is a no-op at
     >= 1 split/core layouts."""
-    plan = _plan(spark, sf_dir, "doc_gopher_rules")
+    plan = catalog_plans["doc_gopher_rules"][1]
     assert "Join" not in plan
     assert "Window" not in plan
     assert plan.count("Exchange") <= 2
 
 
-def test_dsir_scoring_join_broadcasts_bucket_model(spark, sf_dir):
+def test_dsir_scoring_join_broadcasts_bucket_model(catalog_plans):
     """The 256-bucket DSIR model broadcasts onto the token stream
     (BroadcastHashJoin on bucket); the corpus is never shuffled by
     bucket, and the top-k is TakeOrdered, not a global sort."""
-    plan = _plan(spark, sf_dir, "doc_dsir_importance")
+    plan = catalog_plans["doc_dsir_importance"][1]
     assert "BroadcastHashJoin" in plan
     assert "TakeOrderedAndProject" in plan
 
 
-def test_kendall_pair_join_runs_on_checkpointed_cells(spark, sf_dir):
+def test_kendall_pair_join_runs_on_checkpointed_cells(catalog_plans):
     """The O(cells²) concordance fold must read the materialized
     550-cell frame (ExistingRDD), never re-deriving the fact-table
     lineage per consumer — the final plan contains NO parquet scan
     of lineitem at all (four consumers, one checkpointed source)."""
-    plan = _plan(spark, sf_dir, "lineitem_kendall_tau")
+    plan = catalog_plans["lineitem_kendall_tau"][1]
     assert "ExistingRDD" in plan
     assert "lineitem.parquet" not in plan
 
 
-def test_range_search_anchor_cap_pushes_to_scan(spark, sf_dir):
+def test_range_search_anchor_cap_pushes_to_scan(catalog_plans):
     """The constant-Q anchor predicate (vec_id % 97 = 0 AND vec_id <
     1552) must reach the parquet reader on the anchor side, and the
     corpus side is scanned once with the anchor set broadcast."""
-    plan = _plan(spark, sf_dir, "embedding_query_range_search")
+    plan = catalog_plans["embedding_query_range_search"][1]
     assert "PushedFilters" in plan and "LessThan(vec_id,1552)" in plan
     assert "BroadcastNestedLoopJoin" in plan  # sanctioned Q≪N product
 
 
-def test_brownforsythe_median_window_is_group_partitioned(spark, sf_dir):
+def test_brownforsythe_median_window_is_group_partitioned(catalog_plans):
     """The per-group median machinery's cumsum windows run partitioned
     by priority over the VALUE frame — no unpartitioned window
     anywhere in the build (the final frame is literal-only)."""
-    plan = _plan(spark, sf_dir, "priority_brownforsythe")
+    plan = catalog_plans["priority_brownforsythe"][1]
     # final plan is a 1-row literal projection (driver fold)
     assert "Scan OneRowRelation" in plan or "Range (0, 1" in plan
     assert not _no_unpartitioned_window_on(plan, "cents")
 
 
-def test_rfm_ntiles_are_two_phase(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "customer_rfm_segments")
+def test_rfm_ntiles_are_two_phase(catalog_plans):
+    plan = catalog_plans["customer_rfm_segments"][1]
     assert "hashpartitioning(__pid" in plan
     assert not _no_unpartitioned_window_on(plan, "rec_day", "freq", "mon")
 
 
-def test_calibration_rank_is_two_phase(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "score_calibration_bins")
+def test_calibration_rank_is_two_phase(catalog_plans):
+    plan = catalog_plans["score_calibration_bins"][1]
     assert "hashpartitioning(__pid" in plan
     assert not _no_unpartitioned_window_on(plan, "c_acctbal")
 
 
-def test_gini_rank_is_grouped_two_phase(spark, sf_dir):
+def test_gini_rank_is_grouped_two_phase(catalog_plans):
     """The per-segment rank runs as the GROUPED two-phase window —
     partitioned by (__pid, segment), never by segment alone (which
     puts a whole segment in one task at extreme cardinality)."""
-    plan = _plan(spark, sf_dir, "segment_gini_spend")
+    plan = catalog_plans["segment_gini_spend"][1]
     assert "hashpartitioning(__pid" in plan
     assert not _no_unpartitioned_window_on(plan, "cents")
 
@@ -933,84 +925,84 @@ def test_neardup_pipeline_pair_stage_is_frequency_guarded(spark, sf_dir):
         assert "HAVING COUNT(*) <=" in all_queries()[name].oracle
 
 
-def test_ks_cumsum_is_two_level_bucketed(spark, sf_dir):
+def test_ks_cumsum_is_two_level_bucketed(catalog_plans):
     """Both ECDF counters (c1, c2) ride the multi-measure
     value_cumsum: the cents-frame window is partitioned by the range
     bucket __b, and no unpartitioned window orders on cents (the
     cents grid reaches ~5e7 distinct values at scale — r12 watch #2).
     The peak argmax is a struct-max aggregate, so no whole-frame
     window survives anywhere in the plan."""
-    plan = _plan(spark, sf_dir, "ks_priority_totalprice")
+    plan = catalog_plans["ks_priority_totalprice"][1]
     assert "hashpartitioning(__b" in plan
     assert not _no_unpartitioned_window_on(plan, "cents", "d_num")
 
 
-def test_skyline_prefix_max_is_two_level_bucketed(spark, sf_dir):
+def test_skyline_prefix_max_is_two_level_bucketed(catalog_plans):
     """The skyline sweep's prev_best comes from value_prefix_max —
     per-bucket local prefix maxima under hashpartitioning(__b), never
     an unpartitioned window ordered on the cost grid."""
-    plan = _plan(spark, sf_dir, "part_price_skyline")
+    plan = catalog_plans["part_price_skyline"][1]
     assert "hashpartitioning(__b" in plan
     assert not _no_unpartitioned_window_on(plan, "cost", "price_cents")
 
 
-def test_kruskal_wallis_ranks_come_from_value_histogram(spark, sf_dir):
+def test_kruskal_wallis_ranks_come_from_value_histogram(catalog_plans):
     """No per-row rank window over the orders frame: the k rank-sums
     fold from the (group, value) histogram joined to the two-level
     bucketed cumsum — the mannwhitney shape generalized to k groups.
     Final frame is a 1-row driver-fold literal."""
-    plan = _plan(spark, sf_dir, "orders_kruskal_wallis")
+    plan = catalog_plans["orders_kruskal_wallis"][1]
     assert "Scan OneRowRelation" in plan or "Range (0, 1" in plan
     assert not _no_unpartitioned_window_on(plan, "cents")
 
 
-def test_mann_kendall_runs_at_day_grain(spark, sf_dir):
+def test_mann_kendall_runs_at_day_grain(catalog_plans):
     """The pairwise i<j fold joins the CHECKPOINTED day frame to
     itself (ExistingRDD — one fact scan total, the theilsen shape);
     the fact table never self-joins."""
-    plan = _plan(spark, sf_dir, "daily_revenue_mann_kendall")
+    plan = catalog_plans["daily_revenue_mann_kendall"][1]
     assert "ExistingRDD" in plan
     assert "orders.parquet" not in plan
 
 
-def test_cvm_cumsum_is_two_level_bucketed(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "cvm_priority_totalprice")
+def test_cvm_cumsum_is_two_level_bucketed(catalog_plans):
+    plan = catalog_plans["cvm_priority_totalprice"][1]
     assert "hashpartitioning(__b" in plan
     assert not _no_unpartitioned_window_on(plan, "cents")
 
 
-def test_bucketed_range_search_is_equijoin(spark, sf_dir):
+def test_bucketed_range_search_is_equijoin(catalog_plans):
     """The large-Q swap must be the bucket equi-join shape: a
     BroadcastHashJoin on (tbl, bucket) — NOT the broadcast
     nested-loop Q×N product of the constant-Q default."""
-    plan = _plan(spark, sf_dir, "embedding_query_range_search_bucketed")
+    plan = catalog_plans["embedding_query_range_search_bucketed"][1]
     assert "BroadcastHashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 
 
-def test_jonckheere_folds_at_value_grain(spark, sf_dir):
+def test_jonckheere_folds_at_value_grain(catalog_plans):
     """All 10 pairwise U counts fold from the five group counters on
     the multi-measure value_cumsum frame — no per-row rank window, no
     group-pair self-join of the fact table; final frame is a 1-row
     driver-fold literal."""
-    plan = _plan(spark, sf_dir, "orders_jonckheere_terpstra")
+    plan = catalog_plans["orders_jonckheere_terpstra"][1]
     assert "Scan OneRowRelation" in plan or "Range (0, 1" in plan
     assert not _no_unpartitioned_window_on(plan, "cents")
 
 
-def test_welch_is_single_fact_pass_no_window(spark, sf_dir):
+def test_welch_is_single_fact_pass_no_window(catalog_plans):
     """One map-side-combined groupBy; the 2-row group frame folds
     with conditional MAX — no window, no join, no driver collect."""
-    plan = _plan(spark, sf_dir, "orders_welch_ttest")
+    plan = catalog_plans["orders_welch_ttest"][1]
     assert "Window" not in plan
     assert "Join" not in plan
 
 
-def test_rich_club_threshold_frame_broadcasts(spark, sf_dir):
+def test_rich_club_threshold_frame_broadcasts(catalog_plans):
     """The 5-row k frame and the degree maps broadcast onto the node
     and edge frames; no sort-merge join, no cartesian beyond the
     bounded 5-row fan-out."""
-    plan = _plan(spark, sf_dir, "part_rich_club")
+    plan = catalog_plans["part_rich_club"][1]
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
