@@ -407,6 +407,13 @@ def box_control(spark) -> dict | None:
     }
 
 
+def jvm_args(spark) -> list[str]:
+    """The JVM's ``-X``/``-XX:`` launch options (heap, JIT thresholds),
+    so an artifact names the settings it ran under."""
+    args = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()
+    return [a for a in args if a.startswith("-X")]
+
+
 def json_out_arg() -> str | None:
     """The ``[--json OUT]`` command line of the scaling harnesses."""
     parser = argparse.ArgumentParser()
@@ -448,6 +455,7 @@ def main() -> None:
         "artifact_fit_sec": fit_seconds(),
         "box_control": box_control(spark),
         "sf": float(sf) if sf else sf_dir,
+        "jvm_args": jvm_args(spark),
     }
     emit({**head, "queries": timings, "queries_min": timings_min, **tail})
     # The driver keeps only the TAIL of stdout; at 100+ queries the

@@ -5,8 +5,10 @@ The reference keeps four Postgres schemas (public/staging, bronze,
 silver, gold) plus pipeline metadata (dags/DataWarehouse.py:37,
 dags/SQL/Bronze/DDL_BronzeTable.sql, dags/SQL/Silver/DDL_Silver_
 Table.sql, dags/SQL/Gold/DDL_gold.sql). Here each layer is a
-directory of Parquet tables. ``Warehouse.read`` and ``write`` apply
-no schema: each table keeps the schema of the frame that wrote it.
+directory of Parquet tables. ``Warehouse.write`` applies no schema:
+each table keeps the schema of the frame that wrote it, and
+``Warehouse.read`` takes that schema from a data file's footer instead
+of running a Spark job to infer it.
 Pipeline metadata is no table: ``sources/state.py`` keeps it as JSON
 documents under ``meta/``, and ``META_SCHEMA`` is the file
 registry's shape when Spark reads it (``FileRegistry.frame``).
@@ -14,9 +16,11 @@ registry's shape when Spark reads it (``FileRegistry.frame``).
 
 from __future__ import annotations
 
+import json
 import os
 from dataclasses import dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -104,6 +108,37 @@ def _write_counted(df: DataFrame, write) -> int:
     return obs.get["rows"]
 
 
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _stored_schema(path: str) -> T.StructType | None:
+    """The Spark schema stored in the footer of the table's first data
+    file in path order, or ``None`` when that footer has none (a file
+    not written by Spark) or the table has no data file.
+
+    The file is the one Spark's own inference reads when
+    ``mergeSchema`` is off and no summary file exists (``Warehouse``
+    writes none): ``_``/``.``-prefixed names are skipped, the first of
+    the rest in path order decides. Only files directly in ``path``
+    count, so a partitioned directory falls back to inference, and a
+    missing one to Spark's own not-found error. Spark makes a user
+    schema nullable as it does an inferred one, so the two read the
+    same."""
+    if not os.path.isdir(path):
+        return None
+    files = sorted(
+        e.path
+        for e in os.scandir(path)
+        if e.is_file() and not e.name.startswith(("_", "."))
+    )
+    if not files:
+        return None
+    meta = pq.read_metadata(files[0]).metadata or {}
+    if _SPARK_SCHEMA_KEY not in meta:
+        return None
+    return T.StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+
+
 @dataclass
 class Warehouse:
     """Path layout + table IO for one warehouse root directory.
@@ -131,9 +166,13 @@ class Warehouse:
         return os.path.exists(path)
 
     def read(self, layer: str, table: str) -> DataFrame:
+        """The table, read with the schema its footer stores (no Spark
+        job); inferred by Spark when the footer carries none."""
         path = self.path(layer, table)
         heal_interrupted_swap(path)
-        return self.spark.read.parquet(path)
+        schema = _stored_schema(path)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(path)
 
     def write(self, df: DataFrame, layer: str, table: str, mode: str = "overwrite") -> int:
         """Write ``df`` to a table; returns the rows this call wrote."""

@@ -11,6 +11,26 @@ test runs while remaining the *right defaults* on a large cluster:
   cluster (cores × 2–4) is safe at any SF.
 - Arrow enabled for the few pandas bridges (Excel reports, ML
   fallbacks) — never in the relational hot path.
+- The driver JVM's tier-4 (C2) JIT thresholds are 10x HotSpot's JDK 17
+  defaults (``DRIVER_JIT_OPTIONS``). A cold daily run spent more CPU
+  in the JIT compiler threads than in its tasks: over ``perfbench``
+  ``bulk_load``'s timed steps (seed 1, 4 vCPU, per-thread CPU from
+  /proc) the C2 threads used 68.0 s and C1 12.5 s against 23.6 s of
+  executor tasks, compiling Catalyst planning, Janino codegen and
+  per-job scheduling code that runs only a few thousand times. With
+  the raised thresholds that code stays at C1 while per-row loops
+  still reach C2: C2 23.0 s, C1 10.8 s, tasks 24.6 s, and
+  ``bulk_load`` ``cpu_s`` median 141.6 -> 97.9 s over 10 seeds. A
+  long query session stays inside its own run-to-run spread: the sf0.1
+  10-query ``bench.time_query`` subset's sum of medians read 38.5-46.0 s
+  before, median 43.6 s after. C1 alone (``-XX:TieredStopAtLevel=1``)
+  cut ``bulk_load`` further (``cpu_s`` 67.0 and 70.2 s on two seeds)
+  but slowed that session, where per-row loops dominate, to 73.4 s
+  (``minhash_lsh_pairs`` 6.8-8.9 -> 23.2 s, ``pricing_summary``
+  2.1-3.0 -> 6.1 s).
+  In ``local[N]`` the driver JVM is every executor; on a cluster
+  only the planning driver gets the flags and executors keep their
+  defaults.
 """
 
 from __future__ import annotations
@@ -20,6 +40,16 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# HotSpot's four tier-4 (C2) compile thresholds at 10x their JDK 17
+# defaults (5000/600/15000/40000, ``java -XX:+PrintFlagsFinal``); the
+# measured reason is in the module docstring.
+DRIVER_JIT_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=50000"
+    " -XX:Tier4MinInvocationThreshold=6000"
+    " -XX:Tier4CompileThreshold=150000"
+    " -XX:Tier4BackEdgeThreshold=400000"
+)
 
 
 def get_spark(
@@ -93,6 +123,9 @@ def get_spark(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
         )
+        # --- JIT: C2 only for hot loops (module docstring). Like the
+        #     heap, only effective at JVM launch. ---
+        .config("spark.driver.extraJavaOptions", DRIVER_JIT_OPTIONS)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

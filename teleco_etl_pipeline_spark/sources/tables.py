@@ -3,8 +3,12 @@
 The driver supplies deterministic TPC-H-ish parquet tables (see
 TESTDATA.md): region nation customer supplier part orders lineitem
 events documents embeddings. Loading is a plain
-``spark.read.parquet`` — no schema inference cost (parquet carries
-its schema), full predicate-pushdown / column-pruning support.
+``spark.read.parquet`` with full predicate-pushdown / column-pruning
+support. It is not free: each call runs one Spark job to infer the
+schema from a footer. These files are pandas-written, so their
+footers hold only ``ARROW:schema``/``pandas`` metadata and no Spark
+schema for ``Warehouse.read``'s footer shortcut (``catalog.py``) to
+take.
 
 Scale note: at 100 TB these reads become multi-thousand-file scans;
 ``spark.sql.files.maxPartitionBytes`` (set in session.py) controls

@@ -67,6 +67,19 @@ def test_time_query_runs_cold(spark, sf_dir):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def test_session_jvm_runs_raised_c2_thresholds(spark):
+    """get_spark launches the driver JVM with the tier-4 (C2) JIT
+    thresholds at 10x their defaults, and bench artifacts name them."""
+    args = _load_bench().jvm_args(spark)
+    assert {
+        "-XX:Tier4InvocationThreshold=50000",
+        "-XX:Tier4MinInvocationThreshold=6000",
+        "-XX:Tier4CompileThreshold=150000",
+        "-XX:Tier4BackEdgeThreshold=400000",
+    } <= set(args)
+    assert all(a.startswith("-X") for a in args)
+
+
 def test_record_window_is_exact_and_disjoint():
     """The 50-slot recording window must stay exactly 50 (the driver
     records the first 50 of queries() order), disjoint from the

@@ -48,6 +48,55 @@ def test_warehouse_writes_return_rows_written(spark, tmp_path):
     assert wh.write(ids(0, 1000).limit(0), "gold", "empty") == 0 == on_disk("empty")
 
 
+def test_warehouse_read_takes_the_footer_schema(spark, tmp_path):
+    """``Warehouse.read`` passes the schema Spark stored in a footer,
+    and it is the schema Spark's inference would give, for every kind
+    of write; a read starts no Spark job."""
+    wh = Warehouse(spark, str(tmp_path))
+
+    def frame(lo, hi, wide=False):
+        cols = [
+            F.col("id").alias("k"),
+            F.when(F.col("id") % 3 > 0, F.col("id").cast("string")).alias("s"),
+            F.lit(1.5).alias("x"),
+            F.to_timestamp(F.lit("2026-01-02 03:04:05")).alias("ts"),
+        ]
+        if wide:
+            cols.append(F.array(F.col("id")).alias("extra"))
+        return spark.range(lo, hi, numPartitions=4).select(*cols)
+
+    wh.write(frame(0, 100), "gold", "t")
+    wh.write(frame(100, 120, wide=True), "gold", "t", mode="append")
+    wh.overwrite_safe(frame(0, 50), "gold", "safe")
+    wh.write_zordered(frame(0, 100), "gold", "z", [F.pmod("k", F.lit(16))], n_files=4)
+    wh.write(frame(0, 10).limit(0), "gold", "empty")
+
+    sc = spark.sparkContext
+    for table in ("t", "safe", "z", "empty"):
+        sc.setLocalProperty("spark.jobGroup.id", f"read_{table}")
+        try:
+            got = wh.read("gold", table).schema
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(f"read_{table}") == [], table
+        assert got == spark.read.parquet(wh.path("gold", table)).schema, table
+
+
+def test_warehouse_read_infers_without_a_spark_footer(spark, tmp_path):
+    """A data file whose footer carries no Spark schema (written by
+    pyarrow) falls back to Spark's inference."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    wh = Warehouse(spark, str(tmp_path))
+    os.makedirs(wh.path("bronze", "arrow"))
+    table = pa.table({"k": pa.array([1, 2, 3], pa.int64()), "v": ["a", None, "c"]})
+    pq.write_table(table, os.path.join(wh.path("bronze", "arrow"), "part-0.parquet"))
+    df = wh.read("bronze", "arrow")
+    assert df.schema == spark.read.parquet(wh.path("bronze", "arrow")).schema
+    assert sorted(r["k"] for r in df.collect()) == [1, 2, 3]
+
+
 def test_parquet_delete_where_in_place(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path))
     df = spark.range(10).select(F.col("id").alias("k"))
