@@ -26,7 +26,11 @@ shares (see bench.py's docstring): each query is timed 3 times (the
 three stored-artifact serve rows 5 times, see STORED_RUNS), with the
 Spark cache cleared and a driver GC after EVERY run, and the JSON
 records per-query median, min, max and all runs, so the run band
-lives in the artifact itself (r11 verdict item 6). Median, not min:
+lives in the artifact itself (r11 verdict item 6). Each ``STORED``
+row is built once, untimed, before its timed runs at each SF: the
+build fits the artifact (``artifacts.fit_once``, once per process and
+SF), so the runs time the serve path alone and ``artifact_fit_sec``
+reports the fit. Median, not min:
 sf10 on this box includes genuine device I/O every run, so min would
 systematically pick the least-I/O-contended outlier. When the sf1
 dir exists, the sf1 baseline is re-measured inline under the same
@@ -169,6 +173,13 @@ QUERIES = [
 ]
 
 
+def _fit_stored(spark, name: str, sf_dir: str) -> None:
+    """Build a ``STORED`` row once, untimed, so its artifact fit does
+    not land in the first timed run."""
+    if name in STORED:
+        bench.all_queries()[name].build(spark, sf_dir)
+
+
 def main() -> None:
     json_out = bench.json_out_arg()
     if not os.path.isdir(SF10):
@@ -188,6 +199,7 @@ def main() -> None:
     results: dict[str, dict] = {}
     for name in QUERIES:
         n_runs = STORED_RUNS if name in STORED else 3
+        _fit_stored(spark, name, SF10)
         times = bench.time_query(spark, name, SF10, n_runs)
         med, best = bench.med_min(times)
         row: dict = {
@@ -198,6 +210,7 @@ def main() -> None:
         }
         base = sf1.get(name)
         if os.path.isdir(bench.SF1_DIR):
+            _fit_stored(spark, name, bench.SF1_DIR)
             base = bench.med_min(bench.time_query(spark, name, bench.SF1_DIR, n_runs))[0]
         if base:
             row["sec_sf1"] = base

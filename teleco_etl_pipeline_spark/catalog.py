@@ -9,6 +9,15 @@ directory of Parquet tables. ``Warehouse.write`` applies no schema:
 each table keeps the schema of the frame that wrote it, and
 ``Warehouse.read`` takes that schema from a data file's footer instead
 of running a Spark job to infer it.
+
+Every ``Warehouse`` write sizes its files by one rule,
+``max(1, ceil(input bytes / TARGET_FILE_BYTES))`` (``file_count``),
+where the input bytes are the sizes of the files the frame's plan reads
+(``_input_bytes``, worked out on the driver). A table's file count
+thus follows its data, not the core count or the partitioning its
+last stage happened to have. The session writes Parquet with zstd
+(``session.get_spark``).
+
 Pipeline metadata is no table: ``sources/state.py`` keeps it as JSON
 documents under ``meta/``, and ``META_SCHEMA`` is the file
 registry's shape when Spark reads it (``FileRegistry.frame``).
@@ -108,7 +117,52 @@ def _write_counted(df: DataFrame, write) -> int:
     return obs.get["rows"]
 
 
+# Output file size the sizing rule aims at; ``maintenance.compact``,
+# ``cluster_by`` and ``zorder_by`` use it too.
+TARGET_FILE_BYTES = 128 * 1024 * 1024
+
+
+def file_count(nbytes: int, target_file_bytes: int | None = None) -> int:
+    """Files to write for ``nbytes`` of data:
+    ``max(1, ceil(nbytes / target_file_bytes))``, the target defaulting
+    to ``TARGET_FILE_BYTES``."""
+    target = TARGET_FILE_BYTES if target_file_bytes is None else target_file_bytes
+    return max(1, -(-nbytes // target))
+
+
+def _input_bytes(df: DataFrame) -> int:
+    """Bytes of the files ``df``'s plan reads, from the sizes its file
+    indexes listed when the frame was built: no Spark job. Each index
+    counts once, however often the plan reads it.
+
+    The walk is over the analyzed plan, so it sees through a cache: in
+    the optimized plan a ``.cache()``d sub-plan is an
+    ``InMemoryRelation``, and ``DataFrame.inputFiles()`` finds no file
+    behind it."""
+    sizes = {}
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.getClass().getSimpleName() != "LogicalRelation":
+            continue
+        rel = leaf.relation()
+        if rel.getClass().getSimpleName() == "HadoopFsRelation":
+            index = rel.location()
+            sizes[index.rootPaths().mkString(",")] = index.sizeInBytes()
+    return sum(sizes.values())
+
+
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _data_files(path: str) -> list[str]:
+    """The data files directly in a table directory, in path order:
+    the names Spark does not skip (no ``_`` or ``.`` prefix)."""
+    return sorted(
+        e.path
+        for e in os.scandir(path)
+        if e.is_file() and not e.name.startswith(("_", "."))
+    )
 
 
 def _stored_schema(path: str) -> T.StructType | None:
@@ -126,17 +180,20 @@ def _stored_schema(path: str) -> T.StructType | None:
     same."""
     if not os.path.isdir(path):
         return None
-    files = sorted(
-        e.path
-        for e in os.scandir(path)
-        if e.is_file() and not e.name.startswith(("_", "."))
-    )
+    files = _data_files(path)
     if not files:
         return None
     meta = pq.read_metadata(files[0]).metadata or {}
     if _SPARK_SCHEMA_KEY not in meta:
         return None
     return T.StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+
+
+def _sized(df: DataFrame) -> DataFrame:
+    """``df`` narrowed to ``file_count`` of its input bytes partitions
+    (``coalesce``: no shuffle, and never more partitions than ``df``
+    has)."""
+    return df.coalesce(file_count(_input_bytes(df)))
 
 
 @dataclass
@@ -174,16 +231,24 @@ class Warehouse:
         reader = self.spark.read if schema is None else self.spark.read.schema(schema)
         return reader.parquet(path)
 
-    def write(self, df: DataFrame, layer: str, table: str, mode: str = "overwrite") -> int:
-        """Write ``df`` to a table; returns the rows this call wrote."""
+    def row_count(self, layer: str, table: str) -> int:
+        """The table's rows, summed from its data files' footers (no
+        Spark job). A missing table raises ``FileNotFoundError``."""
         path = self.path(layer, table)
-        return _write_counted(df, lambda d: d.write.mode(mode).parquet(path))
+        heal_interrupted_swap(path)
+        return sum(pq.read_metadata(f).num_rows for f in _data_files(path))
+
+    def write(self, df: DataFrame, layer: str, table: str, mode: str = "overwrite") -> int:
+        """Write ``df`` to a table in ``file_count`` of its input bytes
+        files; returns the rows this call wrote."""
+        path = self.path(layer, table)
+        return _write_counted(_sized(df), lambda d: d.write.mode(mode).parquet(path))
 
     def overwrite_safe(self, df: DataFrame, layer: str, table: str) -> int:
-        """Overwrite a table that ``df`` may lazily read from; returns
-        the rows written."""
+        """Overwrite a table that ``df`` may lazily read from, sized like
+        :meth:`write`; returns the rows written."""
         path = self.path(layer, table)
-        return _write_counted(df, lambda d: safe_overwrite(d, path))
+        return _write_counted(_sized(df), lambda d: safe_overwrite(d, path))
 
     def write_zordered(
         self,
@@ -191,7 +256,6 @@ class Warehouse:
         layer: str,
         table: str,
         zcols: list,
-        n_files: int = 16,
         bits: int = 8,
     ) -> int:
         """Overwrite a layer table Z-order-clustered on ``zcols`` —
@@ -203,17 +267,19 @@ class Warehouse:
 
         ``zcols`` are ALREADY-QUANTIZED integer Column expressions
         (e.g. ``pmod(customer_key, 256)``) — the
-        :func:`operators.layout.zorder_key` contract. ``n_files``
-        sizes output files: pick ~ table size / 128 MB at the target
-        SF (the clustering shuffle is the same single exchange a
-        plain sorted write would pay). Atomic like
-        :meth:`overwrite_safe`, and returns the rows written."""
+        :func:`operators.layout.zorder_key` contract. The range
+        exchange makes ``file_count`` of the input bytes files, so a
+        table smaller than ``TARGET_FILE_BYTES`` is one sorted file and
+        the layout prunes only once there are files to skip (the
+        clustering shuffle is the same single exchange a plain sorted
+        write would pay). Atomic like :meth:`overwrite_safe`, and
+        returns the rows written."""
         from teleco_etl_pipeline_spark.operators.layout import (
             zorder_repartition,
         )
 
         # Counted above the range exchange, not on ``df``: its sampler
         # job re-runs everything below it.
-        clustered = zorder_repartition(df, zcols, n_files, bits)
+        clustered = zorder_repartition(df, zcols, file_count(_input_bytes(df)), bits)
         path = self.path(layer, table)
         return _write_counted(clustered, lambda d: safe_overwrite(d, path))

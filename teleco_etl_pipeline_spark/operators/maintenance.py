@@ -27,10 +27,9 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from teleco_etl_pipeline_spark.catalog import TARGET_FILE_BYTES, file_count
 from teleco_etl_pipeline_spark.operators.upsert import safe_overwrite
 from teleco_etl_pipeline_spark.plans.registry import query
-
-DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 
 def table_bytes(spark: SparkSession, path: str) -> int:
@@ -46,12 +45,13 @@ def table_bytes(spark: SparkSession, path: str) -> int:
 def compact(
     spark: SparkSession,
     path: str,
-    target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
+    target_file_bytes: int = TARGET_FILE_BYTES,
     min_files: int = 1,
 ) -> int:
     """Rewrite the Parquet table at ``path`` into
-    ``ceil(bytes / target_file_bytes)`` files (at least ``min_files``).
-    Returns the file count written.
+    ``ceil(bytes / target_file_bytes)`` files (at least ``min_files``),
+    the sizing rule every ``Warehouse`` write uses
+    (``catalog.file_count``). Returns the file count written.
 
     The partition count is derived from the CURRENT on-disk bytes, so
     compaction is idempotent: re-running on an already-compact table
@@ -60,7 +60,7 @@ def compact(
     would funnel the write through few tasks and skew file sizes.
     """
     nbytes = table_bytes(spark, path)
-    n_files = max(min_files, -(-nbytes // target_file_bytes))
+    n_files = max(min_files, file_count(nbytes, target_file_bytes))
     df = spark.read.parquet(path).repartition(n_files)
     safe_overwrite(df, path)
     return n_files
@@ -70,7 +70,7 @@ def cluster_by(
     spark: SparkSession,
     path: str,
     keys: Sequence[str],
-    target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
+    target_file_bytes: int = TARGET_FILE_BYTES,
     min_files: int = 1,
 ) -> int:
     """Rewrite the table range-partitioned + sorted on ``keys`` so
@@ -80,7 +80,7 @@ def cluster_by(
     filters on ``keys`` afterwards skip whole files at plan time.
     """
     nbytes = table_bytes(spark, path)
-    n_files = max(min_files, -(-nbytes // target_file_bytes))
+    n_files = max(min_files, file_count(nbytes, target_file_bytes))
     cols = list(keys)
     df = (
         spark.read.parquet(path)
@@ -96,7 +96,7 @@ def zorder_by(
     path: str,
     keys: Sequence[str],
     bits: int = 10,
-    target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
+    target_file_bytes: int = TARGET_FILE_BYTES,
     min_files: int = 1,
 ) -> int:
     """Multi-dimensional clustering: rewrite the table ordered by the
@@ -126,7 +126,7 @@ def zorder_by(
             "one long z-value; lower bits or split the key set"
         )
     nbytes = table_bytes(spark, path)
-    n_files = max(min_files, -(-nbytes // target_file_bytes))
+    n_files = max(min_files, file_count(nbytes, target_file_bytes))
     df = spark.read.parquet(path)
     n_buckets = 1 << bits
     # ALL key bounds from one aggregation job (2×|keys| separate

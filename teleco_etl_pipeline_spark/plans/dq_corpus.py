@@ -11,6 +11,8 @@ expectation — they return data for the run report.
 
 All checks are single-pass aggregates or broadcast anti-joins — the
 whole corpus over a 100 TB warehouse is a handful of scans, not 40.
+Pure row counts scan nothing: they are summed from the tables'
+Parquet footers (``Warehouse.row_count``).
 """
 
 from __future__ import annotations
@@ -281,17 +283,23 @@ def all_checks() -> list[Check]:
     return checks
 
 
+def _footer_counts(wh: Warehouse, label_col: str, tables) -> DataFrame:
+    """``(label, row_count)`` per ``(label, layer, table)``, counted
+    from footers (``Warehouse.row_count``). A VALUES list collects
+    without a Spark job, where a frame built by ``createDataFrame``
+    runs one; both columns are non-null, as a ``count`` is."""
+    values = ", ".join(
+        f"('{label}', {wh.row_count(layer, table)}L)" for label, layer, table in tables
+    )
+    return wh.spark.sql(f"SELECT * FROM VALUES {values} AS t({label_col}, row_count)")
+
+
 def _dim_counts(wh: Warehouse) -> DataFrame:
-    parts = []
-    for t in ("dim_customer", "dim_contract", "dim_payment_method",
-              "dim_services", "dim_churn_reason", "fact_customer_churn"):
-        parts.append(
-            wh.read("gold", t).agg(F.count(F.lit(1)).alias("row_count"))
-            .select(F.lit(t).alias("table_name"), "row_count"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _footer_counts(wh, "table_name", [
+        (t, "gold", t)
+        for t in ("dim_customer", "dim_contract", "dim_payment_method",
+                  "dim_services", "dim_churn_reason", "fact_customer_churn")
+    ])
 
 
 def _orphans(wh: Warehouse, dim: str, key: str) -> DataFrame:
@@ -312,9 +320,9 @@ def _layer_customers(wh: Warehouse) -> DataFrame:
         .crossJoin(
             wh.read("gold", "dim_customer")
             .agg(F.countDistinct("customer_id").alias("gold_dim_customers")))
-        .crossJoin(
-            wh.read("gold", "fact_customer_churn")
-            .agg(F.count(F.lit(1)).alias("gold_fact_rows")))
+        .withColumn(
+            "gold_fact_rows",
+            F.lit(wh.row_count("gold", "fact_customer_churn")).cast("long"))
     )
 
 
@@ -330,20 +338,12 @@ def _missing_from_fact(wh: Warehouse) -> DataFrame:
 
 
 def _layer_summary(wh: Warehouse) -> DataFrame:
-    parts = []
-    for label, layer, table in (
+    return _footer_counts(wh, "layer", [
         ("Staging", "staging", "staging_churn"),
         ("Bronze", "bronze", "churn_raw"),
         ("Silver", "silver", "churn_raw"),
         ("Gold Fact", "gold", "fact_customer_churn"),
-    ):
-        parts.append(
-            wh.read(layer, table).agg(F.count(F.lit(1)).alias("row_count"))
-            .select(F.lit(label).alias("layer"), "row_count"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    ])
 
 
 def run_corpus(wh: Warehouse, sections: list[str] | None = None) -> dict:

@@ -20,7 +20,10 @@ Scale posture: dims are broadcast (small by construction — distinct
 values of ≤9 string columns); the fact build is one shuffle of
 silver on customer_id; bronze upsert shuffles on the business key —
 at 100 TB, bucket bronze+staging by customer_id to make it
-shuffle-free, and partition the fact by run_date for pruning.
+shuffle-free, and partition the fact by run_date for pruning. Every
+table's file count follows its input bytes, one file per 128 MB
+(``catalog.file_count``), whatever the core count or the last stage's
+partitioning: a day of a few MB lands as one file per table.
 """
 
 from __future__ import annotations
@@ -306,7 +309,10 @@ def build_fact(wh: Warehouse, run_date: str | None = None) -> int:
     downstream gold consumers filter by customer ranges (quality gate,
     upserts) AND by value bands (the ML label/feature scans), and
     Morton clustering bounds the per-file min/max span of BOTH —
-    single-column layout prunes one or the other."""
+    single-column layout prunes one or the other. The file count
+    follows the input bytes (``catalog.file_count``): a fact under
+    128 MB is one sorted file, and the layout starts to prune once
+    the fact spans several files."""
     run_date = run_date or dt.date.today().isoformat()
     s = wh.read("silver", "churn_raw").alias("s")
     c = F.broadcast(wh.read("gold", "dim_customer")).alias("c")
@@ -365,7 +371,6 @@ def build_fact(wh: Warehouse, run_date: str | None = None) -> int:
             F.pmod(F.col("customer_key"), F.lit(256)).cast("long"),
             F.pmod(F.coalesce(F.col("cltv"), F.lit(0)), F.lit(256)).cast("long"),
         ],
-        n_files=16,
     )
 
 

@@ -4,11 +4,13 @@ The driver supplies deterministic TPC-H-ish parquet tables (see
 TESTDATA.md): region nation customer supplier part orders lineitem
 events documents embeddings. Loading is a plain
 ``spark.read.parquet`` with full predicate-pushdown / column-pruning
-support. It is not free: each call runs one Spark job to infer the
-schema from a footer. These files are pandas-written, so their
-footers hold only ``ARROW:schema``/``pandas`` metadata and no Spark
-schema for ``Warehouse.read``'s footer shortcut (``catalog.py``) to
-take.
+support. The first load of a path runs one Spark job to infer the
+schema from a footer: these files are pandas-written, so their footers
+hold only ``ARROW:schema``/``pandas`` metadata and no Spark schema for
+``Warehouse.read``'s footer shortcut (``catalog.py``) to take. The
+inferred schema is kept per path, keyed on the first data file's
+name, size and mtime and on the ``nanosAsLong`` setting, and later
+loads pass it to ``spark.read.schema``: no job.
 
 Scale note: at 100 TB these reads become multi-thousand-file scans;
 ``spark.sql.files.maxPartitionBytes`` (set in session.py) controls
@@ -22,6 +24,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -45,10 +48,45 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # set BEFORE the read so the LongType normalization branch is
         # actually reachable for that vintage.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    df = _read_parquet(spark, path)
     if name == "events":
         df = _normalize_event_time(df)
     return df
+
+
+# Spark's inferred schema per (path, first data file's name, size and
+# mtime, nanosAsLong): a rewritten file or a flipped setting is
+# inferred again.
+_INFERRED: dict[tuple, StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema inferred by the
+    first read of the path passed to later ones (no inference job)."""
+    first = _first_data_file(path)
+    if first is None:
+        return spark.read.parquet(path)
+    st = os.stat(first)
+    nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong")
+    key = (path, first, st.st_size, st.st_mtime_ns, nanos)
+    schema = _INFERRED.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _INFERRED[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
+
+
+def _first_data_file(path: str) -> str | None:
+    """The file whose footer Spark's inference reads: ``path`` itself,
+    or the first in name order of a directory's files not prefixed
+    ``_`` or ``.``; ``None`` when there is none."""
+    if os.path.isfile(path):
+        return path
+    if not os.path.isdir(path):
+        return None
+    parts = sorted(f for f in os.listdir(path) if not f.startswith(("_", ".")))
+    return os.path.join(path, parts[0]) if parts else None
 
 
 def _events_ts_is_nanos(path: str) -> bool:
@@ -58,12 +96,10 @@ def _events_ts_is_nanos(path: str) -> bool:
     try:
         import pyarrow.parquet as pq
 
-        if os.path.isdir(path):
-            parts = [f for f in os.listdir(path) if f.endswith(".parquet")]
-            if not parts:
-                return False
-            path = os.path.join(path, sorted(parts)[0])
-        return str(pq.read_schema(path).field("ts").type) == "timestamp[ns]"
+        first = _first_data_file(path)
+        if first is None:
+            return False
+        return str(pq.read_schema(first).field("ts").type) == "timestamp[ns]"
     except Exception:  # noqa: BLE001 — unreadable footer ⇒ let Spark decide
         return False
 

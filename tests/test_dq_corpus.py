@@ -63,3 +63,46 @@ def test_corpus_catches_violation(built_wh):
             "gold",
             "fact_customer_churn",
         )
+
+
+def test_row_count_checks_read_footers(built_wh):
+    """The pure row-count checks give the rows and column types a Spark
+    count gives, and start no Spark job: they sum footer row counts."""
+    from pyspark.sql import types as T
+
+    wh = built_wh
+    sc = wh.spark.sparkContext
+    checks = {c.name: c for c in dq_corpus.all_checks()}
+    gold = ("dim_customer", "dim_contract", "dim_payment_method",
+            "dim_services", "dim_churn_reason", "fact_customer_churn")
+    cases = {
+        "dim_row_counts": ("table_name", [(t, "gold", t) for t in gold]),
+        "layer_row_summary": ("layer", [
+            ("Staging", "staging", "staging_churn"),
+            ("Bronze", "bronze", "churn_raw"),
+            ("Silver", "silver", "churn_raw"),
+            ("Gold Fact", "gold", "fact_customer_churn"),
+        ]),
+    }
+    for name, (label_col, tables) in cases.items():
+        sc.setLocalProperty("spark.jobGroup.id", name)
+        try:
+            df = checks[name].build(wh)
+            rows = [r.asDict() for r in df.collect()]
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(name) == [], name
+        assert rows == [
+            {label_col: label, "row_count": wh.read(layer, table).count()}
+            for label, layer, table in tables
+        ]
+        assert df.schema == T.StructType([
+            T.StructField(label_col, T.StringType(), False),
+            T.StructField("row_count", T.LongType(), False),
+        ])
+    layers = checks["unique_customers_per_layer"].build(wh)
+    assert layers.schema["gold_fact_rows"] == T.StructField(
+        "gold_fact_rows", T.LongType(), False
+    )
+    fact_rows = wh.read("gold", "fact_customer_churn").count()
+    assert layers.collect()[0]["gold_fact_rows"] == fact_rows

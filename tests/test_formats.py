@@ -4,10 +4,13 @@ delete, swap healing, and the file-format features
 
 from __future__ import annotations
 
+import glob
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+from teleco_etl_pipeline_spark import catalog
 from teleco_etl_pipeline_spark.catalog import Warehouse
 from teleco_etl_pipeline_spark.operators.upsert import delete_where, merge_upsert
 
@@ -22,11 +25,26 @@ def test_warehouse_routes_through_format(spark, tmp_path):
     assert wh.read("bronze", "t").count() == 5
 
 
-def test_warehouse_writes_return_rows_written(spark, tmp_path):
+def _data_files(path):
+    return sorted(glob.glob(os.path.join(path, "*.parquet")))
+
+
+def _jobs_in_group(spark, group, fn):
+    """``fn()``'s result and the Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_warehouse_writes_return_rows_written(spark, tmp_path, monkeypatch):
     """Each write returns the rows that call wrote, counted by its own
     job; the count must survive the z-order range sampler, whose job
     re-runs everything below the range exchange."""
-    wh = Warehouse(spark, str(tmp_path))
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     on_disk = lambda table: wh.read("gold", table).count()  # noqa: E731
 
     def ids(lo, hi):
@@ -41,9 +59,15 @@ def test_warehouse_writes_return_rows_written(spark, tmp_path):
     kept = wh.read("gold", "t").filter(F.col("v") != 0)
     assert wh.overwrite_safe(kept, "gold", "t") == 882 == on_disk("t")
 
+    # A file-backed frame and a small target: several files, so the
+    # range exchange samples.
+    src = str(tmp_path / "src")
+    ids(0, 1000).write.parquet(src)
+    monkeypatch.setattr(catalog, "TARGET_FILE_BYTES", 1024)
     zcols = [F.pmod(F.col("k"), F.lit(256)).cast("long"), F.col("v")]
-    assert wh.write_zordered(ids(0, 1000), "gold", "z", zcols, n_files=16) == 1000
+    assert wh.write_zordered(spark.read.parquet(src), "gold", "z", zcols) == 1000
     assert on_disk("z") == 1000
+    assert len(_data_files(wh.path("gold", "z"))) > 1
 
     assert wh.write(ids(0, 1000).limit(0), "gold", "empty") == 0 == on_disk("empty")
 
@@ -68,18 +92,69 @@ def test_warehouse_read_takes_the_footer_schema(spark, tmp_path):
     wh.write(frame(0, 100), "gold", "t")
     wh.write(frame(100, 120, wide=True), "gold", "t", mode="append")
     wh.overwrite_safe(frame(0, 50), "gold", "safe")
-    wh.write_zordered(frame(0, 100), "gold", "z", [F.pmod("k", F.lit(16))], n_files=4)
+    wh.write_zordered(frame(0, 100), "gold", "z", [F.pmod("k", F.lit(16))])
     wh.write(frame(0, 10).limit(0), "gold", "empty")
 
-    sc = spark.sparkContext
     for table in ("t", "safe", "z", "empty"):
-        sc.setLocalProperty("spark.jobGroup.id", f"read_{table}")
-        try:
-            got = wh.read("gold", table).schema
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        assert sc.statusTracker().getJobIdsForGroup(f"read_{table}") == [], table
+        got, jobs = _jobs_in_group(
+            spark, f"read_{table}", lambda: wh.read("gold", table).schema
+        )
+        assert jobs == [], table
         assert got == spark.read.parquet(wh.path("gold", table)).schema, table
+
+
+def test_warehouse_writes_one_zstd_file_per_small_table(spark, tmp_path):
+    """A table far under ``TARGET_FILE_BYTES`` is one data file, whatever
+    the partitioning of the frame that wrote it, and its column chunks
+    are zstd-compressed."""
+    src = str(tmp_path / "src")
+    spark.range(1000, numPartitions=8).select(
+        F.col("id").alias("k"), (F.col("id") % 7).alias("v")
+    ).write.parquet(src)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    raw = spark.read.parquet(src)
+    assert raw.rdd.getNumPartitions() > 1
+
+    wh.write(raw, "bronze", "t")
+    wh.overwrite_safe(wh.read("bronze", "t").filter(F.col("v") > 0), "bronze", "t")
+    wh.write(raw.repartition(8, "v"), "silver", "t")
+    wh.write_zordered(raw, "gold", "z", [F.pmod("k", F.lit(16))])
+    for layer in ("bronze", "silver", "gold"):
+        for table in os.listdir(os.path.join(wh.root, layer)):
+            files = _data_files(wh.path(layer, table))
+            assert len(files) == 1, (layer, table, files)
+            meta = pq.read_metadata(files[0])
+            assert meta.row_group(0).column(0).compression == "ZSTD"
+
+
+def test_warehouse_sizes_files_from_input_bytes_through_a_cache(
+    spark, tmp_path, monkeypatch
+):
+    """With a small target, a file-backed frame and a frame derived
+    from a ``.cache()``d one both write ``ceil(bytes / target)`` files.
+    ``DataFrame.inputFiles()`` finds no file behind the cache, so the
+    second write needs the analyzed plan; the sizing starts no job."""
+    src = str(tmp_path / "src")
+    spark.range(20_000, numPartitions=8).select(
+        F.col("id").alias("k"), F.sha2(F.col("id").cast("string"), 256).alias("s")
+    ).write.parquet(src)
+    nbytes = sum(os.path.getsize(f) for f in _data_files(src))
+    target = nbytes // 3 + 1
+    monkeypatch.setattr(catalog, "TARGET_FILE_BYTES", target)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+
+    raw = spark.read.parquet(src)
+    annotated = raw.withColumn("odd", F.col("k") % 2 == 1).cache()
+    derived = annotated.filter(F.col("k") >= 0)
+    assert derived.inputFiles() == []
+    got, jobs = _jobs_in_group(spark, "sizing", lambda: catalog._input_bytes(derived))
+    assert (got, jobs) == (nbytes, [])
+
+    assert wh.write(raw, "staging", "plain") == 20_000
+    assert wh.write(derived, "staging", "cached") == 20_000
+    annotated.unpersist()
+    for table in ("plain", "cached"):
+        assert len(_data_files(wh.path("staging", table))) == -(-nbytes // target) == 3
 
 
 def test_warehouse_read_infers_without_a_spark_footer(spark, tmp_path):
@@ -95,6 +170,30 @@ def test_warehouse_read_infers_without_a_spark_footer(spark, tmp_path):
     df = wh.read("bronze", "arrow")
     assert df.schema == spark.read.parquet(wh.path("bronze", "arrow")).schema
     assert sorted(r["k"] for r in df.collect()) == [1, 2, 3]
+
+
+def test_load_table_infers_a_path_once(spark, tmp_path):
+    """A second ``load_table`` of a pandas-written file starts no Spark
+    job and reads the schema Spark infers; a rewritten file is inferred
+    again."""
+    import pyarrow as pa
+
+    from teleco_etl_pipeline_spark.sources.tables import load_table
+
+    path = os.path.join(tmp_path, "orders.parquet")
+    pq.write_table(pa.table({"o_orderkey": [1, 2], "o_comment": ["a", None]}), path)
+    first = load_table(spark, str(tmp_path), "orders")
+    again, jobs = _jobs_in_group(
+        spark, "load_again", lambda: load_table(spark, str(tmp_path), "orders").schema
+    )
+    assert jobs == []
+    assert first.schema == again == spark.read.parquet(path).schema
+
+    pq.write_table(pa.table({"o_orderkey": [3], "o_total": [1.5]}), path)
+    os.utime(path, ns=(1, 1))
+    rewritten = load_table(spark, str(tmp_path), "orders")
+    assert rewritten.schema == spark.read.parquet(path).schema
+    assert rewritten.columns == ["o_orderkey", "o_total"]
 
 
 def test_parquet_delete_where_in_place(spark, tmp_path):

@@ -1614,26 +1614,33 @@ def test_zorder_repartition_tightens_rowgroup_stats(spark, tmp_path):
     assert len(ok) >= len(spans) - 2, spans
 
 
-def test_warehouse_write_zordered_clusters_table(spark, tmp_path):
+def test_warehouse_write_zordered_clusters_table(spark, tmp_path, monkeypatch):
     """Warehouse.write_zordered — the engine write path wired to the
     layout operator: the written layer table must (a) round-trip all
     rows, (b) have per-file min/max spans bounded on BOTH clustered
     dimensions (the row-group-pruning contract a single-column sort
-    cannot give), and (c) stay atomic (success marker present)."""
+    cannot give), and (c) stay atomic (success marker present). The
+    rows come from files and the target file size is 1/16 of them, so
+    the table has files whose spans can be checked."""
     import glob
     import os
 
     import pyarrow.parquet as pq
 
+    from teleco_etl_pipeline_spark import catalog
     from teleco_etl_pipeline_spark.catalog import Warehouse
 
-    wh = Warehouse(spark, str(tmp_path))
-    df = spark.range(0, 65536).select(
+    src = str(tmp_path / "src")
+    spark.range(0, 65536).select(
         (F.col("id") % 256).alias("x"),
         (F.col("id") / 256).cast("long").alias("y"),
         F.col("id").alias("v"),
-    )
-    wh.write_zordered(df, "gold", "zfact", [F.col("x"), F.col("y")], n_files=16)
+    ).write.parquet(src)
+    nbytes = sum(os.path.getsize(f) for f in glob.glob(src + "/*.parquet"))
+    monkeypatch.setattr(catalog, "TARGET_FILE_BYTES", nbytes // 16 + 1)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    df = spark.read.parquet(src)
+    wh.write_zordered(df, "gold", "zfact", [F.col("x"), F.col("y")])
     path = wh.path("gold", "zfact")
     back = wh.read("gold", "zfact")
     assert back.count() == 65536
@@ -1645,7 +1652,7 @@ def test_warehouse_write_zordered_clusters_table(spark, tmp_path):
             continue
         xs, ys = t.column("x").to_pylist(), t.column("y").to_pylist()
         spans.append((max(xs) - min(xs), max(ys) - min(ys)))
-    assert spans
+    assert len(spans) >= 2
     ok = [s for s in spans if s[0] <= 127 and s[1] <= 127]
     assert len(ok) >= len(spans) - 2, spans
     # the helper column must not leak into the table schema
