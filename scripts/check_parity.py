@@ -32,7 +32,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import numpy as np
 
-from teleco_etl_pipeline_spark.plans.registry import all_queries
 from teleco_etl_pipeline_spark.session import get_spark
 from teleco_etl_pipeline_spark.sources.tables import TABLE_NAMES
 
@@ -78,6 +77,11 @@ def main() -> int:
     parser.add_argument("query", nargs="*", help="check only these queries")
     args = parser.parse_args()
     json_out, sf_dir, only = args.json, args.sf_dir, set(args.query)
+    # Data-fitted and path-bound oracles bake this dir in when the
+    # registry is imported, so it must be the dir under check.
+    os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
+    from teleco_etl_pipeline_spark.plans.registry import all_queries
+
     records: dict[str, dict] = {}
     spark = get_spark(app_name="parity-check", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")

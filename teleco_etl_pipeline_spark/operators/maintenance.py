@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from teleco_etl_pipeline_spark.catalog import TARGET_FILE_BYTES, file_count
 from teleco_etl_pipeline_spark.operators.upsert import safe_overwrite
-from teleco_etl_pipeline_spark.plans.registry import query
+from teleco_etl_pipeline_spark.plans.registry import ORACLE_SF_DIR, query
 
 
 def table_bytes(spark: SparkSession, path: str) -> int:
@@ -376,12 +376,7 @@ _ZM_PX_LO, _ZM_PX_HI = 900.0, 1000.0
 
 
 def _zonemap_oracle_sql() -> str:
-    import os
-
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    path = os.path.join(sf_dir, "lineitem.parquet")
+    path = os.path.join(ORACLE_SF_DIR, "lineitem.parquet")
     return f"""
     WITH m AS (
       SELECT file_name, row_group_id AS row_group,

@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from teleco_etl_pipeline_spark.plans.registry import query
+from teleco_etl_pipeline_spark.plans.registry import ORACLE_SF_DIR, query
 from teleco_etl_pipeline_spark.sources.tables import load_table
 
 
@@ -1265,12 +1265,6 @@ def ivf_topk(
     )
 
 
-# The driver's correctness harness compares Spark vs oracle at
-# sf=0.01 only, so data-FITTED oracles (IVF centroids) are baked from
-# that vintage. Overridable for ad-hoc sweeps at another SF.
-_ORACLE_SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-
-
 def _ivf_fit_replica(
     sf_dir: str,
     n_centroids: int,
@@ -1310,7 +1304,7 @@ def _ivf_topk_oracle_sql(
     astronomically unlikely on random data."""
     try:
         ids, vecs, cents = _ivf_fit_replica(
-            _ORACLE_SF_DIR, n_centroids, seed, fit_sample, max_iter
+            ORACLE_SF_DIR, n_centroids, seed, fit_sample, max_iter
         )
     except Exception:  # noqa: BLE001 — no testdata ⇒ rows-only row
         return None
@@ -1477,7 +1471,7 @@ def _ivf_report_sql(
     IVF query; squared L2 to the assigned centroid recovers from the
     dist list as min + ‖v‖² (the dists drop the constant ‖v‖² term)."""
     try:
-        _, _, x = _replica_sample(_ORACLE_SF_DIR, fit_sample)
+        _, _, x = _replica_sample(ORACLE_SF_DIR, fit_sample)
     except Exception:  # noqa: BLE001 — no testdata ⇒ rows-only row
         return None
     cents = _lloyd_fit(x, n_centroids, seed, max_iter)
@@ -1730,7 +1724,7 @@ def _semdedup_oracle_sql(
     path, in DuckDB."""
     try:
         _, _, cents = _ivf_fit_replica(
-            _ORACLE_SF_DIR, n_clusters, seed, fit_sample, max_iter
+            ORACLE_SF_DIR, n_clusters, seed, fit_sample, max_iter
         )
     except Exception:  # noqa: BLE001 — no testdata ⇒ rows-only row
         return None
@@ -1979,7 +1973,7 @@ def _pq_topk_oracle_sql(
     stage so every intermediate is value-checked."""
     try:
         ids, vecs, cb = _pq_fit_replica(
-            _ORACLE_SF_DIR, m, k_cent, seed, fit_sample, max_iter
+            ORACLE_SF_DIR, m, k_cent, seed, fit_sample, max_iter
         )
     except Exception:  # noqa: BLE001 — no testdata ⇒ rows-only row
         return None
@@ -2273,7 +2267,7 @@ def _ivfpq_topk_oracle_sql(
     cut / the exact rerank all mirror the Spark plan stage for stage.
     Same accepted last-ulp fragility class as IVF/PQ/LSH."""
     try:
-        ids, vecs, x = _replica_sample(_ORACLE_SF_DIR, fit_sample)
+        ids, vecs, x = _replica_sample(ORACLE_SF_DIR, fit_sample)
     except Exception:  # noqa: BLE001 — no testdata ⇒ rows-only row
         return None
     cents, cb = _ivfpq_fit_core(x, n_centroids, m, k_cent, seed, max_iter)
@@ -3414,7 +3408,7 @@ def _pca_label_stats_oracle_sql() -> str | None:
     # each — bit-identical to the Spark plan, no AVG/VAR_SAMP float
     # accumulation, no ROUND.
     try:
-        _, _, x = _replica_sample(_ORACLE_SF_DIR, _PCA_FIT_SAMPLE)
+        _, _, x = _replica_sample(ORACLE_SF_DIR, _PCA_FIT_SAMPLE)
     except Exception:  # noqa: BLE001 — no testdata ⇒ rows-only row
         return None
     mu, comps, _ = _pca_fit_from_sample(x, _PCA_COMPONENTS)
@@ -4628,7 +4622,7 @@ def cluster_quality(
 def _cluster_quality_oracle_sql() -> str | None:
     try:
         _ids, _vecs, cents = _ivf_fit_replica(
-            _ORACLE_SF_DIR, _CQ_K, _CQ_SEED, _CQ_FIT_SAMPLE, _CQ_MAX_ITER
+            ORACLE_SF_DIR, _CQ_K, _CQ_SEED, _CQ_FIT_SAMPLE, _CQ_MAX_ITER
         )
     except Exception:  # noqa: BLE001 — no testdata ⇒ rows-only row
         return None

@@ -15,10 +15,16 @@ are projected as epoch integers or dates.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+# The data dir that fitted or path-bound oracles bake into their SQL at
+# import. The correctness harness checks sf=0.01 only; set the variable
+# before importing to check another SF.
+ORACLE_SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 
 @dataclass(frozen=True)

@@ -43,12 +43,9 @@ def md5_file(path: str, chunk: int = 8192) -> str:
     return h.hexdigest()
 
 
-def read_csv(spark: SparkSession, path: str, schema=None) -> DataFrame:
+def read_csv(spark: SparkSession, path: str) -> DataFrame:
     """Header-normalized CSV read (S2 + P1)."""
     reader = spark.read.option("header", True).option("mode", "PERMISSIVE")
-    if schema is not None:
-        df = reader.schema(schema).csv(path)
-        return df
     return normalize_columns(reader.csv(path))
 
 
@@ -65,26 +62,19 @@ def read_excel(spark: SparkSession, path: str) -> DataFrame:
     are small by contract (they carry manual fixes)."""
     import pandas as pd
 
-    pdf = pd.read_excel(path) if path.endswith((".xlsx", ".xls")) else pd.read_csv(path)
+    pdf = pd.read_excel(path)
     pdf.columns = [str(c) for c in pdf.columns]
     return normalize_columns(spark.createDataFrame(pdf.astype(str).where(pdf.notna())))
 
 
-def write_quarantine_report(bad: DataFrame, out_path: str, limit: int | None = None) -> int:
-    """Quarantine/reject side-channel export (S8): Excel/CSV with the
-    error_details column. Reports are bounded (reference truncates to
-    20 rows in email, full file on disk) — the toPandas here is on an
-    already-filtered small frame, never the main table."""
-    pdf = (bad.limit(limit) if limit else bad).toPandas()
+def write_quarantine_report(bad: DataFrame, out_path: str) -> int:
+    """Quarantine/reject side-channel export (S8): every rejected row
+    with its error_details column, as one CSV on disk. The toPandas
+    here is on an already-filtered small frame, never the main
+    table."""
+    pdf = bad.toPandas()
     os.makedirs(os.path.dirname(out_path), exist_ok=True)
-    if out_path.endswith((".xlsx", ".xls")):
-        try:
-            pdf.to_excel(out_path, index=False)
-        except (ImportError, ModuleNotFoundError):
-            out_path = out_path.rsplit(".", 1)[0] + ".csv"
-            pdf.to_csv(out_path, index=False)
-    else:
-        pdf.to_csv(out_path, index=False)
+    pdf.to_csv(out_path, index=False)
     return len(pdf)
 
 

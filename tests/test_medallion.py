@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 import re
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,10 +15,7 @@ from pyspark.sql import types as T
 from teleco_etl_pipeline_spark.catalog import _BUSINESS_FIELDS, SERVICE_COLS, Warehouse
 from teleco_etl_pipeline_spark.plans import medallion, quality
 from teleco_etl_pipeline_spark.plans.pipeline import run_warehouse
-from teleco_etl_pipeline_spark.plans.reprocess import (
-    reprocess_fixed_file,
-    watch_and_reprocess,
-)
+from teleco_etl_pipeline_spark.plans.reprocess import watch_and_reprocess
 from teleco_etl_pipeline_spark.sources.files import md5_file
 from teleco_etl_pipeline_spark.sources.state import FileRegistry
 from tests.conftest import CSV_HEADER, _row, write_ingest_csv
@@ -214,8 +212,8 @@ def test_reprocess_fixed_file(staged, tmp_path):
         f.write(_row("1000-CLEAN1", tenure="77", churn="Yes", churn_value="1") + "\n")
         f.write(_row("2003-BADGEN", gender="Martian") + "\n")  # still invalid
 
-    report = reprocess_fixed_file(
-        wh, fix_path, quarantine_dir=str(tmp_path / "q"), run_date="2026-08-14"
+    [report] = watch_and_reprocess(
+        wh, str(fixed_dir), quarantine_dir=str(tmp_path / "q"), run_date="2026-08-14"
     )
     assert report["status"] == "SUCCESS"
     assert (report["input"], report["rejected"], report["upserted"]) == (2, 1, 1)
@@ -231,12 +229,14 @@ def test_reprocess_fixed_file(staged, tmp_path):
     assert fact.filter(F.col("customer_key") == k).collect()[0]["tenure_months"] == 77
 
 
-def test_fix_survives_next_run(staged, tmp_path):
+def test_fix_survives_next_run(staged, tmp_path, monkeypatch):
     """The fix loop, driven through its file sensor: a correction to a
     loaded customer and to a rejected one reaches bronze, silver and
-    gold, and a next daily run over an unrelated file keeps it. Silver
-    stays the clean projection of bronze, one row per fact row and
-    dim_customer row."""
+    gold, and a next daily run over an unrelated file keeps it. A key
+    in two files keeps the later file's row, and the pass writes each
+    table once (the fact twice: the fixed rows' delete, then the
+    build). Silver stays the clean projection of bronze, one row per
+    fact row and dim_customer row."""
     spark, staging_dir, wh_root, _ = staged
     run_warehouse(spark, wh_root, staging_dir, run_date="2026-08-13")
     wh = Warehouse(spark, wh_root)
@@ -250,19 +250,43 @@ def test_fix_survives_next_run(staged, tmp_path):
     _write_csv(  # still outside the contract domain: rejected whole
         fixed_dir / "churn_98_rejected.csv", [_row("2003-BADGEN", contract="Three year")]
     )
-    reports = watch_and_reprocess(
-        wh, str(fixed_dir), quarantine_dir=str(tmp_path / "q"), run_date="2026-08-14"
-    )
+    _write_csv(fixed_dir / "churn_99_fixed_2.csv", [_row("1000-CLEAN1", tenure="88")])
+    writes = []
+
+    def recorded(write):
+        def call(self, df, layer, table, *args, **kwargs):
+            writes.append((layer, table))
+            return write(self, df, layer, table, *args, **kwargs)
+
+        return call
+
+    with monkeypatch.context() as m:
+        for name in ("write", "overwrite_safe", "write_zordered"):
+            m.setattr(Warehouse, name, recorded(getattr(Warehouse, name)))
+        reports = watch_and_reprocess(
+            wh, str(fixed_dir), quarantine_dir=str(tmp_path / "q"), run_date="2026-08-14"
+        )
     assert [(r["file"], r["status"], r.get("upserted")) for r in reports] == [
         ("churn_98_rejected.csv", "ALL_REJECTED", None),
         ("churn_99_fixed.csv", "SUCCESS", 2),
+        ("churn_99_fixed_2.csv", "SUCCESS", 1),
     ]
-    [archived] = os.listdir(fixed_dir / "archive")
-    assert re.fullmatch(r"churn_99_fixed_archived_\d{8}_\d{6}\.csv", archived)
+    dims = ("dim_contract", "dim_payment_method", "dim_churn_reason", "dim_customer",
+            "dim_services")
+    assert Counter(writes) == {
+        ("bronze", "churn_raw"): 1,
+        ("silver", "churn_raw"): 1,
+        ("gold", "fact_customer_churn"): 2,
+        **{("gold", dim): 1 for dim in dims},
+    }
+    archived = sorted(os.listdir(fixed_dir / "archive"))
+    assert [re.sub(r"\d{8}_\d{6}", "TS", a) for a in archived] == [
+        "churn_99_fixed_2_archived_TS.csv", "churn_99_fixed_archived_TS.csv"
+    ]
     assert sorted(os.listdir(fixed_dir)) == ["archive", "churn_98_rejected.csv"]
 
     def assert_fix_everywhere(n):
-        fixed = {"1000-CLEAN1": 77, "2000-NEGTEN": 5}
+        fixed = {"1000-CLEAN1": 88, "2000-NEGTEN": 5}
         bronze = wh.read("bronze", "churn_raw")
         silver = wh.read("silver", "churn_raw")
         dim_c = wh.read("gold", "dim_customer")
