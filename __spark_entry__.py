@@ -8,18 +8,23 @@ order-insensitive value-hash → CORRECTNESS_r{N}.json).
 The actual query catalog lives in
 ``teleco_etl_pipeline_spark/plans/registry.py`` (populated by
 ``plans/relational.py`` and ``operators/{dedup,similarity,text}.py``);
-this module only adapts it to the driver's interface.
+this module adapts it to the driver's interface, ordering it by the
+committed CORRECTNESS_r*.json history.
 """
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
 
 from teleco_etl_pipeline_spark.plans.registry import all_queries  # noqa: E402
 
@@ -30,359 +35,36 @@ def entry(spark: SparkSession) -> DataFrame:
     return qs["pricing_summary"].build(spark, "/root/testdata/sf0.001")
 
 
-# The driver records a bounded number of correctness entries per
-# round (observed: exactly the first 50 of queries() order), so
-# registration order decides which queries get driver-recorded
-# evidence. _RECORD_ORDER is the explicit 50-slot recording window,
-# rotated every round toward the weakest current evidence.
-#
-# Round-14 rotation (r13 verdict ask #10): slots 1-14 are the
-# fourteen r8-vintage leftovers promised as _R8_LEFT_FOR_R14 in the
-# r13 window comment (four of them — kcore, triangle, bfs, hits —
-# also had their plans touched this round). Slots 15-40 are every
-# query whose EXECUTED PLAN changed in the r14 optimization round
-# (driver twins: clustering/rich-club; broadcast-gated joins:
-# assortativity/pagerank/ppr/lpa/linkpred/hits; codegen pair
-# enumeration: every co-fulfillment/part graph query; UDF
-# de-duplication: the ivf/ivfpq family; checkpoint fixes:
-# demand_xyz/basket_lift/pareto/funnel/mad/cusum/pettitt; typed
-# driver union-find: neardup ×2) so their driver rows post-date
-# their plans. Slots 41-42 are the two r13 plan changes whose rows
-# still predate their plans (winsorize, qq). Slots 43-50 drain the
-# oldest never-driver-recorded r13 registrations alphabetic-head
-# (jarque_bera … mmr_rerank); the remaining never-recorded r13/r14
-# vintages head _RECORD_LAST for the r15 window.
-_RECORD_ORDER = [
-    "priority_revenue_trend",
-    "priority_status_mutual_info",
-    "priority_view_refresh",
-    "revenue_orders_ccf",
-    "revenue_seasonal_decompose",
-    "revenue_theilsen_trend",
-    "split_token_jsd",
-    "supplier_kcore_peel",
-    "supplier_triangle_count",
-    "token_skipgram_counts",
-    "trade_graph_bfs_levels",
-    "trade_graph_hits",
-    "user_survival_curve",
-    "winnowing_fingerprint_pairs",
-    "supplier_clustering_coefficient",
-    "part_rich_club",
-    "trade_graph_assortativity",
-    "trade_graph_pagerank",
-    "trade_graph_ppr",
-    "part_lpa_communities",
-    "part_ktruss_peel",
-    "part_link_prediction",
-    "part_link_prediction_ra",
-    "part_link_prediction_fixed2",
-    "neardup_clusters",
-    "neardup_keep_best",
-    "embedding_ivf_topk",
-    "embedding_ivf_topk_stored",
-    "embedding_ivfpq_topk",
-    "embedding_semantic_dedup",
-    "ivf_balance_report",
-    "corpus_semantic_prune",
-    "embedding_cluster_quality",
-    "part_demand_xyz",
-    "part_basket_lift",
-    "customer_pareto_abc",
-    "events_funnel",
-    "events_daily_anomaly_mad",
-    "orders_cusum_shift",
-    "daily_revenue_pettitt",
-    "price_winsorize_report",
-    "qq_priority_totalprice",
-    "orders_jarque_bera",
-    "priority_bartlett_test",
-    "priority_cochran_armitage",
-    "customer_grubbs_acctbal",
-    "doc_bm25_topk",
-    "embedding_jl_recall",
-    "lineitem_mahalanobis_outliers",
-    "embedding_mmr_rerank",
-]
-# Past-window ordering if the driver ever widens its window: stalest
-# driver evidence first (the r14-priority leftovers above, then
-# r9/r10/r11/r12 vintages, freshest last). EXHAUSTIVE over every
-# oracle-backed registered query, so the undocumented tier-1 slot
-# between _RECORD_ORDER and _RECORD_LAST is structurally empty
-# (asserted in queries()). True sketches without oracles sort last
-# (tier 3).
-_RECORD_LAST = [
-    "events_variant_logrank",
-    "daily_revenue_periodogram",
-    "monthly_peak_gumbel",
-    "score_brier_decomposition",
-    "embedding_covariance_drift",
-    "variant_qini_curve",
-    "fd_violation_report",
-    "variant_sprt_trace",
-    "embedding_margin_pairs",
-    "events_markov_perplexity",
-    "order_line_reconciliation",
-    "asof_last_purchase",
-    "banded_price_join",
-    "bpe_pair_counts",
-    "contamination_winnowing",
-    "corpus_curation",
-    "cumulative_spend",
-    "customer_distribution",
-    "disjunctive_revenue",
-    "doc_balanced_mix",
-    "doc_chunking",
-    "doc_length_band_filter",
-    "doc_pack_windows",
-    "doc_pii_redaction",
-    "doc_repetition_stats",
-    "doc_split_assign",
-    "doc_stratified_sample",
-    "doc_wordshape_filter",
-    "embedding_centroid_drift",
-    "embedding_topk",
-    "expr_key_join",
-    "grouping_sets_summary",
-    "heavy_part_shippers",
-    "idle_rich_customers",
-    "large_volume_customers",
-    "lineitem_spearman_matrix",
-    "market_share",
-    "nation_balance_share",
-    "nation_volume_shipping",
-    "ngram_jaccard_guarded",
-    "order_gap_stats",
-    "priority_exists_counts",
-    "priority_set_ops",
-    "promo_revenue_pct",
-    "quantile_profile",
-    "scrub_cast",
-    "small_quantity_revenue",
-    "sole_return_suppliers",
-    "star_join",
-    "supplier_class_counts",
-    "topk_orders",
-    "train_test_contamination",
-    "upsert_merge",
-    "anti_join",
-    "bpe_encode_stored",
-    "brand_size_rank_ties",
-    "conditional_counts",
-    "correlated_scalar",
-    "customer_linkage_blocked",
-    "delete_then_insert",
-    "doc_unigram_logprob",
-    "embedding_knn_classify_fixed4",
-    "embedding_lsh_multiprobe_fixed6",
-    "embedding_lsh_pairs_fixed6",
-    "embedding_neardup",
-    "events_locf_daily",
-    "events_sessionize",
-    "events_transition_matrix",
-    "events_tumbling_hourly",
-    "exact_dedup",
-    "heavy_hitter_tokens",
-    "incremental_index_dedup",
-    "latest_per_key",
-    "linestatus_priority_matrix",
-    "minhash_lsh_pairs",
-    "multimodal_audio_decimate",
-    "multimodal_frame_sample",
-    "multimodal_resize_exec",
-    "multimodal_video_probe",
-    "nullsafe_join",
-    "simhash_neardup",
-    "surrogate_keys",
-    "tfidf_top_terms",
-    "top_ngrams",
-    "top_supplier_revenue",
-    "watermark_window",
-    "window_dup_flag",
-    "corpus_zipf_slope",
-    "customer_linkage_sorted_neighborhood",
-    "doc_bigram_logprob",
-    "doc_fingerprint",
-    "doc_lang_id",
-    "doc_langid_confusion",
-    "doc_oov_rate",
-    "doc_quality_score",
-    "doc_regex_tokens",
-    "doc_token_budget_mix",
-    "doc_token_stats",
-    "doc_weighted_sample",
-    "dup_finder",
-    "embedding_knn_classify",
-    "embedding_knn_classify_total",
-    "embedding_lsh_multiprobe",
-    "embedding_lsh_pairs",
-    "embedding_recall_eval",
-    "error_rate",
-    "events_attribution_first_last",
-    "events_cohort_ltv",
-    "events_hopping_counts",
-    "events_json_props",
-    "events_ohlc_hourly",
-    "events_rolling_7d",
-    "events_seq_examples",
-    "initcap_norm",
-    "local_supplier_volume",
-    "md5_checksum",
-    "min_cost_supplier",
-    "minmax_profile",
-    "multimodal_features",
-    "multimodal_resize_plan",
-    "ngram_containment_pairs",
-    "ngram_jaccard_pairs",
-    "orders_hbos_outliers",
-    "pivot_status_matrix",
-    "product_profit",
-    "returned_item_report",
-    "rollup_summary",
-    "salted_join_agg",
-    "semi_join",
-    "shipping_priority",
-    "tenure_months_calc",
-    "token_jaccard_prefix_pairs",
-    "token_jaccard_prefix_pairs_uncapped",
-    "totalprice_psi_drift",
-    "acctbal_quantile_normalize",
-    "balance_deciles",
-    "bloom_pruned_join",
-    "conditional_projection",
-    "contamination_ngram_overlap",
-    "count_distinct",
-    "customer_spend_percentile",
-    "distinct_values",
-    "doc_char_entropy",
-    "doc_frequent_ngram_scrub",
-    "doc_sparse_tfidf_topk",
-    "doc_temperature_mix",
-    "doc_textrank_keywords",
-    "embedding_batch_topk",
-    "embedding_hard_negatives",
-    "embedding_knn_classify_total_fixed8",
-    "embedding_matryoshka_recall",
-    "embedding_pca_label_stats",
-    "embedding_sq8_topk",
-    "events_active_users_7d",
-    "events_arrival_dispersion",
-    "events_burst_report",
-    "events_cuped_readout",
-    "events_daily_anomaly",
-    "events_decay_score",
-    "events_key_skew_report",
-    "events_markov_stationary",
-    "events_powerlaw_tail_fit",
-    "events_trailing_hour_count",
-    "events_type_quantiles",
-    "events_type_weekday_chi2",
-    "events_variant_shred",
-    "grouped_counts",
-    "lineitem_zonemap_report",
-    "mannwhitney_priority",
-    "model_lift_gains",
-    "orders_calendar_gap_report",
-    "priority_target_encoding",
-    "score_calibration_bins",
-    "supplier_fulfillment_concurrency",
-    "topk_per_group",
-    "union_summary",
-    "unpivot_metrics",
-    "zorder_layout_report",
-    "embedding_query_range_search_bucketed",
-    "orders_kruskal_wallis",
-    "daily_revenue_mann_kendall",
-    "cvm_priority_totalprice",
-    "orders_jonckheere_terpstra",
-    "orders_welch_ttest",
-    "orders_anova_f",
-    "ad_priority_totalprice",
-    "daily_revenue_durbin_watson",
-    "daily_revenue_ljung_box",
-    "doc_perplexity_buckets",
-    "lineitem_kendall_tau",
-    "orders_mood_median",
-    "priority_brownforsythe",
-    "daily_revenue_runs_test",
-    "events_variant_ztest",
-    "doc_gopher_rules",
-    "doc_dsir_importance",
-    "embedding_query_range_search",
-    "segment_theil_spend",
-    "customer_rfm_segments",
-    "segment_gini_spend",
-    "ks_priority_totalprice",
-    "part_price_skyline",
-    "asof_nearest_purchase",
-    "benford_first_digit",
-    "cube_summary",
-    "doc_hybrid_rrf",
-    "embedding_pq_topk",
-    "events_cohort_retention",
-    "events_user_streaks",
-    "forecast_revenue",
-    "lineitem_corr_matrix",
-    "priority_woe_iv",
-    "scd2_user_value",
-    "value_histogram",
-    "ams_join_size_estimate",
-    "bpe_encode_docs",
-    "bpe_learn_merges",
-    "cms_frequency_estimates",
-    "collocation_pmi_topk",
-    "daily_revenue_acf",
-    "doc_novelty_scores",
-    "embedding_kcenter_coreset",
-    "event_sequence_patterns",
-    "fk_integrity_report",
-    "funnel_latency_quantiles",
-    "histogram_quantile_sketch",
-    "hll_sketch_estimate",
-    "kmv_set_cardinality",
-    "lineitem_pruned_window",
-    "minhash_recall_eval",
-    "ml_inference_contract",
-    "orders_column_profile",
-    "orders_snapshot_diff",
-    "poisson_bootstrap_ci",
-    "pricing_summary",
-    "priority_moments_profile",
-]
+def driver_vintages() -> dict[str, int]:
+    """name -> newest round with a green three-way driver row, from
+    the CORRECTNESS_r*.json files beside this module (none: {})."""
+    vintage: dict[str, int] = {}
+    for f in glob.glob(os.path.join(_HERE, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
+        with open(f) as fh:
+            rows = json.load(fh)
+        for name, row in rows.items():
+            ok = (
+                row.get("rows_match")
+                and row.get("schema_match")
+                # rows-only sketches record hash_match: null
+                and row.get("hash_match") in (True, None)
+            )
+            if ok:
+                vintage[name] = max(vintage.get(name, 0), rnd)
+    return vintage
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2, ordered
-    so the strongest not-yet-proven evidence records first (see the
-    _RECORD_ORDER comment above)."""
-    qs = all_queries()
-    missing = [n for n in _RECORD_ORDER if n not in qs]
-    assert not missing, f"_RECORD_ORDER names unknown queries: {missing}"
-    stale = [n for n in _RECORD_LAST if n not in qs]
-    assert not stale, f"_RECORD_LAST names unknown queries: {stale}"
-    # Tier 1 must be structurally EMPTY (r10 ADVICE: an oracle-backed
-    # query in neither list silently sorts ahead of every
-    # _RECORD_LAST entry, contradicting the documented ordering):
-    # every oracle-backed registration is in exactly one list.
-    unlisted = [
-        n
-        for n, q in qs.items()
-        if q.oracle is not None
-        and n not in _RECORD_ORDER
-        and n not in _RECORD_LAST
-    ]
-    assert not unlisted, f"oracle-backed queries in neither list: {unlisted}"
-
-    def tier(q) -> tuple[int, int]:
-        if q.name in _RECORD_ORDER:
-            return (0, _RECORD_ORDER.index(q.name))
-        if q.oracle is None:
-            return (3, 0)
-        if q.name in _RECORD_LAST:
-            return (2, _RECORD_LAST.index(q.name))
-        return (1, 0)
-
-    ordered = sorted(qs.values(), key=tier)
+    """Every registered query, ordered stalest driver evidence first:
+    oracle-backed queries by newest green driver round (never = 0),
+    ties in registration order, rows-only sketches last."""
+    # The driver records only the first 50 of this order each round.
+    vintage = driver_vintages()
+    ordered = sorted(
+        all_queries().values(),
+        key=lambda q: (q.oracle is None, vintage.get(q.name, 0)),
+    )
     return {q.name: q.build for q in ordered}
 
 

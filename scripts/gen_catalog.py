@@ -10,35 +10,13 @@ Usage: python scripts/gen_catalog.py > CATALOG.md
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from __spark_entry__ import driver_vintages
 from teleco_etl_pipeline_spark.plans.registry import all_queries
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def driver_vintages() -> dict[str, int]:
-    """name -> newest round with a green three-way driver row, from
-    the committed CORRECTNESS_r*.json history."""
-    vintage: dict[str, int] = {}
-    for f in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
-        for name, row in json.load(open(f)).items():
-            ok = (
-                row.get("rows_match")
-                and row.get("schema_match")
-                # rows-only sketches record hash_match: null
-                and row.get("hash_match") in (True, None)
-            )
-            if ok:
-                vintage[name] = max(vintage.get(name, 0), rnd)
-    return vintage
 
 
 def main() -> None:
@@ -115,9 +93,9 @@ def main() -> None:
         f"oracle-backed: {len(never)}"
         + (" — " + ", ".join(f"`{n}`" for n in never)
            if never and len(never) <= 25 else "")
-        + "). The stalest vintages plus every never-recorded entry "
-        "are the next round's `_RECORD_ORDER` rotation targets "
-        "(`__spark_entry__.py`)."
+        + "). `__spark_entry__.queries()` lists the never-recorded "
+        "entries first and then the stalest vintages, so the driver "
+        "records those next."
     )
     print()
     print("| Query | Check | Driver row | Module | What it does |")

@@ -1,20 +1,13 @@
 """SERIAL-equivalent surrogate key generation (SURVEY.md §1.2, §7.3).
 
 Postgres SERIAL assigns dense keys by insertion order; Spark has no
-native equivalent. Two strategies:
-
-- ``add_surrogate_key``: dense, deterministic — ``row_number()`` over
-  an explicit canonical ordering, plus an offset of the current max
-  key for incremental loads. Uses a single-partition window, which is
-  ONLY safe for small outputs (dim tables — distinct values of a few
-  string columns — are small by construction at any SF). This is the
-  reference-parity path (dim/fact keys, gold DDL SERIAL columns,
-  dags/SQL/Gold/DDL_gold.sql:5-67).
-
-- ``add_distributed_key``: non-dense but globally unique and fully
-  parallel — ``monotonically_increasing_id`` (partition id ≪ 33 |
-  per-partition counter). Use for big tables where density doesn't
-  matter (e.g., quarantine row ids at 100 TB).
+native equivalent. ``add_surrogate_key`` gives dense, deterministic
+keys — ``row_number()`` over an explicit canonical ordering, plus an
+offset of the current max key for incremental loads. It uses a
+single-partition window, which is ONLY safe for small outputs (dim
+tables — distinct values of a few string columns — are small by
+construction at any SF). This is the reference-parity path (dim/fact
+keys, gold DDL SERIAL columns, dags/SQL/Gold/DDL_gold.sql:5-67).
 """
 
 from __future__ import annotations
@@ -40,8 +33,3 @@ def add_surrogate_key(
     return df.withColumn(
         key_col, (F.row_number().over(w) + F.lit(start_at - 1)).cast("long")
     )
-
-
-def add_distributed_key(df: DataFrame, key_col: str) -> DataFrame:
-    """Globally-unique, non-dense, shuffle-free keys for big tables."""
-    return df.withColumn(key_col, F.monotonically_increasing_id())

@@ -41,6 +41,14 @@ def zorder_key(cols: list[Column], bits: int = 8) -> Column:
     the quantization. Disjoint bit positions ⇒ the OR is a plain sum,
     which Catalyst folds into codegen arithmetic."""
     n = len(cols)
+    if bits * n > 63:
+        # JVM shiftleft wraps the shift amount mod 64 — positions ≥64
+        # would silently alias onto low bits and scramble the Morton
+        # order (layout "succeeds" but prunes nothing).
+        raise ValueError(
+            f"bits({bits}) * len(cols)({n}) must be <= 63 to fit "
+            "one long z-value; lower bits or split the key set"
+        )
     terms = [
         F.shiftleft(F.shiftright(c.cast("long"), i).bitwiseAND(F.lit(1)), i * n + j)
         for i in range(bits)

@@ -28,6 +28,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from teleco_etl_pipeline_spark.catalog import TARGET_FILE_BYTES, file_count
+from teleco_etl_pipeline_spark.operators.layout import zorder_repartition
 from teleco_etl_pipeline_spark.operators.upsert import safe_overwrite
 from teleco_etl_pipeline_spark.plans.registry import ORACLE_SF_DIR, query
 
@@ -106,25 +107,16 @@ def zorder_by(
     which is why single-key sorting can't serve two filter columns.
 
     Each key is first mapped to a ``bits``-bit equal-width bucket
-    between its table min/max (scalar subqueries — plan-time, no
-    driver job), then the bucket bits are interleaved into one long
-    z-value used for range partitioning + in-partition sort. Pure
-    column expressions (shift/or), whole-stage codegen'd, one range
-    shuffle — the same cost as ``cluster_by``. Equal-width bucketing
-    assumes roughly uniform keys; heavily skewed keys should be
+    between its table min/max, then ``layout.zorder_repartition``
+    interleaves the buckets and range-partitions + sorts on the key —
+    the layout ``Warehouse.write_zordered`` writes. One range shuffle,
+    the same cost as ``cluster_by``. Equal-width bucketing assumes
+    roughly uniform keys; heavily skewed keys should be
     pre-transformed (e.g. log) or the skewed dimension left to
     partition pruning instead.
     """
     from pyspark.sql import functions as F
 
-    if bits * len(keys) > 63:
-        # JVM shiftleft wraps the shift amount mod 64 — positions ≥64
-        # would silently alias onto low bits and scramble the Morton
-        # order (layout "succeeds" but prunes nothing).
-        raise ValueError(
-            f"bits({bits}) * len(keys)({len(keys)}) must be <= 63 to fit "
-            "one long z-value; lower bits or split the key set"
-        )
     nbytes = table_bytes(spark, path)
     n_files = max(min_files, file_count(nbytes, target_file_bytes))
     df = spark.read.parquet(path)
@@ -145,20 +137,7 @@ def zorder_by(
                 F.floor(frac * n_buckets).cast("long"), F.lit(n_buckets - 1)
             )
         )
-    z = F.lit(0).cast("long")
-    for bit in range(bits):
-        for dim, b in enumerate(bucket_cols):
-            pos = bit * len(bucket_cols) + dim
-            z = z.bitwiseOR(
-                F.shiftleft(F.shiftright(b, bit).bitwiseAND(F.lit(1)), pos)
-            )
-    clustered = (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_files, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-    )
-    safe_overwrite(clustered, path)
+    safe_overwrite(zorder_repartition(df, bucket_cols, n_files, bits), path)
     return n_files
 
 

@@ -1,7 +1,5 @@
 """Similarity search over embedding columns (array<float>).
 
-- ``cosine_similarity_col``: exact cosine as a Catalyst fold
-  (zip_with + aggregate) in double precision — JVM-side, no UDF.
 - ``brute_force_topk``: exact top-k vs a query vector. O(N·d) scan +
   TakeOrderedAndProject — the correctness baseline, and genuinely the
   right plan for one-off queries even at scale (single pass, no
@@ -50,28 +48,6 @@ def _dot(a: Column, b: Column) -> Column:
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
-def cosine_similarity_col(a: Column, b: Column) -> Column:
-    """Float cosine similarity between two array columns, in double.
-
-    Utility for ad-hoc similarity math. NOT for hashed/ranked/
-    thresholded catalog outputs — those must use the quantized-exact
-    key (``quantized_vec_col``/``quantized_key`` below), whose value
-    is bit-identical across engines and builds; this float fold is
-    sequential-deterministic per engine but its last ulp differs from
-    other implementations of "cosine"."""
-    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 # ---------------------------------------------------------------------------

@@ -173,16 +173,16 @@ def bronze_upsert(wh: Warehouse) -> dict[str, int]:
             F.col("record_type")
         ),
     )
-    stats_row = merged.groupBy("_merge_action").count().collect()
-    stats = {r["_merge_action"]: r["count"] for r in stats_row}
     merged = merged.drop("_merge_action")
     quality.assert_checks_pass(merged)
-    wh.overwrite_safe(merged, "bronze", "churn_raw")
-    return {
-        "inserted": stats.get("new", 0),
-        "updated": stats.get("updated", 0),
-        "existing": stats.get("existing", 0),
-    }
+    # The gate proved the merged keys unique and non-null, so each
+    # staged row updated one bronze row or was inserted, and the
+    # counts follow from the table sizes: written = before + inserted.
+    before = wh.row_count("bronze", "churn_raw")
+    staged = wh.row_count("staging", "staging_churn")
+    inserted = wh.overwrite_safe(merged, "bronze", "churn_raw") - before
+    updated = staged - inserted
+    return {"inserted": inserted, "updated": updated, "existing": before - updated}
 
 
 # ---------------------------------------------------------------------------
@@ -239,7 +239,8 @@ def _idempotent_dim(
     match_cols: list[str],
 ) -> int:
     """DISTINCT + NOT EXISTS + dense surrogate keys continuing from
-    the current max (A8 + J7 + SERIAL semantics). The anti-join on
+    the current max (A8 + J7 + SERIAL semantics); keys are dense
+    1..n, so the current max is the dim's row count. The anti-join on
     ``match_cols`` is null-safe (J4), so a NULL-valued row forms its
     own dim row once; new keys follow ``match_cols`` order. Returns
     the dim's row count."""
@@ -247,7 +248,7 @@ def _idempotent_dim(
     max_key = 0
     existing = wh.read("gold", table) if wh.exists("gold", table) else None
     if existing is not None:
-        max_key = existing.agg(F.max(key_col)).collect()[0][0] or 0
+        max_key = wh.row_count("gold", table)
         fresh = fresh.alias("__n").join(
             existing.alias("__e"), null_safe_eq("__n", "__e", match_cols), "left_anti"
         )

@@ -3,7 +3,10 @@
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
+import shutil
+import sys
 
 from tests.conftest import load_entry
 
@@ -80,17 +83,81 @@ def test_session_jvm_runs_raised_c2_thresholds(spark):
     assert all(a.startswith("-X") for a in args)
 
 
-def test_record_window_is_exact_and_disjoint():
-    """The 50-slot recording window must stay exactly 50 (the driver
-    records the first 50 of queries() order), disjoint from the
-    past-window list, with no typo'd names in either."""
+def _entry_beside(tmp_path, monkeypatch, history):
+    """`__spark_entry__` copied into tmp_path next to the given
+    {file name: rows} CORRECTNESS history, loaded from there."""
+    repo = os.path.dirname(os.path.dirname(__file__))
+    shutil.copy(os.path.join(repo, "__spark_entry__.py"), tmp_path)
+    for fname, rows in history.items():
+        (tmp_path / fname).write_text(json.dumps(rows))
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    spec = importlib.util.spec_from_file_location(
+        "__spark_entry__", tmp_path / "__spark_entry__.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_record_order_computed_from_history(tmp_path, monkeypatch):
+    """queries() puts never-recorded oracle-backed queries first, then
+    the oldest newest-green round, ties in registration order, and the
+    rows-only sketches last, sorted the same way; a red row is no
+    evidence."""
+    from teleco_etl_pipeline_spark.plans.registry import all_queries
+
+    reg = all_queries()
+    ob = [n for n, q in reg.items() if q.oracle is not None]
+    rows_only = [n for n, q in reg.items() if q.oracle is None]
+    green = {"rows_match": True, "schema_match": True, "hash_match": True}
+    red = dict(green, hash_match=False)
+    sketch = dict(green, hash_match=None)
+    mod = _entry_beside(
+        tmp_path,
+        monkeypatch,
+        {
+            "CORRECTNESS_r3.json": {
+                ob[0]: green,
+                ob[5]: green,
+                ob[7]: green,
+                ob[9]: red,
+                rows_only[0]: sketch,
+            },
+            "CORRECTNESS_r10.json": {ob[5]: green, ob[2]: green},
+        },
+    )
+    assert mod.driver_vintages() == {
+        ob[0]: 3,
+        ob[7]: 3,
+        ob[5]: 10,
+        ob[2]: 10,
+        rows_only[0]: 3,
+    }
+    recorded = {ob[0], ob[2], ob[5], ob[7]}
+    expected = (
+        [n for n in ob if n not in recorded]
+        + [ob[0], ob[7], ob[2], ob[5]]
+        + rows_only[1:]
+        + rows_only[:1]
+    )
+    order = mod.queries()
+    assert list(order) == expected
+    assert all(order[n] is reg[n].build for n in reg)
+
+
+def test_record_window_leads_with_stalest_committed_evidence():
+    """On the committed history, the 50 queries the driver records
+    first exclude every query green in the newest round and include
+    every oracle-backed query never recorded green."""
     from teleco_etl_pipeline_spark.plans.registry import all_queries
 
     mod = load_entry()
-    order, last = mod._RECORD_ORDER, mod._RECORD_LAST
-    reg = set(all_queries())
-    assert len(order) == 50 and len(set(order)) == 50
-    assert not set(order) & set(last)
-    assert set(order) <= reg and set(last) <= reg
-    # queries() must lead with exactly the window
-    assert list(mod.queries())[:50] == order
+    vintage = mod.driver_vintages()
+    newest = {n for n, r in vintage.items() if r == max(vintage.values())}
+    never = {
+        n for n, q in all_queries().items() if q.oracle is not None and n not in vintage
+    }
+    window = set(list(mod.queries())[:50])
+    assert newest
+    assert not window & newest
+    assert never <= window
